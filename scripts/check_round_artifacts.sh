@@ -16,15 +16,25 @@ path = sys.argv[1]
 total = None
 for line in open(path):
     line = line.strip()
-    if line.startswith('{') and '"metric":"total"' in line and '"queries"' in line:
-        total = json.loads(line)
+    if not line.startswith('{'):
+        continue
+    try:
+        obj = json.loads(line)
+    except ValueError:
+        continue
+    # key order and spacing are free; the total line carries per-query times
+    if isinstance(obj, dict) and obj.get("metric") == "total" and "queries" in obj:
+        total = obj
 if total is None:
     print(f"ARTIFACT RED: {path} has no parseable total line", file=sys.stderr)
     sys.exit(1)
 n, failed, val = total["n_queries"], total["n_failed"], total["value"]
 assert n >= 1 and val > 0, f"implausible totals in {path}: n={n} value={val}"
+if failed:
+    print(f"ARTIFACT RED: {path} n_failed={failed} n_queries={n} total={val}s",
+          file=sys.stderr)
+    sys.exit(1)
 print(f"ARTIFACT OK: {path} n_queries={n} n_failed={failed} total={val}s")
-sys.exit(1 if failed else 0)
 EOF
 done
 exit $rc

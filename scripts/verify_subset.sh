@@ -27,6 +27,8 @@ env SPARK_LOCAL_IP=127.0.0.1 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-4}" \
   java $ADD_OPENS -Xmx8g \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$CLASSES:/opt/spark/jars/*" \
-  graft.Verify "$SF_DIR" "$OUT" "$ONLY" 2>/dev/null
+  graft.Verify "$SF_DIR" "$OUT" "$ONLY" 2>/dev/null || rc=$?
 
-python3 scripts/check.py "$SF_DIR" "$OUT"
+# Verify exits non-zero when a query threw; still compare what it dumped
+python3 scripts/check.py "$SF_DIR" "$OUT" || rc=$?
+exit "${rc:-0}"

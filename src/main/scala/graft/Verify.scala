@@ -72,5 +72,7 @@ object Verify {
     println(s"[verify] dumped ok=$nOk failed=$nFail " +
       s"oracle_entries=${SparkEntry.oracleSql.count(e => keep(e._1))} -> $outDir")
     spark.stop()
+    // a partial dump is a failed run for anything that checks the status
+    if (nFail > 0) sys.exit(1)
   }
 }

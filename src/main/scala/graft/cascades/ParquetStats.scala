@@ -52,9 +52,23 @@ object ParquetStats {
     * (HDFS/S3 paths resolve to their scheme's FS at a real deployment;
     * `FileSystem.getLocal` was the r8 portability bug — VERDICT r8
     * "what's wrong" #2).
+    *
+    * Memoized process-wide in the [[graft.ops.Tables]] cache: keyed by
+    * the qualified path and valid while the fingerprint of its data
+    * files (sorted name, length, modification time) is unchanged — a
+    * rewritten table is read again on the next call, an unchanged one
+    * costs a file listing and no footer read.
     */
-  def footerStats(path: String): FooterStats = {
-    val conf = new Configuration()
+  def footerStats(path: String): FooterStats =
+    graft.ops.Tables.footer(path, hadoopConf)(readFooters(path, hadoopConf))
+
+  /** Default Hadoop configuration, built once and only read: building one
+    * parses the default resources, which would otherwise dominate a
+    * cached [[fromDir]].
+    */
+  private lazy val hadoopConf = new Configuration()
+
+  private def readFooters(path: String, conf: Configuration): FooterStats = {
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
     val files: Seq[Path] = {
@@ -142,7 +156,9 @@ object ParquetStats {
     * GLOBALLY UNIQUE across the tables (the TPC-H prefix convention the
     * whole unqualified-column stats lookup rests on) — a collision would
     * silently let the last table's range win and misprice filters, so it
-    * fails loudly instead (ADVICE r8).
+    * fails loudly instead (ADVICE r8). Each table's footers come from
+    * the memoized [[footerStats]], so a repeat call over unchanged files
+    * reads no footer; the duplicate check runs on every call.
     */
   def fromDir(dir: String, tables: Seq[String]): TableStats = {
     val entries = tables.map(t => t -> footerStats(s"$dir/$t.parquet"))

@@ -316,13 +316,36 @@ object SqlFrontend {
       Col(call.outName))
   }
 
-  private def tokenize(sql: String): Vector[String] =
-    sql.replace("<=", " §le ").replace(">=", " §ge ")
-      .replace(",", " , ").replace("=", " = ")
-      .replace("<", " < ").replace(">", " > ")
-      .replace("(", " ( ").replace(")", " ) ")
-      .replace("§le", "<=").replace("§ge", ">=")
-      .split("\\s+").iterator.filter(_.nonEmpty).toVector
+  /** Split `sql` into tokens: `( ) , = < > <= >=` stand alone, a
+    * single-quoted literal is ONE token with its quotes (spaces and
+    * punctuation inside it included, `'MIDDLE EAST'`), and anything else
+    * runs to the next whitespace or punctuation.
+    */
+  private def tokenize(sql: String): Vector[String] = {
+    val toks = Vector.newBuilder[String]
+    def isPunct(c: Char) = "(),=<>'".indexOf(c) >= 0
+    var i = 0
+    while (i < sql.length) {
+      val c = sql(i)
+      val end =
+        if (c.isWhitespace) i + 1
+        else if (c == '\'') {
+          val close = sql.indexOf('\'', i + 1)
+          require(close > 0, s"unterminated string literal at offset $i")
+          close + 1
+        } else if ((c == '<' || c == '>') && sql.startsWith("=", i + 1)) i + 2
+        else if (isPunct(c)) i + 1
+        else {
+          var j = i + 1
+          while (j < sql.length && !sql(j).isWhitespace && !isPunct(sql(j)))
+            j += 1
+          j
+        }
+      if (!c.isWhitespace) toks += sql.substring(i, end)
+      i = end
+    }
+    toks.result()
+  }
 
   /** Hand-rolled LL(1) cursor — four token kinds (keyword, identifier,
     * integer, punctuation) are all this grammar needs; errors carry the

@@ -389,13 +389,15 @@ object DedupOps {
     while (!converged) {
       val nbrMin = edges.join(labels, col("dst") === col("id"))
         .groupBy(col("src")).agg(min(col("lab")).as("nlab"))
-      // r11 (driver-loop floor cut, VERDICT r10 #5): prop is PERSISTED,
-      // not checkpointed — the jump's single materialization job below
-      // computes it once and caches it (the r10 2x-slower measurement was
-      // the UNCACHED double-execute; identical-subtree ReusedExchange is
-      // unreliable across AQE stage planning). One lineage-cut job per
-      // step instead of two; the cache is dropped as soon as labels is
-      // materialized, so no storage accumulates across rounds.
+      // Two lineage cuts per step. prop is cut here because the pointer
+      // jump below reads it twice (a self-join): uncut, both sides would
+      // recompute the propagation join, and identical-subtree
+      // ReusedExchange is unreliable across AQE stage planning. labels
+      // is cut after the jump. Each cut is one eager materialization job
+      // (`cutLineage`: localCheckpoint, or checkpoint when
+      // `spark.graft.checkpointDir` is set). Nothing is persisted or
+      // unpersisted by hand: old steps' checkpoint blocks are left to
+      // Spark's context cleaner.
       val prop = labels
         .join(nbrMin, col("id") === col("src"), "left")
         .select(col("id"),

@@ -842,4 +842,23 @@ class CascadesExecSpec extends GraftSuite {
         "SELECT lang FROM documents GROUP BY lang HAVING count ( * ) > 1")
     }
   }
+
+  test("footer stats are memoized: fromDir gives equal TableStats cold " +
+      "and warm, and a warm footerStats reads nothing") {
+    val tables = Seq("region", "nation", "customer", "supplier", "part",
+      "orders", "lineitem", "documents", "embeddings")
+    // a private copy: its paths are new to the process-wide cache
+    val cold = java.nio.file.Files.createTempDirectory("graft-stats")
+    tables.foreach(t => java.nio.file.Files.copy(
+      java.nio.file.Paths.get(s"$d/$t.parquet"), cold.resolve(s"$t.parquet")))
+    val first = ParquetStats.fromDir(cold.toString, tables)
+    val again = ParquetStats.fromDir(cold.toString, tables)
+    assert(first == again)
+    assert(first == ParquetStats.fromDir(d, tables))
+    val p = s"$cold/orders.parquet"
+    assert(ParquetStats.footerStats(p) eq ParquetStats.footerStats(p))
+    // the duplicate-column check still runs on a warm call
+    intercept[IllegalArgumentException](
+      ParquetStats.fromDir(cold.toString, Seq("orders", "orders")))
+  }
 }

@@ -187,6 +187,21 @@ class SqlFrontendSpec extends GraftSuite {
           Seq(PlanNode(LogicalScan("t1")))))))
   }
 
+  test("parser: a quoted literal with spaces and punctuation is one token") {
+    def filtered(cond: Expr) =
+      PlanNode(LogicalProject(Seq(Col("r_name"))),
+        Seq(PlanNode(LogicalFilter(cond, Nil),
+          Seq(PlanNode(LogicalScan("region"))))))
+    assert(SqlFrontend.parse(
+      "SELECT r_name FROM region WHERE r_name = 'MIDDLE EAST'") ==
+      filtered(CmpCond("=", Col("r_name"), StrLit("MIDDLE EAST"))))
+    assert(SqlFrontend.parse(
+      "SELECT r_name FROM region WHERE r_name<'a (b, c) = <d> >= e'") ==
+      filtered(CmpCond("<", Col("r_name"), StrLit("a (b, c) = <d> >= e"))))
+    intercept[IllegalArgumentException](
+      SqlFrontend.parse("SELECT r_name FROM region WHERE r_name = 'MIDDLE"))
+  }
+
   test("ORDER BY lowers to a required sort PROPERTY, the cascades search " +
       "satisfies it with the enforcer, and top-k plans a PhysicalTopK") {
     val (plan, req) =
