@@ -1,12 +1,13 @@
 #!/usr/bin/env bash
-# Builder-side fast correctness iteration: run graft.Verify on a subset of
-# queries (comma-separated names in $1) against sf0.01, then mirror the
-# driver's DuckDB compare with scripts/check.py.
-# Usage: scripts/verify_subset.sh q1,q2[,...] [sfDir]
+# Fast correctness iteration: run graft.Verify on a subset of queries
+# (comma-separated names in $1; a name ending in `*` selects every query
+# with that prefix, e.g. 'cascades_exec_*') against sf0.01, then run the
+# DuckDB compare of scripts/check.py.
+# Usage: scripts/verify_subset.sh 'q1,q2[,prefix*,...]' [sfDir] [outDir]
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-ONLY="${1:?comma-separated query names}"
+ONLY="${1:?comma-separated query names or prefixes ending in *}"
 SF_DIR="${2:-/root/testdata/sf0.01}"
 OUT="${3:-/tmp/verify_subset}"
 rm -rf "$OUT"

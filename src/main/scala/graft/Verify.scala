@@ -5,17 +5,17 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // optional 3rd arg: comma-separated query names — builder-side fast
-    // iteration on a subset (the driver always passes exactly two args,
-    // so the full contract dump is unchanged)
+    // optional 3rd arg: comma-separated query names, each either exact
+    // or a prefix ending in `*` (`cascades_exec_*`) — fast iteration on a
+    // subset (the two-argument call dumps every query, as always)
     val (sfDir, outDir, only) = args match {
       case Array(s, o)    => (s, o, None)
-      case Array(s, o, f) => (s, o, Some(f.split(',').toSet))
+      case Array(s, o, f) => (s, o, Some(f.split(',').toSeq))
       case _ =>
-        System.err.println("usage: Verify <sfDir> <outDir> [q1,q2,...]")
+        System.err.println("usage: Verify <sfDir> <outDir> [q1,prefix*,...]")
         sys.exit(2)
     }
-    def keep(name: String): Boolean = only.forall(_.contains(name))
+    def keep(name: String): Boolean = only.forall(_.exists(selects(_, name)))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -75,4 +75,11 @@ object Verify {
     // a partial dump is a failed run for anything that checks the status
     if (nFail > 0) sys.exit(1)
   }
+
+  /** Whether a subset entry names `query`: exactly, or as a prefix when
+    * it ends in `*`.
+    */
+  private[graft] def selects(entry: String, query: String): Boolean =
+    if (entry.endsWith("*")) query.startsWith(entry.dropRight(1))
+    else entry == query
 }

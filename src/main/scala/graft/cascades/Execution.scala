@@ -1,24 +1,37 @@
 package graft.cascades
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Literal, SortOrder}
+import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, LeftAnti, LeftOuter, LeftSemi}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, JoinHint, Limit, LogicalPlan, Project, Repartition, RepartitionByExpression, Sort, UnresolvedHint}
 import org.apache.spark.sql.functions._
+
+import graft.functions.ColumnBridge
 
 /** Execute a MiniCascades WINNER end to end — the `to_df_physical` analog
   * (`datafusion-dolomite-integration/src/planner.rs:29-55` hands the
   * cascades-chosen physical plan to the host engine;
   * `conversion/physical.rs:23-117` lowers each physical operator to a
-  * DataFusion ExecutionPlan). Here the host engine is Spark: each
-  * [[PhysicalOp]] lowers to the DataFrame operator whose Catalyst physical
-  * plan realizes exactly the winner's choice — join STRATEGY included
+  * DataFusion ExecutionPlan). Here the host engine is Spark: the winner
+  * lowers in ONE pass to one unresolved Catalyst `LogicalPlan` — each
+  * [[PhysicalOp]] becomes the logical operator whose Catalyst physical
+  * plan realizes exactly the winner's choice, join STRATEGY included
   * (broadcast/shuffle-hash/merge via join hints, which Catalyst honors
   * over its own size estimates), so the executed SparkPlan provably
-  * carries the cascades decision, not Catalyst's default. This closes the
-  * one lifecycle edge the reference demonstrates that the plan-only
-  * cascades module did not: winners EXECUTE, and the CORRECTNESS gate
-  * checks their rows against DuckDB ([[graft.ops.CascadesExecOps]]).
+  * carries the cascades decision, not Catalyst's default. The leaves are
+  * the catalog DataFrames' analysed plans; the whole tree is analysed
+  * ONCE when it is wrapped in a DataFrame (a chain of DataFrame calls
+  * would re-analyse the growing plan after every operator). The operators
+  * and expressions are the ones the DataFrame API builds for the same
+  * calls — expressions go through the session's own column converter —
+  * so the executed plan is the one those DataFrame calls would give.
+  * This closes the one lifecycle edge the reference demonstrates
+  * that the plan-only cascades module did not: winners EXECUTE, and the
+  * CORRECTNESS gate checks their rows against DuckDB
+  * ([[graft.ops.CascadesExecOps]]).
   *
   * Aggregation: a winner's Final/Exchange/Partial pyramid (the SplitAgg
-  * plan) collapses to ONE `groupBy().agg()` — Spark's HashAggregateExec
+  * plan) collapses to ONE `Aggregate` — Spark's HashAggregateExec
   * planning *is* the partial/final split (partial_aggregation always on),
   * so the single declarative aggregate executes precisely the split
   * winner: Partial on raw placement, exchange of partial states, Final
@@ -32,69 +45,109 @@ object Execution {
 
   /** Lower a winner plan to a DataFrame. `catalog` resolves base tables;
     * join/aggregate column names must be unambiguous across both sides
-    * (the TPC-H-prefixed testdata schemas are).
+    * (the TPC-H-prefixed testdata schemas are). The DataFrame belongs to
+    * the session of the leaves (the first one read, when they differ).
     */
-  def lower(plan: PlanNode, catalog: String => DataFrame): DataFrame =
-    plan match {
+  def lower(plan: PlanNode, catalog: String => DataFrame): DataFrame = {
+    val l = new Lowering(catalog)
+    val logical = l.lower(plan)
+    ColumnBridge.dataFrame(l.session, logical)
+  }
+
+  /** One lowering pass. Leaves are read before the operators above them
+    * convert their expressions, so [[session]] is set by then.
+    */
+  private final class Lowering(catalog: String => DataFrame) {
+    var session: SparkSession = _
+
+    private def expr(c: Column) = ColumnBridge.convert(session, c)
+    private def named(c: Column) = ColumnBridge.named(expr(c))
+
+    def lower(plan: PlanNode): LogicalPlan = plan match {
       // SplitAgg winner: Final over (exchange over) Partial — one
       // declarative aggregate (see scaladoc above)
       case PlanNode(PhysicalHashAggregate(AggMode.Final, g, aggs),
           Seq(PlanNode(PhysicalExchange(_),
             Seq(PlanNode(PhysicalHashAggregate(AggMode.Partial, _, _),
               Seq(child)))))) =>
-        aggregate(lower(child, catalog), g, aggs)
+        aggregate(lower(child), g, aggs)
       case PlanNode(PhysicalHashAggregate(AggMode.Final, g, aggs),
           Seq(PlanNode(PhysicalHashAggregate(AggMode.Partial, _, _),
             Seq(child)))) =>
-        aggregate(lower(child, catalog), g, aggs)
+        aggregate(lower(child), g, aggs)
       case PlanNode(op, inputs) =>
-        val kids = inputs.map(lower(_, catalog))
+        val kids = inputs.map(lower)
         op match {
           case PhysicalTableScan(t, limit, _, _) =>
-            limit.foldLeft(catalog(t))(_ limit _)
+            val df = catalog(t)
+            if (session == null) session = df.sparkSession
+            limit.foldLeft(df.queryExecution.analyzed)(
+              (p, n) => Limit(Literal(n), p))
           case PhysicalFilter(pred, projected) =>
-            val f = kids.head.filter(predicate(pred))
+            val f = Filter(expr(predicate(pred)), kids.head)
             if (projected.isEmpty) f
-            else f.select(projected.map(c => col(c.name)): _*)
+            else Project(projected.map(c => named(col(c.name))), f)
           case PhysicalProject(exprs) =>
-            kids.head.select(exprs.map(exprToColumn): _*)
+            Project(exprs.map(e => named(exprToColumn(e))), kids.head)
           case PhysicalHashJoin(jt, cond) =>
             // SHUFFLE_HASH pins ShuffledHashJoinExec (build side = right,
             // the winner's convention) over Catalyst's own strategy pick
-            kids(0).join(kids(1).hint("SHUFFLE_HASH"),
-              joinCond(cond), joinTypeStr(jt))
+            join(kids(0), UnresolvedHint("SHUFFLE_HASH", Nil, kids(1)),
+              jt, cond)
           case PhysicalBroadcastHashJoin(jt, cond) =>
-            kids(0).join(broadcast(kids(1)), joinCond(cond), joinTypeStr(jt))
+            // the hint `functions.broadcast` puts on a DataFrame
+            join(kids(0), UnresolvedHint("broadcast", Nil, kids(1)), jt, cond)
           case PhysicalSortMergeJoin(jt, cond) =>
-            kids(0).join(kids(1).hint("MERGE"),
-              joinCond(cond), joinTypeStr(jt))
+            join(kids(0), UnresolvedHint("MERGE", Nil, kids(1)), jt, cond)
           case PhysicalHashAggregate(_, g, aggs) =>
             aggregate(kids.head, g, aggs)
           case PhysicalTopK(n, keys) =>
-            // orderBy+limit => Spark's TakeOrderedAndProjectExec, the
+            // sort+limit => Spark's TakeOrderedAndProjectExec, the
             // PhysicalTopK counterpart (no global sort)
-            kids.head.orderBy(keys.map(sortColumn): _*).limit(n)
+            Limit(Literal(n), sort(keys, kids.head))
           case PhysicalSort(keys) =>
-            kids.head.orderBy(keys.map(sortColumn): _*)
+            sort(keys, kids.head)
           case PhysicalExchange(keys) =>
-            if (keys.isEmpty) kids.head.repartition(1)
-            else kids.head.repartition(keys.map(c => col(c.name)): _*)
+            if (keys.isEmpty) Repartition(1, shuffle = true, kids.head)
+            else RepartitionByExpression(keys.map(c => expr(col(c.name))),
+              kids.head, None, None)
           case other =>
             throw new IllegalArgumentException(
               s"not a lowerable physical operator: $other")
         }
     }
 
-  private def joinTypeStr(jt: JoinType): String = jt match {
-    case JoinType.Inner => "inner"
-    case JoinType.Left  => "left_outer"
-    case JoinType.Full  => "full_outer"
-    case JoinType.Semi  => "left_semi"
-    case JoinType.Anti  => "left_anti"
-  }
+    private def join(left: LogicalPlan, right: LogicalPlan, jt: JoinType,
+        cond: EqCond): LogicalPlan = {
+      val sparkType = jt match {
+        case JoinType.Inner => Inner
+        case JoinType.Left  => LeftOuter
+        case JoinType.Full  => FullOuter
+        case JoinType.Semi  => LeftSemi
+        case JoinType.Anti  => LeftAnti
+      }
+      Join(left, right, sparkType,
+        Some(expr(col(cond.left.name) === col(cond.right.name))),
+        JoinHint.NONE)
+    }
 
-  private def joinCond(cond: EqCond): Column =
-    col(cond.left.name) === col(cond.right.name)
+    /** A global sort; each key converts to the exact `SortOrder` its
+      * [[sortColumn]] spells (the converter, not the deferred
+      * `ExpressionUtils` wrapper, which is no `SortOrder`).
+      */
+    private def sort(keys: Seq[SortKey], child: LogicalPlan): LogicalPlan =
+      Sort(keys.map(k => expr(sortColumn(k)).asInstanceOf[SortOrder]),
+        global = true, child)
+
+    /** Grouping columns first, then the named aggregate calls — the
+      * output `groupBy(...).agg(...)` gives.
+      */
+    private def aggregate(child: LogicalPlan, g: Seq[Col],
+        aggs: Seq[AggCall]): LogicalPlan = {
+      val keys = g.map(c => named(col(c.name)))
+      Aggregate(keys, keys ++ aggs.map(a => named(aggColumn(a))), child)
+    }
+  }
 
   /** A [[SortKey]]'s exact Spark sort column — direction AND null
     * placement explicit, never the dialect default (Spark and DuckDB
@@ -162,12 +215,5 @@ object Execution {
         .as(a.outName)
     case other =>
       throw new IllegalArgumentException(s"unsupported aggregate: $other")
-  }
-
-  private def aggregate(df: DataFrame, g: Seq[Col],
-      aggs: Seq[AggCall]): DataFrame = {
-    val cols = aggs.map(aggColumn)
-    if (g.isEmpty) df.agg(cols.head, cols.tail: _*)
-    else df.groupBy(g.map(c => col(c.name)): _*).agg(cols.head, cols.tail: _*)
   }
 }

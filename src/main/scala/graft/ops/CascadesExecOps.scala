@@ -78,8 +78,16 @@ object CascadesExecOps {
       columns = schemaCat)
     val winner = opt.optimize(logical, required).getOrElse(
       sys.error(s"cascades found no winner for: $sql"))
+    val base = tableCatalog(s, d)
+    val catalog: String => DataFrame =
+      name => catalogOverride.getOrElse(name, base(name))
+    (winner, Execution.lower(winner, catalog))
+  }
+
+  /** The testdata tables at `d` by name, each call a fresh read. */
+  def tableCatalog(s: SparkSession, d: String): String => DataFrame = {
     val t = Tables(s, d)
-    val base: String => DataFrame = {
+    name => name match {
       case "region" => t.region;     case "nation" => t.nation
       case "customer" => t.customer; case "supplier" => t.supplier
       case "part" => t.part;         case "orders" => t.orders
@@ -87,9 +95,6 @@ object CascadesExecOps {
       case "embeddings" => t.embeddings
       case other => sys.error(s"unknown table $other")
     }
-    val catalog: String => DataFrame =
-      name => catalogOverride.getOrElse(name, base(name))
-    (winner, Execution.lower(winner, catalog))
   }
 
   /** Write `src` (at scale dir `d`) as an 8-bucket table sorted within

@@ -5,10 +5,12 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 import graft.cascades.ParquetStats.FooterStats
+import graft.functions.ColumnBridge
 
 /** Loaders for the driver-generated parquet tables (see TESTDATA.md).
   *
@@ -22,10 +24,11 @@ import graft.cascades.ParquetStats.FooterStats
   *
   * Each table's schema is resolved once per process, not once per read:
   * the first read infers it (one Spark job over the footers), later reads
-  * pass it to `spark.read.schema(...)` and launch no job. The cache lives
-  * in the companion object (see there for keying and invalidation), so the
-  * many short-lived `Tables(spark, dir)` instances share it. Every read
-  * still builds a fresh relation with fresh attribute IDs, so self-joins
+  * pass it to `spark.read.schema(...)` and launch no job. Its relation is
+  * resolved once per session: later reads in the session reuse it. The
+  * cache lives in the companion object (see there for keying and
+  * invalidation), so the many short-lived `Tables(spark, dir)` instances
+  * share it. Every read still carries fresh attribute IDs, so self-joins
   * through `df("col")` resolve as they always did.
   */
 final class Tables(spark: SparkSession, dir: String) {
@@ -183,9 +186,16 @@ object Tables {
   // one entry per distinct path and needs no size bound or conf. The
   // fingerprint is taken BEFORE the data it guards is read, so a write
   // racing the read can at worst file new data under the old
-  // fingerprint, which the next lookup sees as a mismatch. Entries hold
-  // plain values only — never a SparkSession, DataFrame or relation —
-  // so sessions with their own confs (`newSession()`) share it safely.
+  // fingerprint, which the next lookup sees as a mismatch. Schemas and
+  // footer statistics are plain values that every session shares. The
+  // one session-bound value is the RESOLVED RELATION (file index
+  // included) of the session that last read the path: ONE slot per
+  // entry, replaced when another session or other schema-inference conf
+  // values read the path, so the cache holds at most one relation — and
+  // one SparkSession reference — per distinct path. A relation is never
+  // handed out as is: every read wraps `newInstance()` of it, with fresh
+  // attribute IDs (Spark's session catalog likewise caches the resolved
+  // relations of catalog tables per session).
 
   /** Sorted (path relative to the table root, bytes, modification time)
     * of a table's data files.
@@ -197,10 +207,18 @@ object Tables {
       (files.iterator.map(_._2).sum, math.max(1L, files.size.toLong))
   }
 
+  /** `session`'s relation over the entry's files, resolved under the
+    * schema-inference conf values `confs`.
+    */
+  private final case class Resolved(session: SparkSession,
+      confs: Seq[Option[String]], relation: LogicalRelation)
+
   private final class Entry(val fingerprint: Fingerprint) {
     /** Inferred schema per schema-inference conf values. */
     val schemas = new ConcurrentHashMap[Seq[Option[String]], StructType]()
     @volatile var footer: Option[FooterStats] = None
+    /** The relation of the session that last read the path. */
+    @volatile var resolved: Option[Resolved] = None
   }
 
   private val cache = new ConcurrentHashMap[String, Entry]()
@@ -258,23 +276,38 @@ object Tables {
 
   /** A fresh parquet read of `path` and the path's (bytes, files) size.
     * Schema inference runs only on the first read of the path's current
-    * files under the session's inference confs; later reads pass the
-    * cached schema. A missing path goes straight to `spark.read.parquet`,
-    * which reports it with Spark's usual error.
+    * files under the session's inference confs; relation resolution
+    * (path check, file index) only on a session's first read of them. A
+    * later read in the same session is a new instance of the resolved
+    * relation: fresh attribute IDs, no file-system work beyond the
+    * fingerprint listing and no second analysis. A missing path goes
+    * straight to `spark.read.parquet`, which reports it with Spark's
+    * usual error.
     */
   private[graft] def read(spark: SparkSession,
       path: String): (DataFrame, (Long, Long)) =
     listing(path, spark.sparkContext.hadoopConfiguration) match {
       case None => (spark.read.parquet(path), (0L, 1L))
       case Some((key, fp)) =>
-        val schemas = entry(key, fp).schemas
+        val e = entry(key, fp)
         val confs = inferenceConfs.map(spark.conf.getOption)
-        val df = Option(schemas.get(confs)) match {
-          case Some(schema) => spark.read.schema(schema).parquet(path)
-          case None =>
-            val inferred = spark.read.parquet(path)
-            schemas.putIfAbsent(confs, inferred.schema)
-            inferred
+        val df = e.resolved match {
+          case Some(r) if (r.session eq spark) && r.confs == confs =>
+            ColumnBridge.analysedDataFrame(spark, r.relation.newInstance())
+          case _ =>
+            val df = Option(e.schemas.get(confs)) match {
+              case Some(schema) => spark.read.schema(schema).parquet(path)
+              case None =>
+                val inferred = spark.read.parquet(path)
+                e.schemas.putIfAbsent(confs, inferred.schema)
+                inferred
+            }
+            df.queryExecution.analyzed match {
+              case lr: LogicalRelation =>
+                e.resolved = Some(Resolved(spark, confs, lr))
+              case _ =>
+            }
+            df
         }
         (df, fp.size)
     }

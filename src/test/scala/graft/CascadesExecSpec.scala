@@ -861,4 +861,53 @@ class CascadesExecSpec extends GraftSuite {
     intercept[IllegalArgumentException](
       ParquetStats.fromDir(cold.toString, Seq("orders", "orders")))
   }
+
+  test("lowering a multi-join winner launches no Spark job, and lowering " +
+      "it twice gives disjoint attribute IDs") {
+    val (winner, _) =
+      CascadesExecOps.planFor(spark, d, "cascades_exec_three_way")
+    def joins(p: PlanNode): Int = (p.op match {
+      case _: PhysicalHashJoin | _: PhysicalBroadcastHashJoin |
+          _: PhysicalSortMergeJoin => 1
+      case _ => 0
+    }) + p.inputs.map(joins).sum
+    assert(joins(winner) >= 2, winner.explain())
+    val catalog = CascadesExecOps.tableCatalog(spark, d)
+    var lowered: Seq[org.apache.spark.sql.DataFrame] = Nil
+    val jobs = jobsDuring {
+      lowered = Seq(Execution.lower(winner, catalog),
+        Execution.lower(winner, catalog))
+    }
+    assert(jobs == 0, s"lowering launched $jobs job(s)")
+    val Seq(a, b) = lowered
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collectLeaves()
+        .flatMap(_.output.map(_.exprId)).toSet
+    assert(ids(a).nonEmpty && ids(a).intersect(ids(b)).isEmpty)
+    // one relation per table, shared by both lowerings
+    def relations(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collectLeaves().collect {
+        case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+          l.relation
+      }
+    relations(a).zip(relations(b)).foreach { case (x, y) => assert(x eq y) }
+    assert(a.count() == b.count())
+  }
+
+  test("injected planner strategy: scanTable still finds the table names " +
+      "through reused relations") {
+    import org.apache.spark.sql.functions.col
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    s2.conf.set(graft.rules.GraftCascadesStrategy.DirKey, d)
+    val t = graft.ops.Tables(s2, d)
+    val (c1, n1) = (t.customer, t.nation)
+    val (c2, n2) = (t.customer, t.nation)
+    assert((relationOf(c2) eq relationOf(c1)) &&
+      (relationOf(n2) eq relationOf(n1)))
+    val plan = executedPlan(
+      c2.join(n2, col("c_nationkey") === col("n_nationkey"))
+        .select(col("c_name"), col("n_name")))
+    assert(plan.contains("BroadcastHashJoin"), plan)
+  }
 }

@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs — one JVM-wide SparkContext; suites that
@@ -34,4 +38,39 @@ object SparkTestBase {
 abstract class GraftSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark
   def sfDir: String = SparkTestBase.sfDir
+
+  /** Spark jobs started while `body` runs. The listener bus is
+    * asynchronous, so a marker job runs last and the count is read once
+    * the marker's start has been delivered (the bus keeps order).
+    */
+  protected def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val marker = s"jobs-marker-${java.util.UUID.randomUUID}"
+    val jobs = new AtomicInteger
+    @volatile var markerSeen = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.job.description") == marker))
+          markerSeen = true
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(markerSeen, "marker job never reached the listener")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The file relation a plain table read scans. */
+  protected def relationOf(df: DataFrame): HadoopFsRelation =
+    df.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r
+    }.getOrElse(fail(s"no file relation in\n${df.queryExecution.analyzed}"))
 }

@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 
@@ -11,8 +9,9 @@ import graft.cascades.ParquetStats
 import graft.ops.Tables
 
 /** Pins the process-wide table cache (schema and footer statistics
-  * resolved once per path, invalidated by the data files' fingerprint)
-  * and the r11 [[Tables.rebalanced]] contract (VERDICT r10 items 1-2 of
+  * resolved once per path, the relation once per session and path, all
+  * invalidated by the data files' fingerprint) and the r11
+  * [[Tables.rebalanced]] contract (VERDICT r10 items 1-2 of
   * "What's wrong"): directory-aware sizing, byte-capped partition count,
   * and IDENTITY on inputs whose file layout already fills the cores (the
   * production shape — a 100 TB table is a many-file directory; the r10
@@ -71,35 +70,6 @@ class TablesSpec extends GraftSuite {
     assert(t.rebalanced("multi", df, Seq("id")) eq df)
   }
 
-  /** Spark jobs started while `body` runs. The listener bus is
-    * asynchronous, so a marker job runs last and the count is read once
-    * the marker's start has been delivered (the bus keeps order).
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val marker = s"jobs-marker-${java.util.UUID.randomUUID}"
-    val jobs = new AtomicInteger
-    @volatile var markerSeen = false
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(
-            _.getProperty("spark.job.description") == marker))
-          markerSeen = true
-        else jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(markerSeen, "marker job never reached the listener")
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
-
   /** A private copy of the sf tables, so the cache starts cold for it. */
   private def copyOf(tables: String*): String = {
     val dir = tmp()
@@ -122,9 +92,11 @@ class TablesSpec extends GraftSuite {
       spark.read.parquet(s"$d/orders.parquet").schema)
   }
 
-  test("cache: every read is a fresh relation — self-joins stay correct") {
+  test("cache: reads share the session's relation, not its IDs — " +
+      "self-joins stay correct") {
     val t = Tables(spark, sfDir)
     val (a, b) = (t.orders, t.orders)
+    assert(relationOf(a) eq relationOf(b))
     val ids = (df: org.apache.spark.sql.DataFrame) =>
       df.queryExecution.analyzed.output.map(_.exprId).toSet
     assert(ids(a).intersect(ids(b)).isEmpty)
@@ -156,6 +128,48 @@ class TablesSpec extends GraftSuite {
     assert(stats.tableRows("region") == 25L)
     assert(stats.ranges.get("z").contains((0L, 48L)))
     assert(!stats.ranges.contains("x"))
+  }
+
+  test("relation slot: a newSession() read gets a relation bound to " +
+      "that session") {
+    val d = copyOf("nation")
+    val first = relationOf(Tables(spark, d).nation)
+    assert(first.sparkSession eq spark)
+    val s2 = spark.newSession()
+    val r2 = relationOf(Tables(s2, d).nation)
+    assert(r2.sparkSession eq s2)
+    assert(relationOf(Tables(s2, d).nation) eq r2)
+  }
+
+  test("relation slot: an overwrite in place after a cached relation " +
+      "yields a fresh relation and the new rows") {
+    val d = tmp()
+    val path = s"$d/region.parquet"
+    spark.range(10).select(col("id").as("x"))
+      .write.mode("overwrite").parquet(path)
+    val before = relationOf(Tables(spark, d).region)
+    assert(relationOf(Tables(spark, d).region) eq before)
+    spark.range(25).select(col("id").as("x"))
+      .coalesce(1).write.mode("overwrite").parquet(path)
+    val after = Tables(spark, d).region
+    assert(!(relationOf(after) eq before))
+    assert(after.count() == 25L)
+    assert(after.agg(max(col("x"))).head().getLong(0) == 24L)
+  }
+
+  test("relation slot: a second session replaces the slot — one relation " +
+      "per path") {
+    val d = copyOf("region")
+    val s2 = spark.newSession()
+    val r1 = relationOf(Tables(spark, d).region)
+    val r2 = relationOf(Tables(s2, d).region)
+    assert(!(r2 eq r1))
+    // the slot now holds only the second session's relation, so the
+    // first session resolves its own again on its next read
+    val r3 = relationOf(Tables(spark, d).region)
+    assert(!(r3 eq r1) && (r3.sparkSession eq spark))
+    assert(!(relationOf(Tables(s2, d).region) eq r2))
+    assert(Tables(spark, d).region.count() == 5L)
   }
 
   test("dataSize of a missing path is (0, 1); the read reports it") {
