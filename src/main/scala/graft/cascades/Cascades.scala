@@ -16,7 +16,7 @@ import scala.collection.mutable
   *  - branch-and-bound upper-bound pruning during input optimization
   *    (`task.rs:315,418-421,464-466`);
   *
-  * and goes one step beyond the reference in three places it stubbed:
+  * and goes one step beyond the reference in two places it stubbed:
   *
   *  - ENFORCERS: the reference's `append_enforcers` returns an empty vec
   *    (`properties/physical.rs:16-24`, consumed at `task.rs:431-462`);
@@ -28,18 +28,16 @@ import scala.collection.mutable
   *    ([[StatsModel]]) and [[CardinalityCostModel]] prices build-side
   *    choice — making `CommutateJoinRule` + cost pick the smaller build
   *    side, the decision the reference's constant model provably cannot
-  *    make (its golden at `cascades/optimizer.rs:97-137` is side-agnostic);
-  *  - GROUP MERGE: the reference ships `merge_duplicate_groups` with the
-  *    call site commented out (`task.rs:148-149`); with
-  *    `mergeDuplicates = true` the search merges after convergence and
-  *    restarts to fixpoint (merges strictly decrease group count, so the
-  *    restart loop terminates).
+  *    make (its golden at `cascades/optimizer.rs:97-137` is side-agnostic).
+  *
+  * Like the reference, it does not merge duplicate groups (`task.rs:148-149`
+  * leaves the call commented out); [[Memo.insertExpr]] aliases a rule
+  * result into its target group instead.
   */
 final class CascadesOptimizer(
     rules: Seq[OptRule] = Rules.all,
     costModel: CostModel = ConstantCostModel,
     stats: StatsModel = NoStats,
-    mergeDuplicates: Boolean = false,
     /** Table → columns catalog for per-group provided-columns derivation
       * ([[Provenance]]); empty = no provenance, column-gated rules (join
       * associativity) abstain everywhere.
@@ -76,7 +74,7 @@ final class CascadesOptimizer(
     optimizeWithMemo(plan, required)._1
 
   /** Like [[optimize]] but also returns the memo (for goldens inspecting
-    * group structure — duplicate merges, cardinalities, winners).
+    * group structure — aliased expressions, cardinalities, winners).
     */
   def optimizeWithMemo(
       plan: PlanNode,
@@ -92,28 +90,8 @@ final class CascadesOptimizer(
         "DistributionSpec.Any instead")
     val memo = new Memo(stats, columns)
     val root = memo.insertPlan(plan)
-    var passes = 0
-    var merged = true
-    while (merged && passes < 8) {
-      runSearch(memo, memo.root, required)
-      merged = mergeDuplicates && memo.duplicates.nonEmpty
-      if (merged) {
-        memo.mergeDuplicateGroups()
-        // invalidate search state so the restart actually re-costs the
-        // merged groups: stale winners would short-circuit OptimizeGroup
-        // (and may reference pre-merge expressions), and already-applied
-        // rule masks would suppress bindings the new group members enable.
-        // Memo'd expressions survive, so the re-search is cheap; merges
-        // strictly reduce live groups, so the loop terminates.
-        memo.groups.foreach { g =>
-          g.winners.clear()
-          g.explored = false
-          g.appliedRules.values.foreach(_.clear())
-        }
-      }
-      passes += 1
-    }
-    (memo.bestPlan(memo.root, required), memo)
+    runSearch(memo, root, required)
+    (memo.bestPlan(root, required), memo)
   }
 
   private def runSearch(
@@ -282,8 +260,8 @@ final class CascadesOptimizer(
         // pops the relaxed search has completed — a missing relaxed winner
         // means the group is unimplementable under the relaxed requirement
         // and no retry can change that (a FILO re-push would pop
-        // immediately with identical memo state; merge restarts rebuild
-        // the whole stack anyway), so the task simply finishes.
+        // immediately with identical memo state), so the task simply
+        // finishes.
         case EnforceOrder(g, req, bound) =>
           val relaxed = req.copy(order = OrderSpec.AnyOrder)
           memo.group(g).winner(relaxed).foreach { w =>

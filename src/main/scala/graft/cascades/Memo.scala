@@ -10,10 +10,10 @@ import scala.collection.mutable
   *  - `Group` holding logical + physical members, an explored flag, rule
   *    bitmasks per expression, and per-`PhysicalPropertySet` winners
   *    (`memo.rs:499-710`);
-  *  - duplicate-group *detection* on insert; merging exists
-  *    ([[Memo.mergeDuplicateGroups]]) but is not called by the task engine —
-  *    the reference ships the same machinery with the call site commented
-  *    out (`cascades/task.rs:148-149`, `memo.rs:160-279`).
+  *  - no duplicate-group merge: the reference ships one with the call
+  *    site commented out (`cascades/task.rs:148-149`, `memo.rs:160-279`);
+  *    here a rule result that already lives in another group is aliased
+  *    into its target group ([[Memo.insertExpr]]).
   */
 final case class GroupExpr(op: Operator, inputs: Seq[Int])
 
@@ -70,8 +70,6 @@ final class Memo(stats: StatsModel = NoStats,
     val columns: Map[String, Seq[String]] = Map.empty) {
   val groups = mutable.ArrayBuffer[Group]()
   private val exprToGroup = mutable.Map[GroupExpr, Int]()
-  /** (kept group, duplicate group) pairs detected on insert. */
-  val duplicates = mutable.ArrayBuffer[(Int, Int)]()
   var root: Int = -1
 
   def group(id: Int): Group = groups(id)
@@ -95,9 +93,8 @@ final class Memo(stats: StatsModel = NoStats,
 
   /** Insert an expression, deduping on (op, inputs). Returns (groupId,
     * isNewExpr). With `target` set (rule output), the expression joins that
-    * equivalence group; if it already lives in a different group the pair is
-    * recorded in [[duplicates]] AND the expression is aliased into the
-    * target group. The aliasing is our lightweight completion of the group
+    * equivalence group; if it already lives in a different group it is
+    * aliased into the target group. The aliasing stands in for the group
     * merge the reference implemented but never wired in (`task.rs:148-149`):
     * without it, a rule result that dedups into its source group never
     * reaches the target group and the search cannot implement it (the
@@ -109,7 +106,6 @@ final class Memo(stats: StatsModel = NoStats,
       case Some(existing) =>
         target match {
           case Some(t) if t != existing =>
-            duplicates += ((existing, t))
             val isNew = group(t).add(expr)
             (t, isNew)
           case _ => (existing, false)
@@ -151,55 +147,6 @@ final class Memo(stats: StatsModel = NoStats,
     }
     insert(e, Some(targetGroup))
     added.toSeq
-  }
-
-  /** Optional duplicate-group merge — the mark-then-merge design of
-    * `memo.rs:159-279`, shipped but (like the reference) not wired into the
-    * task engine.
-    */
-  def mergeDuplicateGroups(): Unit = while (duplicates.nonEmpty) {
-    val (a, b) = duplicates.remove(duplicates.length - 1)
-    val (keep, dup) = if (a <= b) (a, b) else (b, a)
-    if (keep != dup && dup < groups.length && keep < groups.length) {
-      val from = group(dup)
-      val to = group(keep)
-      // equivalent groups provide the same columns in a consistent plan;
-      // union is the safe merge for the derived property (and max for
-      // the conservative width estimate)
-      to.cols = to.cols ++ from.cols
-      to.width = math.max(to.width, from.width)
-      (from.logicalExprs ++ from.physicalExprs).foreach { e =>
-        to.add(e)
-        exprToGroup(e) = to.id
-      }
-      // rewrite references to the dup group in every expression
-      groups.foreach { g =>
-        (g.logicalExprs ++ g.physicalExprs).toSeq.foreach { e =>
-          if (e.inputs.contains(dup)) {
-            val rewritten = e.copy(inputs = e.inputs.map(i =>
-              if (i == dup) keep else i))
-            val set = if (e.op.isLogical) g.logicalExprs else g.physicalExprs
-            set.remove(e)
-            exprToGroup.remove(e)
-            exprToGroup.get(rewritten) match {
-              case Some(other) if other != g.id =>
-                // the rewrite collided with an expression that already
-                // lives elsewhere: that makes THESE two groups equivalent
-                // — record the pair (the enclosing while loop performs the
-                // cascading merge) and alias without stealing the mapping
-                duplicates += ((other, g.id))
-                g.add(rewritten)
-              case _ =>
-                g.add(rewritten)
-                exprToGroup(rewritten) = g.id
-            }
-          }
-        }
-      }
-      from.logicalExprs.clear()
-      from.physicalExprs.clear()
-      if (root == dup) root = keep
-    }
   }
 
   /** Winner extraction (`memo.rs:66-82`, `Group::best_plan_of:669-710`);

@@ -671,24 +671,27 @@ object Rules {
       Project2PhysicalProjectRule, Filter2PhysicalFilterRule,
       Agg2HashAggRule, SplitAggRule, TopK2PhysicalTopKRule)
   val all: Seq[OptRule] = rewriteRules ++ explorationRules ++ implementationRules
-  /** `all` + associativity: join-order enumeration. Not in `all` — the
-    * default search stays reference-faithful (commutation only); opt in
-    * together with a column catalog on the optimizer, without which the
-    * rule abstains on every binding.
+  /** `all` + associativity: join-order enumeration. Not in `all`, the
+    * optimizer's constructor default, which stays reference-faithful
+    * (commutation only). Needs a column catalog on the optimizer, without
+    * which the rule abstains on every binding. With
+    * [[Join2BroadcastJoinRule]] added, this is the search every executed
+    * query runs (`CascadesExecOps.defaultRules`).
     */
   val joinEnumerationRules: Seq[OptRule] = all :+ JoinAssociativityRule
   /** `all` + the broadcast join implementation: join-STRATEGY enumeration.
-    * Opt-in like join-order enumeration — the default search stays
-    * reference-faithful (one physical join) — and only meaningful with a
-    * cost model that prices distribution ([[ClusterCostModel]]); under the
-    * constant model both implementations tie and the first insertion wins.
+    * Not in `all`, which stays reference-faithful (one physical join), and
+    * only meaningful with a cost model that prices distribution
+    * ([[ClusterCostModel]]); under the constant model both implementations
+    * tie and the first insertion wins. The in-planner strategy
+    * (`GraftCascadesStrategy`) searches with it.
     */
   val joinStrategyRules: Seq[OptRule] = all :+ Join2BroadcastJoinRule
   /** Join-strategy enumeration incl. the sort-merge implementation — the
     * interesting-orders search space (clustered scan layouts and ORDER BY
-    * requirements can make the merge join free of enforcers). Opt-in for
-    * the same reasons as [[joinStrategyRules]], and only meaningful with
-    * a stats-bearing cost model.
+    * requirements can make the merge join free of enforcers). Not in `all`
+    * for the same reasons as [[joinStrategyRules]], and only meaningful
+    * with a stats-bearing cost model.
     */
   val fullJoinStrategyRules: Seq[OptRule] =
     joinStrategyRules :+ Join2SortMergeJoinRule

@@ -90,10 +90,10 @@ object GraftCascadesStrategy extends SparkStrategy {
   }
 
   /** Run the mini-search over `Join(scan(lt), scan(rt))` with footer
-    * stats — the same rule set and cost model the executed-queries family
-    * uses for join-strategy decisions.
+    * stats: join-strategy enumeration priced by [[ClusterCostModel]].
+    * `cascades_exec_strategy` reports this winner.
     */
-  private def search(dir: String, lt: String, rt: String,
+  private[graft] def search(dir: String, lt: String, rt: String,
       lkName: String, rkName: String): Option[PlanNode] = {
     val stats = ParquetStats.fromDir(dir, Seq(lt, rt))
     val columns = graft.ops.CascadesExecOps.schemaCat

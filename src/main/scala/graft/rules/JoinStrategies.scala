@@ -25,13 +25,16 @@ import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
   * large⋈large. Joins below Spark's broadcast threshold are deliberately NOT
   * matched, leaving broadcast-hash selection to Catalyst: at 100 TB,
   * forcing a shuffle where a broadcast suffices wastes a full exchange of
-  * the big side.
+  * the big side. Joins carrying a strategy hint (`broadcast`, `MERGE`,
+  * `SHUFFLE_HASH`, … — the lowered cascades winners pin theirs this way)
+  * are not matched either: `JoinSelection` honours the hint.
   */
 object Join2HashJoinStrategy extends SparkStrategy {
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case ExtractEquiJoinKeys(
-        Inner, leftKeys, rightKeys, otherCond, _, left, right, _) =>
+        Inner, leftKeys, rightKeys, otherCond, _, left, right, hint)
+        if !(hint.leftHint ++ hint.rightHint).exists(_.strategy.isDefined) =>
       val broadcastThreshold =
         org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
       // sizeInBytes is BigInt and default (non-CBO) estimates routinely

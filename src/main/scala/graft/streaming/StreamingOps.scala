@@ -706,6 +706,11 @@ object StreamingOps {
     * start from that conf; restored before the post-materialization batch
     * ops run). Results are partition-count-independent: state is keyed,
     * every declared query re-sorts after materialization.
+    *
+    * Assumes queries run one at a time in the session: the conf is
+    * session-wide, so a query started concurrently in the same session
+    * would plan with this stream's partition count (or restore the wrong
+    * value). Run concurrent streams in separate `newSession()`s.
     */
   def runToMemory(
       df: DataFrame, name: String, mode: OutputMode,

@@ -56,8 +56,9 @@ object CalibrateCost {
       try {
         // UN-timed: parse + stats + memo search + bucketed-table writes
         val (winner, df) = CascadesExecOps.planFor(spark, sfDir, name)
-        val model = CascadesExecOps.configs(name)._2
-        val cost = PlanCost.total(winner, model, statsFor(spark, sfDir, name))
+        val model = CascadesExecOps.costModel(name)
+        val cost = PlanCost.total(winner, model,
+          CascadesExecOps.stats(spark, sfDir, name))
         // untimed warmup execution (codegen/JIT), then timed repeats of
         // the SAME DataFrame — each noop save re-runs the physical plan
         df.write.mode("overwrite").format("noop").save()
@@ -155,23 +156,6 @@ object CalibrateCost {
         m(r)(r)
     }
     Some((beta(0), beta(1), beta(2)))
-  }
-
-  /** Stats mirror of planFor for re-pricing (the adaptive query replays
-    * its runtime feedback the same way planFor feeds it).
-    */
-  private def statsFor(s: SparkSession, d: String,
-      name: String): StatsModel = {
-    val tables = Seq("region", "nation", "customer", "supplier", "part",
-      "orders", "lineitem", "documents", "embeddings")
-    val footer = ParquetStats.fromDir(d, tables)
-    if (name == "cascades_exec_adaptive") {
-      import org.apache.spark.sql.functions.col
-      val pred = EqCond(Col("l_partkey"), Col("l_suppkey"))
-      val observed = graft.ops.Tables(s, d).lineitem
-        .filter(col("l_partkey") === col("l_suppkey")).count()
-      FeedbackStats(footer, Map(pred -> observed))
-    } else footer
   }
 
   private def spearman(pairs: Seq[(Double, Double)]): Double = {

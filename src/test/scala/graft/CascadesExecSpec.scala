@@ -41,9 +41,7 @@ class CascadesExecSpec extends GraftSuite {
     own ++ p.inputs.flatMap(marks)
   }
 
-  test("exec maps align: every sql has a config and an oracle") {
-    assert(CascadesExecOps.sqls.keySet == CascadesExecOps.configs.keySet,
-      CascadesExecOps.sqls.keySet.diff(CascadesExecOps.configs.keySet))
+  test("exec maps align: every sql has an oracle") {
     assert(CascadesExecOps.sqls.keySet == CascadesExecOps.oracles.keySet,
       CascadesExecOps.sqls.keySet.diff(CascadesExecOps.oracles.keySet))
   }
@@ -111,9 +109,8 @@ class CascadesExecSpec extends GraftSuite {
 
   test("broadcast_dim: footer stats put the 25-row nation on a " +
       "BROADCAST build side (winner and executed plan agree)") {
-    val (rules, cost) = CascadesExecOps.configs("cascades_exec_broadcast_dim")
-    val (winner, df) = CascadesExecOps.planAndLower(spark, d,
-      CascadesExecOps.sqls("cascades_exec_broadcast_dim"), rules, cost)
+    val (winner, df) =
+      CascadesExecOps.planFor(spark, d, "cascades_exec_broadcast_dim")
     // winner: TopK over Project over BroadcastHashJoin(customer, nation)
     def findJoin(p: PlanNode): Option[PlanNode] = p.op match {
       case _: PhysicalBroadcastHashJoin | _: PhysicalHashJoin |
@@ -128,12 +125,56 @@ class CascadesExecSpec extends GraftSuite {
     assert(!plan.contains("ShuffledHashJoin"), plan)
   }
 
+  test("a join-strategy hint overrides Join2HashJoinStrategy: with " +
+      "Catalyst's broadcast off, broadcast_dim still executes its " +
+      "winner's broadcast, and an unhinted equi join still plans a " +
+      "shuffled hash join") {
+    import org.apache.spark.sql.functions.col
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val (_, df) =
+      CascadesExecOps.planFor(s2, d, "cascades_exec_broadcast_dim")
+    val hinted = executedPlan(df)
+    assert(hinted.contains("BroadcastHashJoin"), hinted)
+    assert(!hinted.contains("ShuffledHashJoin"), hinted)
+    val t = graft.ops.Tables(s2, d)
+    val plain = executedPlan(t.customer
+      .join(t.nation, col("c_nationkey") === col("n_nationkey")))
+    assert(plain.contains("ShuffledHashJoin"), plain)
+  }
+
+  test("smj_clustered and prune need their exceptions: the default " +
+      "search alone picks a different winner") {
+    def ops(p: PlanNode): Seq[Operator] = p.op +: p.inputs.flatMap(ops)
+    def default(name: String,
+        layouts: Map[String, (Seq[Col], Seq[Col])] = Map.empty): PlanNode =
+      CascadesExecOps.planAndLower(spark, d, CascadesExecOps.sqls(name),
+        CascadesExecOps.defaultRules, new ClusterCostModel, layouts,
+        hepRules = CascadesExecOps.defaultHep)._1
+    // without the merge join the clustered layouts cannot be exploited
+    val (smj, _) =
+      CascadesExecOps.planFor(spark, d, "cascades_exec_smj_clustered")
+    val smjDefault = default("cascades_exec_smj_clustered", Map(
+      "customer" -> ((Seq(Col("c_custkey")), Seq(Col("c_custkey")))),
+      "orders" -> ((Seq(Col("o_custkey")), Seq(Col("o_custkey"))))))
+    assert(smj.explain() != smjDefault.explain(), smj.explain())
+    assert(ops(smj).exists(_.isInstanceOf[PhysicalSortMergeJoin]),
+      smj.explain())
+    assert(!ops(smjDefault).exists(_.isInstanceOf[PhysicalSortMergeJoin]),
+      smjDefault.explain())
+    // without projection pushdown no join input is narrowed
+    val (prune, _) = CascadesExecOps.planFor(spark, d, "cascades_exec_prune")
+    val pruneDefault = default("cascades_exec_prune")
+    def projects(p: PlanNode): Int =
+      ops(p).count(_.isInstanceOf[PhysicalProject])
+    assert(prune.explain() != pruneDefault.explain(), prune.explain())
+    assert(projects(prune) > projects(pruneDefault), pruneDefault.explain())
+  }
+
   test("commute_build: the query names nation FIRST; the search flips " +
       "the sides so the dimension builds") {
-    val (rules, cost) =
-      CascadesExecOps.configs("cascades_exec_commute_build")
-    val (winner, _) = CascadesExecOps.planAndLower(spark, d,
-      CascadesExecOps.sqls("cascades_exec_commute_build"), rules, cost)
+    val (winner, _) =
+      CascadesExecOps.planFor(spark, d, "cascades_exec_commute_build")
     def findJoin(p: PlanNode): Option[PlanNode] = p.op match {
       case _: PhysicalBroadcastHashJoin | _: PhysicalHashJoin => Some(p)
       case _ => p.inputs.flatMap(findJoin).headOption
@@ -146,9 +187,8 @@ class CascadesExecSpec extends GraftSuite {
 
   test("split_agg: the SplitAgg winner executes as Spark's " +
       "partial+final HashAggregate pair around one exchange") {
-    val (rules, cost) = CascadesExecOps.configs("cascades_exec_split_agg")
-    val (winner, df) = CascadesExecOps.planAndLower(spark, d,
-      CascadesExecOps.sqls("cascades_exec_split_agg"), rules, cost)
+    val (winner, df) =
+      CascadesExecOps.planFor(spark, d, "cascades_exec_split_agg")
     // the winner itself is the split pyramid
     val rendered = winner.explain()
     assert(rendered.contains("PhysicalHashAggregate(Final"), rendered)
@@ -845,8 +885,7 @@ class CascadesExecSpec extends GraftSuite {
 
   test("footer stats are memoized: fromDir gives equal TableStats cold " +
       "and warm, and a warm footerStats reads nothing") {
-    val tables = Seq("region", "nation", "customer", "supplier", "part",
-      "orders", "lineitem", "documents", "embeddings")
+    val tables = CascadesExecOps.schemaCat.keys.toSeq
     // a private copy: its paths are new to the process-wide cache
     val cold = java.nio.file.Files.createTempDirectory("graft-stats")
     tables.foreach(t => java.nio.file.Files.copy(

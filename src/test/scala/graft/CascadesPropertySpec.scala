@@ -200,22 +200,6 @@ class CascadesPropertySpec extends AnyFunSuite {
     }
   }
 
-  test("group merging never changes the optimal cost") {
-    (1 to Trials).foreach { seed =>
-      val plan = sample(genPlan(3, withLimit = false), seed.toLong)
-      def run(merge: Boolean): Double = {
-        val out = new CascadesOptimizer(
-          costModel = new CardinalityCostModel, stats = stats,
-          mergeDuplicates = merge).optimize(plan)
-        assert(out.isDefined, s"seed $seed merge=$merge")
-        planCost(out.get)
-      }
-      val (off, on) = (run(false), run(true))
-      assert(math.abs(off - on) <= 1e-6,
-        s"seed $seed: merge changed cost $off -> $on for\n${plan.explain()}")
-    }
-  }
-
   // --- join-order enumeration (associativity + commutation) ---
 
   /** Random left-deep 4-table chain: distinct per-table columns (u_i owns
@@ -240,15 +224,15 @@ class CascadesPropertySpec extends AnyFunSuite {
     (plan, TableStats(chainTables.zip(sizes).toMap))
   }
 
-  test("join enumeration never worsens the optimum and stays merge-neutral") {
+  test("join enumeration never worsens the optimum") {
     (1 to Trials).foreach { seed =>
       val (plan, st) = genChain(Gen.Parameters.default, Seed(seed.toLong))
         .getOrElse(fail(s"generator exhausted at seed $seed"))
-      def run(rules: Seq[OptRule], merge: Boolean): Double = {
+      def run(rules: Seq[OptRule]): Double = {
         val out = new CascadesOptimizer(rules,
           costModel = new CardinalityCostModel, stats = st,
-          mergeDuplicates = merge, columns = chainCatalog).optimize(plan)
-        assert(out.isDefined, s"seed $seed merge=$merge: no plan")
+          columns = chainCatalog).optimize(plan)
+        assert(out.isDefined, s"seed $seed: no plan")
         assert(physicalOps(out.get).forall(!_.isLogical), s"seed $seed")
         def rows(n: PlanNode): Long = st.derive(n.op, n.inputs.map(rows))
         def c(n: PlanNode): Double =
@@ -256,14 +240,11 @@ class CascadesPropertySpec extends AnyFunSuite {
             n.op.asInstanceOf[PhysicalOp], n.inputs.map(rows))
         c(out.get)
       }
-      val plain = run(Rules.all, merge = false)
-      val enum0 = run(Rules.joinEnumerationRules, merge = false)
-      val enum1 = run(Rules.joinEnumerationRules, merge = true)
-      assert(enum0 <= plain + 1e-6,
-        s"seed $seed: enumeration regressed $plain -> $enum0 for\n" +
+      val plain = run(Rules.all)
+      val enumerated = run(Rules.joinEnumerationRules)
+      assert(enumerated <= plain + 1e-6,
+        s"seed $seed: enumeration regressed $plain -> $enumerated for\n" +
           plan.explain())
-      assert(math.abs(enum0 - enum1) <= 1e-6,
-        s"seed $seed: merge changed enumerated cost $enum0 -> $enum1")
     }
   }
 

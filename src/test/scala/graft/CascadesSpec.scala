@@ -42,22 +42,19 @@ class CascadesSpec extends AnyFunSuite {
     assert(memo.groups.size == 2)
   }
 
-  test("duplicate-group detection: record + alias, full merge on demand") {
+  test("duplicate-group detection: a rule result is aliased into its " +
+      "target group") {
     val memo = new Memo
     val g1 = memo.insertPlan(scan("t1"))
     val g2 = memo.insertPlan(scan("t2"))
     // a rule claims scan(t2) is equivalent to group g1:
     memo.insertOptExpression(Node(LogicalScan("t2"), Nil), g1)
-    assert(memo.duplicates.toSeq == Seq((g2, g1)))
-    // aliased into the target group (our completion of the merge the
-    // reference left unwired), original group untouched:
+    // aliased into the target group (in place of the merge the reference
+    // left unwired), original group untouched:
     assert(memo.group(g1).logicalExprs.map(_.op).toSet ==
       Set(LogicalScan("t1"), LogicalScan("t2")))
     assert(memo.group(g2).logicalExprs.map(_.op).toSet ==
       Set(LogicalScan("t2")))
-    memo.mergeDuplicateGroups() // mark-then-merge machinery (memo.rs:159-279)
-    assert(memo.group(math.min(g1, g2)).logicalExprs.map(_.op).toSet ==
-      Set(LogicalScan("t1"), LogicalScan("t2")))
   }
 
   // --- binding (binding.rs:125-318) ---
@@ -352,42 +349,6 @@ class CascadesSpec extends AnyFunSuite {
         assert(l == "big" && r == "small",
           s"build side should still be 'small' under the sort: $l/$r")
       case other => fail(s"unexpected plan:\n${other.explain()}")
-    }
-  }
-
-  // --- duplicate-group merge wired into the search (task.rs:148-149) ---
-
-  test("mergeDuplicates: commuted-rewrite duplicate groups collapse, winner survives") {
-    // Limit(5, Limit(3, scan)) -> RemoveLimit produces Limit(3, scan) in the
-    // ROOT group, which dedups into the inner limit group -> duplicate pair
-    // recorded -> merge collapses the two groups -> the search restarts and
-    // still extracts the fully-absorbed scan
-    val plan = limit(5, limit(3, scan("t1")))
-    val opt = new CascadesOptimizer(mergeDuplicates = true)
-    val (out, memo) = opt.optimizeWithMemo(plan)
-    assert(out.isDefined)
-    out.get match {
-      case PlanNode(PhysicalTableScan("t1", Some(3), Nil, Nil), Nil) =>
-      case other => fail(s"unexpected plan:\n${other.explain()}")
-    }
-    // all recorded duplicates were consumed by the merge
-    assert(memo.duplicates.isEmpty)
-    // the two limit groups collapsed: one group now holds BOTH limit exprs
-    // and at least one group was emptied by the merge
-    assert(memo.groups.exists(g =>
-      g.logicalExprs.exists(_.op == LogicalLimit(3)) &&
-        g.logicalExprs.exists(_.op == LogicalLimit(5))))
-    assert(memo.groups.exists(g =>
-      g.logicalExprs.isEmpty && g.physicalExprs.isEmpty))
-    // post-merge invariant: no expression lives in two groups (the
-    // pre-merge aliasing is exactly what the merge consumes)
-    val owners = scala.collection.mutable.Map[GroupExpr, Int]()
-    memo.groups.foreach { g =>
-      (g.logicalExprs ++ g.physicalExprs).foreach { e =>
-        assert(!owners.contains(e),
-          s"$e lives in groups ${owners.get(e)} and ${g.id}")
-        owners(e) = g.id
-      }
     }
   }
 

@@ -18,8 +18,8 @@ import graft.ops.CascadesExecOps
   * flip the pinned winners deliberately do not take. This spec is the
   * "rejected with numbers" claim as code instead of prose.
   *
-  * Pure memo-level searches (no Spark session): parse → optional HEP →
-  * cascades with a fixed catalog, mirroring
+  * Pure memo-level searches (no Spark session): parse → HEP → cascades
+  * with a fixed catalog, mirroring
   * [[graft.ops.CascadesExecOps.planAndLower]] without the lowering.
   */
 class CostFloorSpec extends AnyFunSuite {
@@ -43,12 +43,15 @@ class CostFloorSpec extends AnyFunSuite {
   private def search(name: String, floorRows: Option[Double])
       : Option[PlanNode] = {
     val sql = CascadesExecOps.sqls(name)
-    val (rules, base) = CascadesExecOps.configs(name)
+    val base = CascadesExecOps.costModel(name)
     val cost = floorRows.fold(base)(f => new StageFloorCostModel(base, f))
     val (parsed, required) =
       SqlFrontend.parseQuery(sql, CascadesExecOps.schemaCat)
-    new CascadesOptimizer(rules, costModel = cost, stats = stats,
-      columns = CascadesExecOps.schemaCat).optimize(parsed, required)
+    val logical =
+      new HepOptimizer(CascadesExecOps.hepFor(name)).optimize(parsed)
+    new CascadesOptimizer(CascadesExecOps.rulesFor(name), costModel = cost,
+      stats = stats, columns = CascadesExecOps.schemaCat)
+      .optimize(logical, required)
   }
 
   private def exchanges(p: PlanNode): Int = (p.op match {
@@ -76,7 +79,8 @@ class CostFloorSpec extends AnyFunSuite {
       "SHUFFLED at 1x, 10x, and 100x the footer catalog while the " +
       "row-priced winner broadcasts at every leg") {
     val sql = CascadesExecOps.sqls("cascades_exec_wide_build")
-    val (rules, byteModel) = CascadesExecOps.configs("cascades_exec_wide_build")
+    val rules = CascadesExecOps.rulesFor("cascades_exec_wide_build")
+    val byteModel = CascadesExecOps.costModel("cascades_exec_wide_build")
     def ops(p: PlanNode): Seq[Operator] = p.op +: p.inputs.flatMap(ops)
     Seq(1L, 10L, 100L).foreach { f =>
       // sf0.01 footer shapes scaled f×: rows grow, bytes/row don't

@@ -19,24 +19,6 @@ import graft.ops.CascadesExecOps
   */
 object DumpCascades {
 
-  /** Stats mirror of [[CascadesExecOps.planFor]] for re-pricing: the
-    * footer stats of the scale dir, with the adaptive query's runtime
-    * feedback replayed the same way planFor feeds it.
-    */
-  private def statsFor(s: org.apache.spark.sql.SparkSession, d: String,
-      name: String): StatsModel = {
-    val tables = Seq("region", "nation", "customer", "supplier", "part",
-      "orders", "lineitem", "documents", "embeddings")
-    val footer = ParquetStats.fromDir(d, tables)
-    if (name == "cascades_exec_adaptive") {
-      import org.apache.spark.sql.functions.col
-      val pred = EqCond(Col("l_partkey"), Col("l_suppkey"))
-      val observed = graft.ops.Tables(s, d).lineitem
-        .filter(col("l_partkey") === col("l_suppkey")).count()
-      FeedbackStats(footer, Map(pred -> observed))
-    } else footer
-  }
-
   /** Median of the bench runs line for each query, from a committed
     * BENCH_LOCAL capture (json4s ships with Spark).
     */
@@ -95,8 +77,8 @@ object DumpCascades {
         case a: AdaptiveSparkPlanExec => a.executedPlan
         case p                        => p
       }).toString
-      val cost = PlanCost.total(winner,
-        CascadesExecOps.configs(name)._2, statsFor(spark, d, name))
+      val cost = PlanCost.total(winner, CascadesExecOps.costModel(name),
+        CascadesExecOps.stats(spark, d, name))
       sb.append(s"\n## $name\n\n```sql\n${sql.trim}\n```\n\n")
       sb.append(f"Winner (MiniCascades, memo cost $cost%.0f):\n\n" +
         s"```\n${winner.explain()}\n```\n\n")
@@ -122,9 +104,10 @@ object DumpCascades {
     val rows = CascadesExecOps.sqls.keys.toSeq.sorted.flatMap { name =>
       medians.get(name).map { measured =>
         val (winner, _) = CascadesExecOps.planFor(spark, d01, name)
-        val model = CascadesExecOps.configs(name)._2
+        val model = CascadesExecOps.costModel(name)
         val family = model.getClass.getSimpleName
-        val cost = PlanCost.total(winner, model, statsFor(spark, d01, name))
+        val cost = PlanCost.total(winner, model,
+          CascadesExecOps.stats(spark, d01, name))
         (name, family, cost, measured)
       }
     }
@@ -143,16 +126,6 @@ object DumpCascades {
         val rho = spearman(rs.map(r => (r._3, r._4)))
         sb.append(f"\nSpearman rank correlation ($fam, " +
           f"n=${rs.length}): **$rho%.2f**\n")
-        if (fam == "CardinalityCostModel")
-          sb.append("(Structural caveat: this family's queries all " +
-            "measure sub-second, where fixed per-query overhead — " +
-            "session/scan setup, and a bucketed-table WRITE per run for " +
-            "agg_clustered — exceeds the plan work the model prices, so " +
-            "its rank correlation is noise-dominated by construction. " +
-            "The decisions this model exists for — split vs complete " +
-            "aggregate, top-k vs sort+limit, enforcer placement — are " +
-            "pinned by the plan-shape goldens instead, where the " +
-            "cheaper-plan choice is asserted directly.)\n")
         // surface the worst inversion so a mispriced pair is a reading,
         // not a hunt
         val byCost = rs.sortBy(_._3).map(_._1)
