@@ -422,8 +422,8 @@ object PlanCost {
   *
   * Crossover at build = probe / (2W - 2 - 2) ≈ probe/12 for W=8: a small
   * dimension broadcasts, a comparable-size build side shuffles — decided
-  * by the memo's winner comparison, not a size threshold. Opt-in next to
-  * [[Rules.joinStrategyRules]].
+  * by the memo's winner comparison, not a size threshold. The default
+  * search's model (`CascadesExecOps.search`).
   */
 final class ClusterCostModel extends CostModel {
   private val base = new CardinalityCostModel
@@ -436,43 +436,6 @@ final class ClusterCostModel extends CostModel {
         2.0 * ClusterCostModel.W * inputRows(1).toDouble
     case other => base.operatorCost(other, inputRows)
   }
-}
-
-/** [[CostModel]] wrapper pricing the per-STAGE fixed floor the grounded
-  * r10 calibration measured: within the CardinalityCostModel query family
-  * wall time ranks by the winner's explicit-[[PhysicalExchange]] count
-  * (Spearman 0.82) while priced row-work spans 100× across a 3× wall
-  * spread, and the two-term least-squares fit puts the floor at ~51 ms
-  * per exchange on this box (CALIBRATION_r10.json, CASCADES.md grounded
-  * section). `floorRows` expresses that floor in row-touch equivalents
-  * (floor seconds ÷ the fitted per-cost-unit second rate).
-  *
-  * Deliberately NOT in the search defaults. The floor is CONSTANT while
-  * every other priced term scales with data, so at the 100 TB design
-  * point it vanishes into the row-work and the wrapper is
-  * decision-neutral; at golden-catalog scale the measured value dwarfs
-  * every row term and flips the distinct-rewrite / split-aggregate
-  * winners toward fewer stages — genuinely the faster plans at THAT
-  * scale, but the pinned plans encode the scale-out design point.
-  * [[graft.CostFloorSpec]] pins both directions executably: floor = 0 is
-  * winner-identical with the base model on every executed cascades
-  * query, and the measured floor flips `count(distinct)` to the
-  * one-exchange direct form. The reference has no counterpart (its cost
-  * model is a constant per operator, `cost/trivial.rs:9-30`); Spark's
-  * analog is the fixed scheduling latency AQE amortizes by coalescing
-  * tiny shuffle partitions.
-  */
-final class StageFloorCostModel(base: CostModel, floorRows: Double)
-    extends CostModel {
-  private def floor(op: PhysicalOp): Double = op match {
-    case _: PhysicalExchange => floorRows
-    case _                   => 0.0
-  }
-  def operatorCost(op: PhysicalOp, inputRows: Seq[Long]): Double =
-    base.operatorCost(op, inputRows) + floor(op)
-  override def operatorCost(op: PhysicalOp, inputRows: Seq[Long],
-      inputWidths: Seq[Long]): Double =
-    base.operatorCost(op, inputRows, inputWidths) + floor(op)
 }
 
 /** [[ClusterCostModel]] with the join placement terms priced in BYTES

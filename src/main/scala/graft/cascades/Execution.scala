@@ -3,7 +3,7 @@ package graft.cascades
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Literal, SortOrder}
 import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, LeftAnti, LeftOuter, LeftSemi}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, JoinHint, Limit, LogicalPlan, Project, Repartition, RepartitionByExpression, Sort, UnresolvedHint}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, BROADCAST, Filter, Join, JoinHint, JoinStrategyHint, Limit, LogicalPlan, Project, Repartition, RepartitionByExpression, SHUFFLE_HASH, SHUFFLE_MERGE, Sort, UnresolvedHint}
 import org.apache.spark.sql.functions._
 
 import graft.functions.ColumnBridge
@@ -89,16 +89,9 @@ object Execution {
             else Project(projected.map(c => named(col(c.name))), f)
           case PhysicalProject(exprs) =>
             Project(exprs.map(e => named(exprToColumn(e))), kids.head)
-          case PhysicalHashJoin(jt, cond) =>
-            // SHUFFLE_HASH pins ShuffledHashJoinExec (build side = right,
-            // the winner's convention) over Catalyst's own strategy pick
-            join(kids(0), UnresolvedHint("SHUFFLE_HASH", Nil, kids(1)),
-              jt, cond)
-          case PhysicalBroadcastHashJoin(jt, cond) =>
-            // the hint `functions.broadcast` puts on a DataFrame
-            join(kids(0), UnresolvedHint("broadcast", Nil, kids(1)), jt, cond)
-          case PhysicalSortMergeJoin(jt, cond) =>
-            join(kids(0), UnresolvedHint("MERGE", Nil, kids(1)), jt, cond)
+          case PhysicalHashJoin(jt, cond)          => join(op, kids, jt, cond)
+          case PhysicalBroadcastHashJoin(jt, cond) => join(op, kids, jt, cond)
+          case PhysicalSortMergeJoin(jt, cond)     => join(op, kids, jt, cond)
           case PhysicalHashAggregate(_, g, aggs) =>
             aggregate(kids.head, g, aggs)
           case PhysicalTopK(n, keys) =>
@@ -117,7 +110,10 @@ object Execution {
         }
     }
 
-    private def join(left: LogicalPlan, right: LogicalPlan, jt: JoinType,
+    /** The join with the winner's strategy hint on its build side, the
+      * right input (the hint `.hint(name)` puts on a DataFrame).
+      */
+    private def join(op: Operator, kids: Seq[LogicalPlan], jt: JoinType,
         cond: EqCond): LogicalPlan = {
       val sparkType = jt match {
         case JoinType.Inner => Inner
@@ -126,7 +122,8 @@ object Execution {
         case JoinType.Semi  => LeftSemi
         case JoinType.Anti  => LeftAnti
       }
-      Join(left, right, sparkType,
+      val build = UnresolvedHint(joinStrategy(op).get.displayName, Nil, kids(1))
+      Join(kids(0), build, sparkType,
         Some(expr(col(cond.left.name) === col(cond.right.name))),
         JoinHint.NONE)
     }
@@ -147,6 +144,19 @@ object Execution {
       val keys = g.map(c => named(col(c.name)))
       Aggregate(keys, keys ++ aggs.map(a => named(aggColumn(a))), child)
     }
+  }
+
+  /** The Catalyst join-strategy hint that makes `JoinSelection` plan a
+    * winner's join operator, over Catalyst's own size-based pick. The one
+    * mapping from a winner's join choice to Spark: lowering puts it on
+    * the build side of each lowered join, and
+    * [[graft.rules.CascadesJoinHints]] on the join Catalyst itself built.
+    */
+  def joinStrategy(op: Operator): Option[JoinStrategyHint] = op match {
+    case _: PhysicalBroadcastHashJoin => Some(BROADCAST)
+    case _: PhysicalHashJoin          => Some(SHUFFLE_HASH)
+    case _: PhysicalSortMergeJoin     => Some(SHUFFLE_MERGE)
+    case _                            => None
   }
 
   /** A [[SortKey]]'s exact Spark sort column — direction AND null

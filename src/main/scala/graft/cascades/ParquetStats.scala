@@ -18,8 +18,8 @@ import scala.jdk.CollectionConverters._
   * decision in [[ClusterCostModel]]/[[ByteWeightedClusterCostModel]]
   * reflect the data instead of a guess — a 25-row `nation` broadcasts, a
   * 150k-row `orders` build side shuffles, decided by the memo's winner
-  * comparison over these numbers ([[graft.CascadesStatsSpec]] pins the
-  * flip).
+  * comparison over these numbers ([[graft.CascadesExecSpec]] pins the
+  * flips on the sf0.01 footers).
   *
   * Three per-column axes, all footer-resident:
   *  - integer min/max from row-group column statistics → range

@@ -683,8 +683,9 @@ object Rules {
     * Not in `all`, which stays reference-faithful (one physical join), and
     * only meaningful with a cost model that prices distribution
     * ([[ClusterCostModel]]); under the constant model both implementations
-    * tie and the first insertion wins. The in-planner strategy
-    * (`GraftCascadesStrategy`) searches with it.
+    * tie and the first insertion wins. The base of
+    * [[fullJoinStrategyRules]]; the executed queries search with
+    * [[joinEnumerationRules]] plus [[Join2BroadcastJoinRule]].
     */
   val joinStrategyRules: Seq[OptRule] = all :+ Join2BroadcastJoinRule
   /** Join-strategy enumeration incl. the sort-merge implementation — the

@@ -65,8 +65,10 @@ object Relational {
     // hint pins a hash join (broadcast would hide the demonstrandum);
     // SourceSpec asserts the exchange-free plan, the oracle checks values.
     "scan_source_spj" -> { (s, d) =>
-      s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      def t(rows: Int) = s.read.format("graft.sources.SyntheticSource")
+      // the conf lives on a new session, so the caller's stays untouched
+      val s2 = s.newSession()
+      s2.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+      def t(rows: Int) = s2.read.format("graft.sources.SyntheticSource")
         .option("rows", rows.toString).option("byTag", "true").load()
       t(4000).select(col("id").as("ida"), col("tag"))
         .join(t(2000).select(col("id").as("idb"), col("tag"))

@@ -8,18 +8,18 @@ import org.apache.spark.sql.types.IntegerType
 import graft.functions._
 
 /** Session-extension entry point — the Spark-native analog of the reference's
-  * two host-integration adapters:
+  * `DFOptimizerAdapterRule` (logical→logical, wraps the HepOptimizer as a
+  * DataFusion `OptimizerRule`, `datafusion-dolomite-integration/src/
+  * rule.rs:18-56`): `injectOptimizerRule` for the three limit rules, and
+  * `injectPlannerStrategy` for the hash-join implementation rule
+  * ([[Join2HashJoinStrategy]]), plus `injectFunction` for the kernel
+  * expressions, so the whole custom function surface is reachable from
+  * plain SQL (`SELECT simhash64(...)`), not just the Column API.
   *
-  *  - `DFOptimizerAdapterRule` (logical→logical, wraps the HepOptimizer as a
-  *    DataFusion `OptimizerRule`, `datafusion-dolomite-integration/src/
-  *    rule.rs:18-56`) → `injectOptimizerRule` for the three limit rules;
-  *  - `DFQueryPlanner` (logical→physical, wraps the CascadesOptimizer as a
-  *    DataFusion `QueryPlanner`, `src/planner.rs:22-56`) →
-  *    `injectPlannerStrategy` for the hash-join implementation rule;
-  *
-  * plus `injectFunction` for the kernel expressions, so the whole custom
-  * function surface is reachable from plain SQL (`SELECT simhash64(...)`),
-  * not just the Column API.
+  * The reference's other adapter, `DFQueryPlanner` (wraps the
+  * CascadesOptimizer as a DataFusion `QueryPlanner`, `src/planner.rs:22-56`),
+  * is [[CascadesJoinHints]]; a session opts in to it through
+  * `experimental.extraOptimizations`, not through these extensions.
   *
   * Usage:
   * {{{
@@ -48,12 +48,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(_ => LimitRules.RemoveLimit)
     e.injectOptimizerRule(_ => LimitRules.PushLimitOverProjection)
     e.injectOptimizerRule(_ => LimitRules.PushLimitToTableScan)
-    // the full DFQueryPlanner pattern: the mini-cascades SEARCH as a host
-    // planner strategy. Conf-gated off by default (see the object doc);
-    // injected FIRST — when enabled its winner must precede
-    // Join2HashJoinStrategy's unconditional shuffled-hash candidate
-    // (Spark's planner takes the first strategy that emits a plan)
-    e.injectPlannerStrategy(_ => GraftCascadesStrategy)
     e.injectPlannerStrategy(_ => Join2HashJoinStrategy)
 
     fn(e, "quant_cosine", classOf[QuantizedCosine],

@@ -615,13 +615,14 @@ class CascadesExecSpec extends GraftSuite {
       Seq(500L)) == 100L) // 1/NDV of 500
   }
 
-  test("injected planner strategy (DFQueryPlanner pattern): the " +
+  test("optimizer rule CascadesJoinHints (DFQueryPlanner pattern): the " +
       "mini-cascades winner decides the Spark join — BroadcastHashJoin " +
-      "with Catalyst's own broadcast DISABLED; gate off -> SortMergeJoin " +
-      "(negative control proving only the strategy can broadcast here)") {
+      "with Catalyst's own broadcast DISABLED; rule absent -> no " +
+      "broadcast (negative control proving only the rule can broadcast " +
+      "here)") {
     import org.apache.spark.sql.functions.col
-    // session inherits GraftExtensions (SparkTestBase) — the strategy is
-    // present via injectPlannerStrategy; only the conf gate turns it on
+    // session inherits GraftExtensions (SparkTestBase); only the
+    // installed optimizer rule runs the search
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     def run(): String = {
@@ -632,15 +633,23 @@ class CascadesExecSpec extends GraftSuite {
       df.collect()
       executedPlan(df)
     }
-    s2.conf.set(graft.rules.GraftCascadesStrategy.DirKey, d)
-    val withStrategy = run()
-    assert(withStrategy.contains("BroadcastHashJoin"), withStrategy)
-    assert(!withStrategy.contains("SortMergeJoin"), withStrategy)
-    // negative control: gate off, same session/confs — nothing else can
-    // broadcast at threshold -1: this session's Join2HashJoinStrategy
-    // claims the join as ShuffledHashJoin (a plain session would
-    // sort-merge); either way NO broadcast
-    s2.conf.unset(graft.rules.GraftCascadesStrategy.DirKey)
+    s2.experimental.extraOptimizations = Seq(graft.rules.CascadesJoinHints)
+    val withRule = run()
+    assert(withRule.contains("BroadcastHashJoin"), withRule)
+    assert(!withRule.contains("SortMergeJoin"), withRule)
+    // nation named first: the search commutes the join to build nation,
+    // and the hint follows it to Catalyst's left side
+    val t = graft.ops.Tables(s2, d)
+    val swapped = executedPlan(t.nation
+      .join(t.customer, col("n_nationkey") === col("c_nationkey"))
+      .select(col("c_name"), col("n_name")))
+    assert(swapped.contains("BuildLeft") &&
+      swapped.contains("BroadcastHashJoin"), swapped)
+    // negative control: rule removed, same session/confs — nothing else
+    // can broadcast at threshold -1: this session's
+    // Join2HashJoinStrategy claims the join as ShuffledHashJoin (a plain
+    // session would sort-merge); either way NO broadcast
+    s2.experimental.extraOptimizations = Nil
     val without = run()
     assert(without.contains("ShuffledHashJoin") ||
       without.contains("SortMergeJoin"), without)
@@ -933,12 +942,12 @@ class CascadesExecSpec extends GraftSuite {
     assert(a.count() == b.count())
   }
 
-  test("injected planner strategy: scanTable still finds the table names " +
+  test("CascadesJoinHints: scanTable still finds the table names " +
       "through reused relations") {
     import org.apache.spark.sql.functions.col
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s2.conf.set(graft.rules.GraftCascadesStrategy.DirKey, d)
+    s2.experimental.extraOptimizations = Seq(graft.rules.CascadesJoinHints)
     val t = graft.ops.Tables(s2, d)
     val (c1, n1) = (t.customer, t.nation)
     val (c2, n2) = (t.customer, t.nation)
@@ -948,5 +957,27 @@ class CascadesExecSpec extends GraftSuite {
       c2.join(n2, col("c_nationkey") === col("n_nationkey"))
         .select(col("c_name"), col("n_name")))
     assert(plan.contains("BroadcastHashJoin"), plan)
+  }
+
+  test("CascadesJoinHints leaves a user's join-strategy hint alone: a " +
+      "merge-hinted join sort-merges and a shuffle_hash-hinted join " +
+      "shuffle-hashes where the winner would broadcast") {
+    import org.apache.spark.sql.functions.col
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    s2.conf.set("spark.sql.adaptive.enabled", "false")
+    s2.experimental.extraOptimizations = Seq(graft.rules.CascadesJoinHints)
+    def plan(hint: String): String = {
+      val t = graft.ops.Tables(s2, d)
+      executedPlan(t.customer
+        .join(t.nation.hint(hint), col("c_nationkey") === col("n_nationkey"))
+        .select(col("c_name"), col("n_name")))
+    }
+    val merge = plan("merge")
+    assert(merge.contains("SortMergeJoin"), merge)
+    assert(!merge.contains("BroadcastHashJoin"), merge)
+    val hash = plan("shuffle_hash")
+    assert(hash.contains("ShuffledHashJoin"), hash)
+    assert(!hash.contains("BroadcastHashJoin"), hash)
   }
 }

@@ -229,8 +229,8 @@ object DumpCascades {
         "Spearman inverted, so the inversion is the unpriced CONSTANT, " +
         "not a wrong row model. Pricing that constant in the decision " +
         "model is a scale statement, adjudicated in code rather than " +
-        "prose: `StageFloorCostModel` (Cost.scala) carries the fitted " +
-        "floor as an opt-in wrapper, and `CostFloorSpec` pins both " +
+        "prose: `StageFloorCostModel` (CostFloorSpec.scala) carries the " +
+        "fitted floor as a wrapper, and `CostFloorSpec` pins both " +
         "directions — floor = 0 is winner-identical to the base model " +
         "on every executed cascades query (the 100 TB limit, where the " +
         "constant vanishes into scaling row-work), while the measured " +

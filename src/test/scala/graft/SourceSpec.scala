@@ -212,8 +212,14 @@ class SourceSpec extends GraftSuite {
 
   test("scan_source_spj contract query: shuffle-hash join, zero exchanges " +
       "before the join") {
-    val df = graft.ops.Relational.queries("scan_source_spj")(spark, sfDir)
+    // the caller holds the non-default value, so a query that set the
+    // conf on the caller's session would show
+    val key = "spark.sql.sources.v2.bucketing.enabled"
+    val caller = spark.newSession()
+    caller.conf.set(key, "false")
+    val df = graft.ops.Relational.queries("scan_source_spj")(caller, sfDir)
     df.collect()
+    assert(caller.conf.getOption(key) == Some("false"))
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("ShuffledHashJoin"), plan)
     // the only acceptable exchange is the final single-partition sort,
