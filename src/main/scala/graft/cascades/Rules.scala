@@ -676,24 +676,9 @@ object Rules {
     * (commutation only). Needs a column catalog on the optimizer, without
     * which the rule abstains on every binding. With
     * [[Join2BroadcastJoinRule]] added, this is the search every executed
-    * query runs (`CascadesExecOps.defaultRules`).
+    * query runs (`CascadesExecOps.defaultRules`). The join-strategy sets
+    * without associativity, which only the specs search with, live in
+    * the test tree (`graft.TestRules`).
     */
   val joinEnumerationRules: Seq[OptRule] = all :+ JoinAssociativityRule
-  /** `all` + the broadcast join implementation: join-STRATEGY enumeration.
-    * Not in `all`, which stays reference-faithful (one physical join), and
-    * only meaningful with a cost model that prices distribution
-    * ([[ClusterCostModel]]); under the constant model both implementations
-    * tie and the first insertion wins. The base of
-    * [[fullJoinStrategyRules]]; the executed queries search with
-    * [[joinEnumerationRules]] plus [[Join2BroadcastJoinRule]].
-    */
-  val joinStrategyRules: Seq[OptRule] = all :+ Join2BroadcastJoinRule
-  /** Join-strategy enumeration incl. the sort-merge implementation — the
-    * interesting-orders search space (clustered scan layouts and ORDER BY
-    * requirements can make the merge join free of enforcers). Not in `all`
-    * for the same reasons as [[joinStrategyRules]], and only meaningful
-    * with a stats-bearing cost model.
-    */
-  val fullJoinStrategyRules: Seq[OptRule] =
-    joinStrategyRules :+ Join2SortMergeJoinRule
 }

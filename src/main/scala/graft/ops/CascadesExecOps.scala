@@ -1,8 +1,14 @@
 package graft.ops
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalog
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 
 import graft.cascades._
+import graft.functions.ColumnBridge
 
 /** MiniCascades winners EXECUTED end to end — the reference's
   * `DFQueryPlanner` lifecycle (`datafusion-dolomite-integration/src/
@@ -65,7 +71,7 @@ object CascadesExecOps {
         * pushdown through joins runs here because the cascades binder's
         * opaque group handles make the provenance walk abstain.
         */
-      hepRules: Seq[OptRule] = Nil,
+      hepRules: Seq[OptRule] = defaultHep,
       /** Replaces the footer-stats model: [[planFor]] passes each
         * query's [[stats]] (the adaptive query's carry runtime-observed
         * filter rows).
@@ -95,16 +101,95 @@ object CascadesExecOps {
     }
   }
 
-  /** Write `src` (at scale dir `d`) as an 8-bucket table sorted within
-    * buckets by `key`, ONE FILE PER BUCKET (the repartition on the bucket
-    * key makes each writer task own exactly one bucket — the layout
-    * Spark's scan trusts for both Hashed and SortedBy, so a merge join
-    * over two such tables plans with ZERO exchanges and ZERO sorts).
-    * This is the write-side-paid-once pattern: at 100 TB the shuffle+sort
-    * happens once at ingest; every subsequent co-clustered join is free.
+  /** `src` (at scale dir `d`) as the managed table `table`, bucketed 8
+    * ways on `key` and sorted within buckets by it, ONE FILE PER BUCKET
+    * (the repartition on the bucket key makes each writer task own
+    * exactly one bucket — the layout Spark's scan trusts for both Hashed
+    * and SortedBy, so a merge join over two such tables plans with ZERO
+    * exchanges and ZERO sorts). This is the write-side-paid-once
+    * pattern: the shuffle and sort are paid when the layout is written,
+    * and every later co-clustered join or aggregate reads it for free.
+    *
+    * The layout is written once and reused while it still holds, like a
+    * [[Tables]] read. Its record is keyed by the table's location and
+    * holds the key of the write: the source's qualified path and
+    * [[Tables.fingerprint]], the bucket column, bucket count and sort
+    * column, the SparkContext's external catalog and the location; and
+    * the fingerprint of the table's own directory right after the write.
+    * A build reuses the layout only while both still match. A changed
+    * source, a `DROP TABLE`, a rewrite from elsewhere, or a directory
+    * that an earlier SparkContext's catalog left behind all mismatch,
+    * and the build rewrites the layout. The catalog is compared by
+    * identity, so a fresh in-memory catalog is never told that a table
+    * exists. Writes of one location are serialized on a per-location
+    * lock, and a build that waited on it checks again before writing, so
+    * concurrent builds write a layout once. A build that reuses a layout
+    * takes no lock.
+    *
+    * Each record also keeps ONE resolved relation, that of the session
+    * that last read the layout, and later reads in that session are
+    * `newInstance()` of it: no table resolution, no file listing by Spark.
+    * A read from another session, or the first read after a write,
+    * refreshes the table in the reading session first: its session
+    * catalog may still serve a relation over the files an earlier write
+    * replaced.
     */
   private def bucketedTable(s: SparkSession, d: String, src: String,
       key: String, table: String): DataFrame = {
+    val want = layoutKey(s, d, src, key, table)
+    def current =
+      Option(writtenLayouts.get(want.location)).filter(_.holds(s, want))
+    val layout = current.getOrElse(
+      layoutLocks.computeIfAbsent(want.location, _ => new Object).synchronized(
+        current.getOrElse(writeLayout(s, d, src, table, want))))
+    layout.read(s, table)
+  }
+
+  private val Buckets = 8
+
+  /** What a layout write reads and where it writes (see [[bucketedTable]]). */
+  private final case class LayoutKey(source: String,
+      sourceFiles: Tables.Fingerprint, bucketBy: String, buckets: Int,
+      sortBy: String, catalog: ExternalCatalog, location: String)
+
+  private def layoutKey(s: SparkSession, d: String, src: String,
+      key: String, table: String): LayoutKey = {
+    val (source, files) = Tables.fingerprint(s, s"$d/$src.parquet")
+      .getOrElse(sys.error(s"no $src table at $d"))
+    LayoutKey(source, files, key, Buckets, key,
+      s.sharedState.externalCatalog,
+      Tables.managedLocation(s, table).toString)
+  }
+
+  /** One written layout: its key, the fingerprint of the directory the
+    * write left, and the slot of the session that last read it.
+    */
+  private final class Layout(key: LayoutKey, written: Tables.Fingerprint) {
+    @volatile private var resolved: Option[(SparkSession, LogicalPlan)] =
+      None
+
+    def holds(s: SparkSession, want: LayoutKey): Boolean =
+      key == want &&
+        Tables.fingerprint(s, key.location).exists(_._2 == written)
+
+    def read(s: SparkSession, table: String): DataFrame = resolved match {
+      case Some((session, plan)) if session eq s =>
+        ColumnBridge.analysedDataFrame(s,
+          plan.transform { case r: LogicalRelation => r.newInstance() })
+      case _ =>
+        s.catalog.refreshTable(table)
+        val df = s.table(table)
+        resolved = Some((s, df.queryExecution.analyzed))
+        df
+    }
+  }
+
+  /** The written layouts and their write locks, by table location. */
+  private val writtenLayouts = new ConcurrentHashMap[String, Layout]()
+  private val layoutLocks = new ConcurrentHashMap[String, Object]()
+
+  private def writeLayout(s: SparkSession, d: String, src: String,
+      table: String, want: LayoutKey): Layout = {
     import org.apache.spark.sql.functions.col
     val t = Tables(s, d)
     val df = src match {
@@ -112,21 +197,16 @@ object CascadesExecOps {
       case "orders"   => t.orders
       case other      => sys.error(s"no bucketed source for $other")
     }
-    // idempotent across JVMs: a previous session's managed-table
-    // directory survives in the warehouse while a fresh in-memory
-    // catalog knows nothing of it — DROP covers the registered case and
-    // the explicit location delete covers the orphaned one (otherwise
-    // CREATE trips LOCATION_ALREADY_EXISTS)
-    s.sql(s"DROP TABLE IF EXISTS $table")
-    val wh = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), table)
-    val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(wh)) fs.delete(wh, true)
-    df.repartition(8, col(key))
+    Tables.resetManagedTable(s, table)
+    df.repartition(Buckets, col(want.bucketBy))
       .write.mode("overwrite").format("parquet")
-      .bucketBy(8, key).sortBy(key)
+      .bucketBy(Buckets, want.bucketBy).sortBy(want.sortBy)
       .saveAsTable(table)
-    s.table(table)
+    val written = Tables.fingerprint(s, want.location)
+      .getOrElse(sys.error(s"$table left nothing at ${want.location}"))._2
+    val layout = new Layout(want, written)
+    writtenLayouts.put(want.location, layout)
+    layout
   }
 
   /** The search every executed query runs: join-order and join-strategy

@@ -760,18 +760,11 @@ object DataOps {
       val emb = Tables(s, d).embeddings
         .select(col("vec_id").as("doc_id"),
           element_at(col("embedding"), 1).as("e1"))
-      // self-cleaning across sessions: the warehouse DIRECTORY outlives
-      // the in-memory catalog entry, and saveAsTable(overwrite) refuses
-      // an orphaned location — drop the entry AND delete the leftover
-      // path before writing
-      Seq("graft_bkt_docs", "graft_bkt_emb").foreach { t =>
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        val wh = s.conf.get("spark.sql.warehouse.dir")
-          .stripPrefix("file:")
-        val loc = new java.io.File(wh, t)
-        if (loc.exists())
-          org.apache.commons.io.FileUtils.deleteDirectory(loc)
-      }
+      // written anew on every build, which is what this query shows;
+      // saveAsTable(overwrite) refuses an orphaned location, so the
+      // reset drops the entry AND deletes the leftover directory
+      Seq("graft_bkt_docs", "graft_bkt_emb")
+        .foreach(Tables.resetManagedTable(s, _))
       // repartition ON THE BUCKET FUNCTION before writing (same pmod
       // hash): one task per bucket -> one file per bucket. Without it
       // every task writes a file into every bucket, and the read side

@@ -1,6 +1,11 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 import graft.cascades._
 import graft.ops.CascadesExecOps
@@ -149,8 +154,7 @@ class CascadesExecSpec extends GraftSuite {
     def default(name: String,
         layouts: Map[String, (Seq[Col], Seq[Col])] = Map.empty): PlanNode =
       CascadesExecOps.planAndLower(spark, d, CascadesExecOps.sqls(name),
-        CascadesExecOps.defaultRules, new ClusterCostModel, layouts,
-        hepRules = CascadesExecOps.defaultHep)._1
+        CascadesExecOps.defaultRules, new ClusterCostModel, layouts)._1
     // without the merge join the clustered layouts cannot be exploited
     val (smj, _) =
       CascadesExecOps.planFor(spark, d, "cascades_exec_smj_clustered")
@@ -204,7 +208,7 @@ class CascadesExecSpec extends GraftSuite {
     val sql = CascadesExecOps.sqls("cascades_exec_broadcast_dim")
     val (logical, required) = SqlFrontend.parseQuery(sql)
     def joinOp(stats: StatsModel): Operator = {
-      val opt = new CascadesOptimizer(Rules.joinStrategyRules,
+      val opt = new CascadesOptimizer(TestRules.joinStrategyRules,
         costModel = new ClusterCostModel, stats = stats)
       val w = opt.optimize(logical, required).get
       def find(p: PlanNode): Option[Operator] = p.op match {
@@ -246,7 +250,7 @@ class CascadesExecSpec extends GraftSuite {
     }
     assert(hasFilterOverScan(pushed), pushed.explain())
     def joinOf(stats: StatsModel): Operator = {
-      val opt = new CascadesOptimizer(Rules.joinStrategyRules,
+      val opt = new CascadesOptimizer(TestRules.joinStrategyRules,
         costModel = new ClusterCostModel, stats = stats)
       val w = opt.optimize(pushed, required).get
       def find(p: PlanNode): Option[Operator] = p.op match {
@@ -313,7 +317,7 @@ class CascadesExecSpec extends GraftSuite {
     val pushed = new HepOptimizer(
       Seq(Rules.PushFilterThroughJoinRule(schemaCat))).optimize(parsed)
     def joinOf(stats: StatsModel): Operator = {
-      val opt = new CascadesOptimizer(Rules.joinStrategyRules,
+      val opt = new CascadesOptimizer(TestRules.joinStrategyRules,
         costModel = new ClusterCostModel, stats = stats)
       val w = opt.optimize(pushed, required).get
       def find(p: PlanNode): Option[Operator] = p.op match {
@@ -400,7 +404,7 @@ class CascadesExecSpec extends GraftSuite {
     val (logical, required) = SqlFrontend.parseQuery(sql)
     val stats = ParquetStats.fromDir(d, Seq("customer", "nation"))
     val model = new ClusterCostModel
-    val opt = new CascadesOptimizer(Rules.joinStrategyRules,
+    val opt = new CascadesOptimizer(TestRules.joinStrategyRules,
       costModel = model, stats = stats)
     val (winnerOpt, memo) = opt.optimizeWithMemo(logical, required)
     val winner = winnerOpt.get
@@ -475,7 +479,7 @@ class CascadesExecSpec extends GraftSuite {
       CascadesExecOps.sqls("cascades_exec_semi_join"),
       Map("customer" -> Seq("c_custkey", "c_name"),
         "orders" -> Seq("o_orderkey", "o_custkey")))
-    val opt = new CascadesOptimizer(Rules.joinStrategyRules,
+    val opt = new CascadesOptimizer(TestRules.joinStrategyRules,
       costModel = new ClusterCostModel, stats = blind)
     val w = opt.optimize(parsed, required).get
     def findJoin(p: PlanNode): Option[Operator] = p.op match {
@@ -530,7 +534,7 @@ class CascadesExecSpec extends GraftSuite {
     val pushed = new HepOptimizer(
       Seq(Rules.PushFilterThroughJoinRule(schemaCat))).optimize(
       SqlFrontend.parse(CascadesExecOps.sqls("cascades_exec_disjunction")))
-    val opt = new CascadesOptimizer(Rules.joinStrategyRules,
+    val opt = new CascadesOptimizer(TestRules.joinStrategyRules,
       costModel = new ClusterCostModel, stats = blind)
     val w = opt.optimize(pushed,
       PhysicalPropertySet.default).get
@@ -592,7 +596,7 @@ class CascadesExecSpec extends GraftSuite {
       Seq(Rules.PushFilterThroughJoinRule(schemaCat))).optimize(
       SqlFrontend.parse(
         CascadesExecOps.sqls("cascades_exec_string_filter")))
-    val opt = new CascadesOptimizer(Rules.joinStrategyRules,
+    val opt = new CascadesOptimizer(TestRules.joinStrategyRules,
       costModel = new ClusterCostModel, stats = blind)
     val w = opt.optimize(pushed, PhysicalPropertySet.default).get
     def findJoin(p: PlanNode): Option[Operator] = p.op match {
@@ -722,11 +726,15 @@ class CascadesExecSpec extends GraftSuite {
     // row-model counterfactual: the SAME SQL priced by row counts
     // broadcasts the 500-row build — pinning that the executed flip is
     // attributable to the byte axis, not the search or the stats
-    val (rowWinner, _) = CascadesExecOps.planAndLower(spark, d,
-      CascadesExecOps.sqls("cascades_exec_wide_build"),
-      Rules.joinStrategyRules, new ClusterCostModel)
+    def rowModel(hepRules: Seq[OptRule]) = CascadesExecOps.planAndLower(
+      spark, d, CascadesExecOps.sqls("cascades_exec_wide_build"),
+      TestRules.joinStrategyRules, new ClusterCostModel,
+      hepRules = hepRules)._1
+    val rowWinner = rowModel(CascadesExecOps.defaultHep)
     assert(ops(rowWinner).exists(_.isInstanceOf[PhysicalBroadcastHashJoin]),
       rowWinner.explain())
+    // the SQL has no WHERE, so the default HEP pass leaves it as it was
+    assert(rowWinner.explain() == rowModel(Nil).explain(), rowWinner.explain())
   }
 
   test("order direction satisfaction: an ASC-clustered layout satisfies " +
@@ -979,5 +987,170 @@ class CascadesExecSpec extends GraftSuite {
     val hash = plan("shuffle_hash")
     assert(hash.contains("ShuffledHashJoin"), hash)
     assert(!hash.contains("BroadcastHashJoin"), hash)
+  }
+  // ---- the bucketed-layout cache ------------------------------------
+
+  private val agg = "cascades_exec_agg_clustered"
+  private val smj = "cascades_exec_smj_clustered"
+
+  private def rows(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().map(_.toSeq).toSeq
+
+  /** The clustered queries' rows from plain Spark over the parquet
+    * originals at `dir` (the bucketed tables hold exactly their rows).
+    */
+  private def oracle(dir: String, name: String): Seq[Seq[Any]] = {
+    import org.apache.spark.sql.functions.col
+    val customer = spark.read.parquet(s"$dir/customer.parquet")
+    rows(name match {
+      case `agg` => customer.groupBy("c_custkey").count()
+        .orderBy("c_custkey").limit(50)
+      case `smj` => customer
+        .join(spark.read.parquet(s"$dir/orders.parquet"),
+          col("c_custkey") === col("o_custkey"))
+        .select("c_custkey", "c_name", "o_orderkey")
+        .orderBy("o_orderkey").limit(100)
+    })
+  }
+
+  private def built(s: SparkSession, dir: String,
+      name: String): Seq[Seq[Any]] =
+    rows(CascadesExecOps.planFor(s, dir, name)._2)
+
+  /** A private copy of the sf0.001 tables the cascades catalog knows:
+    * new to every cache, so the first clustered build writes its layout.
+    */
+  private def copyOfSf(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-layout")
+    CascadesExecOps.schemaCat.keys.foreach(t => java.nio.file.Files.copy(
+      java.nio.file.Paths.get(s"$sfDir/$t.parquet"),
+      dir.resolve(s"$t.parquet")))
+    dir.toString
+  }
+
+  /** Bucketed-layout writes (`saveAsTable` of a `graft_bk_*` table)
+    * started while `body` runs, by table; flushed through the listener
+    * bus like [[jobsDuring]].
+    */
+  private def layoutWritesDuring(body: => Unit): Map[String, Int] = {
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart
+            if x.physicalPlanDescription
+              .contains("CreateDataSourceTableAsSelectCommand") =>
+          Seq("graft_bk_customer", "graft_bk_orders")
+            .filter(x.physicalPlanDescription.contains(_))
+            .foreach(writes.add)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try jobsDuring(body)
+    finally spark.sparkContext.removeSparkListener(listener)
+    writes.asScala.groupBy(identity).map { case (t, ws) => t -> ws.size }
+  }
+
+  test("layout cache: a warm rebuild of agg_clustered reuses the written " +
+      "layout and launches no Spark job") {
+    assert(built(spark, d, agg) == oracle(d, agg))
+    var df: DataFrame = null
+    val jobs = jobsDuring {
+      df = CascadesExecOps.planFor(spark, d, agg)._2
+    }
+    assert(jobs == 0, s"a warm build launched $jobs job(s)")
+    assert(rows(df) == oracle(d, agg))
+  }
+
+  test("layout cache: a scale switch through another session's rewrite " +
+      "leaves no stale relation behind") {
+    // agg in s, smj (which rewrites graft_bk_customer in its own
+    // newSession()) at another scale, then agg in s at that scale: s's
+    // session catalog must not serve its relation over deleted files
+    val s = spark.newSession()
+    assert(built(s, d, agg) == oracle(d, agg))
+    assert(built(s, sfDir, smj) == oracle(sfDir, smj))
+    assert(built(s, sfDir, agg) == oracle(sfDir, agg))
+  }
+
+  test("layout cache: a source overwritten in place rewrites the layout " +
+      "and the next build returns the new rows") {
+    import org.apache.spark.sql.functions.col
+    val dir = copyOfSf()
+    assert(built(spark, dir, agg) == oracle(dir, agg))
+    spark.read.parquet(s"$sfDir/customer.parquet")
+      .filter(col("c_custkey") % 3 === 0)
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/customer.parquet")
+    val after = oracle(dir, agg)
+    assert(after != oracle(sfDir, agg))
+    var got: Seq[Seq[Any]] = Nil
+    val writes = layoutWritesDuring { got = built(spark, dir, agg) }
+    assert(writes == Map("graft_bk_customer" -> 1), writes)
+    assert(got == after)
+  }
+
+  test("layout cache: after DROP TABLE or deletion of its directory, the " +
+      "next build writes the layout again and is correct") {
+    val want = oracle(d, agg)
+    assert(built(spark, d, agg) == want)
+    spark.sql("DROP TABLE graft_bk_customer")
+    assert(built(spark, d, agg) == want)
+    val loc = graft.ops.Tables.managedLocation(spark, "graft_bk_customer")
+    loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(loc, true)
+    assert(built(spark, d, agg) == want)
+    assert(layoutWritesDuring(built(spark, d, agg)).isEmpty)
+  }
+
+  test("a managed table is reset at its database's location: orphaned " +
+      "directories in a database outside the warehouse dir are deleted " +
+      "before agg_clustered and data_sink_bucketed write there") {
+    val s = spark.newSession()
+    val loc = java.nio.file.Files.createTempDirectory("graft-db")
+    s.sql(s"CREATE DATABASE graft_elsewhere LOCATION '${loc.toUri}'")
+    try {
+      s.sql("USE graft_elsewhere")
+      // what an earlier SparkContext's in-memory catalog leaves behind:
+      // table directories that no catalog entry owns
+      Seq("graft_bk_customer", "graft_bkt_docs", "graft_bkt_emb").foreach {
+        t => java.nio.file.Files.write(
+          java.nio.file.Files.createDirectories(loc.resolve(t))
+            .resolve("part-00000.parquet"), Array[Byte](1, 2, 3))
+      }
+      assert(built(s, sfDir, agg) == oracle(sfDir, agg))
+      assert(graft.SparkEntry.queries("data_sink_bucketed")(s, sfDir)
+        .collect().nonEmpty)
+      assert(s.catalog.listTables().collect().map(_.name).toSet ==
+        Set("graft_bk_customer", "graft_bkt_docs", "graft_bkt_emb"))
+    } finally {
+      s.sql("USE default")
+      s.sql("DROP DATABASE graft_elsewhere CASCADE")
+    }
+  }
+
+  test("layout cache: 4 threads building agg_clustered and smj_clustered, " +
+      "on one session and on two, all get the oracle's rows and each " +
+      "layout is written once") {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      Seq(1, 2).foreach { nSessions =>
+        val dir = copyOfSf()
+        val sessions = Seq.fill(nSessions)(spark.newSession())
+        val want = Seq(agg, smj).map(q => q -> oracle(dir, q)).toMap
+        val writes = layoutWritesDuring {
+          val tasks = (0 until 4).map { i =>
+            val s = sessions(i % nSessions)
+            val order = if (i % 2 == 0) Seq(agg, smj) else Seq(smj, agg)
+            pool.submit(new java.util.concurrent.Callable[Seq[Boolean]] {
+              def call(): Seq[Boolean] =
+                order.map(q => built(s, dir, q) == want(q))
+            })
+          }
+          tasks.foreach(t => assert(t.get().forall(identity)))
+        }
+        assert(writes == Map("graft_bk_customer" -> 1,
+          "graft_bk_orders" -> 1), s"$nSessions session(s): $writes")
+      }
+    } finally pool.shutdown()
   }
 }

@@ -457,7 +457,7 @@ class CascadesPropertySpec extends AnyFunSuite {
         order =
           if (seed % 2 == 0) OrderSpec.SortedBy.asc(Seq(Col("b")))
           else OrderSpec.AnyOrder)
-      val out = new CascadesOptimizer(Rules.fullJoinStrategyRules,
+      val out = new CascadesOptimizer(TestRules.fullJoinStrategyRules,
         costModel = new ClusterCostModel, stats = stats)
         .optimize(plan, req)
       assert(out.isDefined, s"seed $seed: no plan for\n${plan.explain()}")
@@ -473,7 +473,7 @@ class CascadesPropertySpec extends AnyFunSuite {
     var found = 0
     (1 to Trials).foreach { seed =>
       val plan = sample(genLayoutPlan(3), seed.toLong)
-      val out = new CascadesOptimizer(Rules.fullJoinStrategyRules,
+      val out = new CascadesOptimizer(TestRules.fullJoinStrategyRules,
         costModel = new ClusterCostModel, stats = stats)
         .optimize(plan).get
       def walk(n: PlanNode): Unit = {
@@ -513,8 +513,8 @@ class CascadesPropertySpec extends AnyFunSuite {
         assert(out.isDefined, s"seed $seed")
         memo.group(memo.root).winner(PhysicalPropertySet.default).get.cost
       }
-      val without = cost(Rules.joinStrategyRules)
-      val withSmj = cost(Rules.fullJoinStrategyRules)
+      val without = cost(TestRules.joinStrategyRules)
+      val withSmj = cost(TestRules.fullJoinStrategyRules)
       assert(withSmj <= without + 1e-9,
         s"seed $seed: SMJ rule worsened $without -> $withSmj")
     }

@@ -662,7 +662,7 @@ class CascadesSpec extends AnyFunSuite {
     val stats = TableStats(Map("fact" -> 1000000L, "dim" -> 10L))
     val plan = join(scan("fact"), scan("dim"), "f_k", "d_k")
     val (plain, plainCost) = bestWith(Rules.all, stats, plan)
-    val (chosen, chosenCost) = bestWith(Rules.joinStrategyRules, stats, plan)
+    val (chosen, chosenCost) = bestWith(TestRules.joinStrategyRules, stats, plan)
     // reference-faithful rule set: only the shuffled variant exists, and
     // the cluster model prices its two exchanges (2*(1e6+10)) on top of
     // probe + 2x build
@@ -688,7 +688,7 @@ class CascadesSpec extends AnyFunSuite {
     val stats = TableStats(Map("fact" -> 1000000L, "fact2" -> 900000L))
     val plan = join(scan("fact"), scan("fact2"), "f_k", "g_k")
     val (chosen, _) =
-      bestWith(Rules.joinStrategyRules, stats, plan)
+      bestWith(TestRules.joinStrategyRules, stats, plan)
     // replicating 9e5 rows W times (1.44e7) loses to shuffling both
     // sides once (3.8e6): the memo keeps BOTH physical members and the
     // winner comparison picks the exchange plan
@@ -703,7 +703,7 @@ class CascadesSpec extends AnyFunSuite {
       "small-but-wide build side (the threshold is byte-based, like " +
       "Spark's autoBroadcastJoinThreshold)") {
     def bestBytes(stats: TableStats, plan: PlanNode): PlanNode = {
-      val opt = new CascadesOptimizer(Rules.joinStrategyRules,
+      val opt = new CascadesOptimizer(TestRules.joinStrategyRules,
         costModel = new ByteWeightedClusterCostModel, stats = stats)
       opt.optimize(plan).get
     }
@@ -726,7 +726,7 @@ class CascadesSpec extends AnyFunSuite {
     // control: the ROW-count ClusterCostModel cannot see the width and
     // still broadcasts the wide dim — the flip is the byte axis, not
     // the stats plumbing
-    val (rowChosen, _) = bestWith(Rules.joinStrategyRules, wide, plan)
+    val (rowChosen, _) = bestWith(TestRules.joinStrategyRules, wide, plan)
     assert(rowChosen.op ==
       PhysicalBroadcastHashJoin(JoinType.Inner,
         EqCond(Col("f_k"), Col("d_k"))),
@@ -773,7 +773,7 @@ class CascadesSpec extends AnyFunSuite {
       bucketBy = Seq(Col("d_k")), sortBy = Seq(Col("d_k"))))
     val plan = join(fact, dim, "f_k", "d_k")
     val (chosen, cost) =
-      bestWith(Rules.fullJoinStrategyRules, stats, plan)
+      bestWith(TestRules.fullJoinStrategyRules, stats, plan)
     // the clustered layout delivers each side's required Hashed+SortedBy
     // at the scan, so the merge (1e6 + 1e5) beats the shuffled hash join
     // (2 exchanges + probe + 2x build = 3.4e6) and the broadcast variant
@@ -793,7 +793,7 @@ class CascadesSpec extends AnyFunSuite {
       "sorts + exchanges lose to one hash build)") {
     val stats = TableStats(Map("fact" -> 1000000L, "dim" -> 100000L))
     val plan = join(scan("fact"), scan("dim"), "f_k", "d_k")
-    val (chosen, _) = bestWith(Rules.fullJoinStrategyRules, stats, plan)
+    val (chosen, _) = bestWith(TestRules.fullJoinStrategyRules, stats, plan)
     // sorting 1e6 rows (n·log2 n ~ 2e7) dwarfs everything: the winner is
     // the broadcast hash join (2.6e6), same as without the SMJ rule —
     // the memo HOLDS the merge member, the comparison rejects it
@@ -812,7 +812,7 @@ class CascadesSpec extends AnyFunSuite {
     val plan = join(fact, scan("dim"), "f_k", "d_k")
     val req = PhysicalPropertySet(order = OrderSpec.SortedBy.asc(Seq(Col("f_k"))))
     val (chosen, cost) =
-      bestOrdered(Rules.fullJoinStrategyRules, stats, plan, req)
+      bestOrdered(TestRules.fullJoinStrategyRules, stats, plan, req)
     // merge delivers SortedBy(f_k) itself: no Sort above the join; the
     // fact side rides its layout; the dim side pays Sort(Exchange(scan))
     // (~1.9e6 for 1e5 rows). Every hash alternative must SORT THE JOIN
@@ -843,7 +843,7 @@ class CascadesSpec extends AnyFunSuite {
       bucketBy = Seq(Col("k")), sortBy = Seq(Col("k")))), "k", "x")
     val req = PhysicalPropertySet(order = OrderSpec.SortedBy.asc(Seq(Col("k"))))
     val (chosen, cost) =
-      bestOrdered(Rules.fullJoinStrategyRules, stats, plan, req)
+      bestOrdered(TestRules.fullJoinStrategyRules, stats, plan, req)
     // projections preserve row order, so the requirement pushes through
     // to the scan, whose layout delivers it: the enforcer's
     // Sort(Project(scan)) candidate (~2e7) loses to the sortless plan
@@ -857,7 +857,7 @@ class CascadesSpec extends AnyFunSuite {
     val reqDropped =
       PhysicalPropertySet(order = OrderSpec.SortedBy.asc(Seq(Col("y"))))
     val (viaSort, _) =
-      bestOrdered(Rules.fullJoinStrategyRules, stats, plan, reqDropped)
+      bestOrdered(TestRules.fullJoinStrategyRules, stats, plan, reqDropped)
     assert(viaSort.op == PhysicalSort(Seq(SortKey(Col("y")))),
       s"got:\n${viaSort.explain()}")
   }
@@ -872,7 +872,7 @@ class CascadesSpec extends AnyFunSuite {
       "SELECT a_k, b_x FROM a JOIN b ON a_k = b_k ORDER BY a_k",
       layouts = layouts)
     assert(req.order == OrderSpec.SortedBy.asc(Seq(Col("a_k"))))
-    val opt = new CascadesOptimizer(Rules.fullJoinStrategyRules,
+    val opt = new CascadesOptimizer(TestRules.fullJoinStrategyRules,
       costModel = new ClusterCostModel, stats = stats)
     val out = opt.optimize(plan, req).get
     // the ORDER BY pushes through the projection; the merge join
