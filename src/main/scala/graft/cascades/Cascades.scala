@@ -35,14 +35,14 @@ import scala.collection.mutable
   * result into its target group instead.
   */
 final class CascadesOptimizer(
-    rules: Seq[OptRule] = Rules.all,
-    costModel: CostModel = ConstantCostModel,
-    stats: StatsModel = NoStats,
+    rules: Seq[OptRule],
+    costModel: CostModel,
+    stats: StatsModel,
     /** Table → columns catalog for per-group provided-columns derivation
       * ([[Provenance]]); empty = no provenance, column-gated rules (join
       * associativity) abstain everywhere.
       */
-    columns: Map[String, Seq[String]] = Map.empty) {
+    columns: Map[String, Seq[String]]) {
 
   private sealed trait Task
   private final case class OptimizeGroup(

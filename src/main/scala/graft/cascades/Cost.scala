@@ -6,13 +6,14 @@ package graft.cascades
   * it (`dolomite/src/stat.rs:5-21`), so its `SimpleCostModel` is a constant
   * per operator (`cost/trivial.rs:9-30`) and provably cannot distinguish a
   * commuted join from the original (its own golden at
-  * `cascades/optimizer.rs:97-137` is side-agnostic). MiniCascades keeps the
-  * faithful [[ConstantCostModel]] AND completes the stub:
-  * [[StatsModel]] derives per-group output cardinality bottom-up and
-  * [[CardinalityCostModel]] prices operators by the rows they touch — which
-  * is exactly enough for `CommutateJoinRule` + cost search to put the small
-  * side of a hash join on the build side. (Spark's `plan.stats` is the
-  * production counterpart, used by [[graft.rules.Join2HashJoinStrategy]].)
+  * `cascades/optimizer.rs:97-137` is side-agnostic). The goldens keep the
+  * faithful constant model (`graft.TestRules.ConstantCostModel`), and
+  * MiniCascades completes the stub: [[StatsModel]] derives per-group
+  * output cardinality bottom-up and [[CardinalityCostModel]] prices
+  * operators by the rows they touch — which is exactly enough for
+  * `CommutateJoinRule` + cost search to put the small side of a hash join
+  * on the build side. (Spark's `plan.stats` is the production
+  * counterpart, used by [[graft.rules.Join2HashJoinStrategy]].)
   */
 trait CostModel {
   /** Cost of the operator itself, excluding inputs; `inputRows` are the
@@ -28,10 +29,6 @@ trait CostModel {
     */
   def operatorCost(op: PhysicalOp, inputRows: Seq[Long],
       inputWidths: Seq[Long]): Double = operatorCost(op, inputRows)
-}
-
-object ConstantCostModel extends CostModel {
-  def operatorCost(op: PhysicalOp, inputRows: Seq[Long]): Double = 1.0
 }
 
 /** Output-cardinality derivation: row counts per scan from a catalog,

@@ -66,8 +66,7 @@ final class Group(val id: Int) {
     }
 }
 
-final class Memo(stats: StatsModel = NoStats,
-    val columns: Map[String, Seq[String]] = Map.empty) {
+final class Memo(stats: StatsModel, val columns: Map[String, Seq[String]]) {
   val groups = mutable.ArrayBuffer[Group]()
   private val exprToGroup = mutable.Map[GroupExpr, Int]()
   var root: Int = -1

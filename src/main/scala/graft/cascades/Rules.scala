@@ -671,10 +671,10 @@ object Rules {
       Project2PhysicalProjectRule, Filter2PhysicalFilterRule,
       Agg2HashAggRule, SplitAggRule, TopK2PhysicalTopKRule)
   val all: Seq[OptRule] = rewriteRules ++ explorationRules ++ implementationRules
-  /** `all` + associativity: join-order enumeration. Not in `all`, the
-    * optimizer's constructor default, which stays reference-faithful
-    * (commutation only). Needs a column catalog on the optimizer, without
-    * which the rule abstains on every binding. With
+  /** `all` + associativity: join-order enumeration. Not in `all`, which
+    * stays reference-faithful (commutation only) for the goldens'
+    * configuration (`graft.TestRules.golden`). Needs a column catalog on
+    * the optimizer, without which the rule abstains on every binding. With
     * [[Join2BroadcastJoinRule]] added, this is the search every executed
     * query runs (`CascadesExecOps.defaultRules`). The join-strategy sets
     * without associativity, which only the specs search with, live in

@@ -17,7 +17,7 @@ import graft.functions.ColumnBridge
   * gate: each query here parses mini-SQL ([[SqlFrontend]]), optimizes in
   * the cascades search against REAL parquet-footer statistics
   * ([[ParquetStats]] — `stat.rs:5-21` computed, not stubbed), lowers the
-  * winner to DataFrame operators ([[Execution]], the `to_df_physical`
+  * winner to one Catalyst plan ([[Execution.lower]], the `to_df_physical`
   * analog), executes on Spark, and is row/schema/hash-compared against
   * DuckDB running the equivalent ANSI SQL. [[graft.CascadesExecSpec]]
   * additionally pins that the EXECUTED SparkPlan carries the winner's
@@ -55,39 +55,6 @@ object CascadesExecOps {
   /** Every table the catalog knows. */
   private val tables = schemaCat.keys.toSeq
 
-  /** Parse → optimize (cascades, footer stats) → lower → DataFrame.
-    * Exposed for the plan-shape spec, which needs the winner too.
-    * `layouts` marks tables CLUSTERED for the frontend/search (Spark's
-    * bucketed+sorted tables); `catalogOverride` supplies the matching
-    * physical DataFrames (e.g. `spark.table` of a bucketed table) so the
-    * lowered plan actually READS the layout the winner exploited.
-    */
-  def planAndLower(s: SparkSession, d: String, sql: String,
-      rules: Seq[OptRule], cost: CostModel,
-      layouts: Map[String, (Seq[Col], Seq[Col])] = Map.empty,
-      catalogOverride: Map[String, DataFrame] = Map.empty,
-      /** Heuristic REWRITE pass before the cost search — the reference's
-        * own two-stage pipeline (HEP rewrite, then cascades): filter
-        * pushdown through joins runs here because the cascades binder's
-        * opaque group handles make the provenance walk abstain.
-        */
-      hepRules: Seq[OptRule] = defaultHep,
-      /** Replaces the footer-stats model: [[planFor]] passes each
-        * query's [[stats]] (the adaptive query's carry runtime-observed
-        * filter rows).
-        */
-      statsOverride: Option[StatsModel] = None)
-      : (PlanNode, DataFrame) = {
-    val stats = statsOverride.getOrElse(ParquetStats.fromDir(d, tables))
-    val (parsed, required) = SqlFrontend.parseQuery(sql, schemaCat, layouts)
-    val winner = search(parsed, required, stats, rules, hepRules, cost)
-      .getOrElse(sys.error(s"cascades found no winner for: $sql"))
-    val base = tableCatalog(s, d)
-    val catalog: String => DataFrame =
-      name => catalogOverride.getOrElse(name, base(name))
-    (winner, Execution.lower(winner, catalog))
-  }
-
   /** The testdata tables at `d` by name, each call a fresh read. */
   def tableCatalog(s: SparkSession, d: String): String => DataFrame = {
     val t = Tables(s, d)
@@ -101,9 +68,9 @@ object CascadesExecOps {
     }
   }
 
-  /** `src` (at scale dir `d`) as the managed table `table`, bucketed 8
-    * ways on `key` and sorted within buckets by it, ONE FILE PER BUCKET
-    * (the repartition on the bucket key makes each writer task own
+  /** `src` (at scale dir `d`) as the managed table `graft_bk_<src>`,
+    * bucketed 8 ways on `key` and sorted within buckets by it, ONE FILE PER
+    * BUCKET (the repartition on the bucket key makes each writer task own
     * exactly one bucket — the layout Spark's scan trusts for both Hashed
     * and SortedBy, so a merge join over two such tables plans with ZERO
     * exchanges and ZERO sorts). This is the write-side-paid-once
@@ -135,7 +102,8 @@ object CascadesExecOps {
     * replaced.
     */
   private def bucketedTable(s: SparkSession, d: String, src: String,
-      key: String, table: String): DataFrame = {
+      key: String): DataFrame = {
+    val table = s"graft_bk_$src"
     val want = layoutKey(s, d, src, key, table)
     def current =
       Option(writtenLayouts.get(want.location)).filter(_.holds(s, want))
@@ -191,12 +159,7 @@ object CascadesExecOps {
   private def writeLayout(s: SparkSession, d: String, src: String,
       table: String, want: LayoutKey): Layout = {
     import org.apache.spark.sql.functions.col
-    val t = Tables(s, d)
-    val df = src match {
-      case "customer" => t.customer
-      case "orders"   => t.orders
-      case other      => sys.error(s"no bucketed source for $other")
-    }
+    val df = tableCatalog(s, d)(src)
     Tables.resetManagedTable(s, table)
     df.repartition(Buckets, col(want.bucketBy))
       .write.mode("overwrite").format("parquet")
@@ -221,10 +184,13 @@ object CascadesExecOps {
     Seq(Rules.PushFilterThroughJoinRule(schemaCat))
 
   /** HEP rewrite, then the cascades search priced on `stats`: the one
-    * route from a parsed plan to a winner. [[planAndLower]] and
-    * [[graft.rules.CascadesJoinHints]] both search through it.
+    * route from a parsed plan to a winner. [[planFor]],
+    * [[graft.rules.CascadesJoinHints]] and the specs all search through it.
+    * The two stages are the reference's own pipeline; filter pushdown
+    * through joins runs in the HEP pass because the cascades binder's
+    * opaque group handles make the provenance walk abstain.
     */
-  private[graft] def search(logical: PlanNode,
+  def search(logical: PlanNode,
       required: PhysicalPropertySet, stats: StatsModel,
       rules: Seq[OptRule] = defaultRules, hepRules: Seq[OptRule] = defaultHep,
       cost: CostModel = new ClusterCostModel): Option[PlanNode] = {
@@ -280,53 +246,15 @@ object CascadesExecOps {
     } else footer
   }
 
-  /** Full pipeline for a named exec query, bucketed-table setup included
-    * — shared by [[queries]] and the plan-shape spec.
+  /** Full pipeline for a named exec query: parse its [[sqls]] with the
+    * clustered layouts it reads, run [[search]] once with its [[stats]],
+    * [[rulesFor]], [[hepFor]] and [[costModel]], and lower the winner
+    * through [[Execution.lower]] over [[tableCatalog]], each clustered
+    * table read from its bucketed layout. Shared by [[queries]] and the
+    * plan-shape spec.
     */
   def planFor(s: SparkSession, d: String,
       name: String): (PlanNode, DataFrame) = name match {
-    case "cascades_exec_agg_clustered" =>
-      // NOTE: runs with whatever bucketedTableScan ordering conf the
-      // session carries — aggregation needs only the HASHED half of the
-      // clustered layout, which Spark trusts unconditionally
-      val cust = bucketedTable(s, d, "customer", "c_custkey",
-        "graft_bk_customer")
-      searchAndLower(s, d, name,
-        layouts = Map("customer" ->
-          ((Seq(Col("c_custkey")), Seq(Col("c_custkey"))))),
-        catalogOverride = Map("customer" -> cust))
-    case "cascades_exec_smj_clustered" =>
-      // Spark 3.0+ hides bucketed-scan output ORDERING behind
-      // spark.sql.legacy.bucketedTableScan.outputOrdering (SPARK-28595:
-      // with several files per bucket the claim would be wrong, and
-      // listing files at planning time to check costs). graft's bucketed
-      // layout doctrine is ONE FILE PER BUCKET by construction (the
-      // repartition in [[bucketedTable]]), so the write-time sort is
-      // always trustworthy at read — the conf makes Spark trust it, and
-      // the executed SMJ carries ZERO sorts as well as zero exchanges
-      // (r8 shipped two partition-local sorts here; VERDICT r8 #1).
-      // Scoped to a DEDICATED child session (ADVICE r9): the claim is
-      // only sound under graft's one-file-per-bucket doctrine, so it
-      // must not leak to later queries in the caller's session, where a
-      // future multi-file bucketed table would silently skip required
-      // sorts. newSession shares the SparkContext and the external
-      // catalog (saveAsTable tables are visible) but carries its own
-      // SQLConf; the returned DataFrame stays bound to it, so the
-      // execution-time planner still sees the conf — restoring a
-      // session-wide set after lazy planAndLower would not.
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering",
-        "true")
-      val cust = bucketedTable(s2, d, "customer", "c_custkey",
-        "graft_bk_customer")
-      val ord = bucketedTable(s2, d, "orders", "o_custkey",
-        "graft_bk_orders")
-      searchAndLower(s2, d, name,
-        layouts = Map(
-          "customer" ->
-            ((Seq(Col("c_custkey")), Seq(Col("c_custkey")))),
-          "orders" -> ((Seq(Col("o_custkey")), Seq(Col("o_custkey"))))),
-        catalogOverride = Map("customer" -> cust, "orders" -> ord))
     case "cascades_exec_strategy" =>
       // The DFQueryPlanner integration pattern end to end (reference
       // planner.rs:22-56): CATALYST builds this query — no SqlFrontend,
@@ -352,15 +280,60 @@ object CascadesExecOps {
         "customer", "nation", "c_nationkey", "n_nationkey")
         .getOrElse(sys.error("cascades found no winner for the strategy query"))
       (winner, df)
-    case _ => searchAndLower(s, d, name)
+    case _ =>
+      // smj_clustered builds on a child session that trusts the sort of
+      // its bucketed layouts.
+      // Spark 3.0+ hides bucketed-scan output ORDERING behind
+      // spark.sql.legacy.bucketedTableScan.outputOrdering (SPARK-28595:
+      // with several files per bucket the claim would be wrong, and
+      // listing files at planning time to check costs). graft's bucketed
+      // layout doctrine is ONE FILE PER BUCKET by construction (the
+      // repartition in [[bucketedTable]]), so the write-time sort is
+      // always trustworthy at read — the conf makes Spark trust it, and
+      // the executed SMJ carries ZERO sorts as well as zero exchanges
+      // (r8 shipped two partition-local sorts here; VERDICT r8 #1).
+      // Scoped to a DEDICATED child session (ADVICE r9): the claim is
+      // only sound under graft's one-file-per-bucket doctrine, so it
+      // must not leak to later queries in the caller's session, where a
+      // future multi-file bucketed table would silently skip required
+      // sorts. newSession shares the SparkContext and the external
+      // catalog (saveAsTable tables are visible) but carries its own
+      // SQLConf; the returned DataFrame stays bound to it, so the
+      // execution-time planner still sees the conf — restoring a
+      // session-wide set after the lazy lowering would not.
+      val session =
+        if (name != "cascades_exec_smj_clustered") s
+        else {
+          val s2 = s.newSession()
+          s2.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering",
+            "true")
+          s2
+        }
+      val clustered = clusteredFor(name)
+      val bucketed = clustered.map { case (t, key) =>
+        t -> bucketedTable(session, d, t, key) }
+      val layouts = clustered.map { case (t, key) =>
+        t -> ((Seq(Col(key)), Seq(Col(key)))) }
+      val (parsed, required) =
+        SqlFrontend.parseQuery(sqls(name), schemaCat, layouts)
+      val winner = search(parsed, required, stats(session, d, name),
+        rulesFor(name), hepFor(name), costModel(name))
+        .getOrElse(sys.error(s"cascades found no winner for: ${sqls(name)}"))
+      val catalog = tableCatalog(session, d)
+      (winner, Execution.lower(winner, t => bucketed.getOrElse(t, catalog(t))))
   }
 
-  private def searchAndLower(s: SparkSession, d: String, name: String,
-      layouts: Map[String, (Seq[Col], Seq[Col])] = Map.empty,
-      catalogOverride: Map[String, DataFrame] = Map.empty)
-      : (PlanNode, DataFrame) =
-    planAndLower(s, d, sqls(name), rulesFor(name), costModel(name),
-      layouts, catalogOverride, hepFor(name), Some(stats(s, d, name)))
+  /** The clustered layouts a query reads, table → bucket-and-sort key.
+    * agg_clustered runs with whatever bucketedTableScan ordering conf the
+    * session carries: aggregation needs only the HASHED half of the
+    * layout, which Spark trusts unconditionally.
+    */
+  private def clusteredFor(name: String): Map[String, String] = name match {
+    case "cascades_exec_agg_clustered" => Map("customer" -> "c_custkey")
+    case "cascades_exec_smj_clustered" =>
+      Map("customer" -> "c_custkey", "orders" -> "o_custkey")
+    case _ => Map.empty
+  }
 
   /** The mini-SQL of each executed query (shared with the spec). */
   val sqls: Map[String, String] = Map(

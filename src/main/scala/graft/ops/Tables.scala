@@ -56,7 +56,7 @@ final class Tables(spark: SparkSession, dir: String) {
     *    size, so the old `bytes < cores × maxSplit` gate would have
     *    fired at ANY scale and shuffled a 100 TB table.
     *  - THE PARTITION COUNT IS BYTE-CAPPED: `min(cores, ceil(bytes /
-    *    chunk))` (chunk = `spark.graft.rebalance.chunkBytes`) instead of
+    *    chunk))` (chunk = [[Tables.DefaultChunkBytes]]) instead of
     *    a flat `repartition(cores)`, which put 32 partitions under a
     *    600 KB file at local[32] — every one of ~170 small consumers
     *    paid a 32-task wave for no kernel gain (driver r10: mm_binary_meta
@@ -85,8 +85,7 @@ final class Tables(spark: SparkSession, dir: String) {
       keys: Seq[String]): DataFrame = {
     val (bytes, nFiles) = size
     val cores = spark.sparkContext.defaultParallelism
-    val chunk = spark.conf
-      .get(Tables.RebalanceChunkKey, Tables.DefaultChunkBytes.toString).toLong
+    val chunk = Tables.DefaultChunkBytes
     val want = math.min(cores.toLong,
       math.max(1L, (bytes + chunk - 1) / chunk)).toInt
     val maxSplit = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
@@ -152,13 +151,10 @@ object Tables {
   def apply(spark: SparkSession, dir: String): Tables = new Tables(spark, dir)
 
   /** Chunk size (bytes) that caps the [[Tables.rebalanced]] partition
-    * count: partitions = min(cores, ceil(bytes / chunk)). The default is
-    * a measured local sweet spot (OPTIMIZATION_r11.md sweep at 8/32
-    * cores); a production deployment sizes it to the per-core kernel
-    * throughput of its hardware — larger chunk = fewer, bigger kernel
-    * partitions.
+    * count: partitions = min(cores, ceil(bytes / chunk)). A measured local
+    * sweet spot (OPTIMIZATION_r11.md sweep at 8/32 cores): a larger chunk
+    * gives fewer, bigger kernel partitions.
     */
-  val RebalanceChunkKey = "spark.graft.rebalance.chunkBytes"
   val DefaultChunkBytes: Long = 64L * 1024
 
   /** (total leaf-file bytes, leaf-file count) of a table path — correct

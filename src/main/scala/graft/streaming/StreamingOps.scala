@@ -667,7 +667,6 @@ object StreamingOps {
   val StatePartitionsKey = "spark.graft.streamStatePartitions"
 
   /** Input bytes per state-store partition when deriving the count. */
-  val StateChunkKey = "spark.graft.streamState.chunkBytes"
   val DefaultStateChunkBytes: Long = 32L * 1024 * 1024
 
   /** Scale-derived state-store partition count: `min(shuffle.partitions,
@@ -688,8 +687,7 @@ object StreamingOps {
     spark.conf.getOption(StatePartitionsKey).map(_.toInt).getOrElse {
       val (bytes, _) =
         graft.ops.Tables.dataSize(spark, s"$dir/$table.parquet")
-      val chunk = spark.conf
-        .get(StateChunkKey, DefaultStateChunkBytes.toString).toLong
+      val chunk = DefaultStateChunkBytes
       val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt
       math.max(1L, math.min(cap.toLong, (bytes + chunk - 1) / chunk)).toInt
     }

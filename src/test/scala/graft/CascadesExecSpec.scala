@@ -152,9 +152,12 @@ class CascadesExecSpec extends GraftSuite {
       "search alone picks a different winner") {
     def ops(p: PlanNode): Seq[Operator] = p.op +: p.inputs.flatMap(ops)
     def default(name: String,
-        layouts: Map[String, (Seq[Col], Seq[Col])] = Map.empty): PlanNode =
-      CascadesExecOps.planAndLower(spark, d, CascadesExecOps.sqls(name),
-        CascadesExecOps.defaultRules, new ClusterCostModel, layouts)._1
+        layouts: Map[String, (Seq[Col], Seq[Col])] = Map.empty): PlanNode = {
+      val (parsed, required) = SqlFrontend.parseQuery(
+        CascadesExecOps.sqls(name), CascadesExecOps.schemaCat, layouts)
+      CascadesExecOps.search(parsed, required,
+        CascadesExecOps.stats(spark, d, name)).get
+    }
     // without the merge join the clustered layouts cannot be exploited
     val (smj, _) =
       CascadesExecOps.planFor(spark, d, "cascades_exec_smj_clustered")
@@ -208,7 +211,7 @@ class CascadesExecSpec extends GraftSuite {
     val sql = CascadesExecOps.sqls("cascades_exec_broadcast_dim")
     val (logical, required) = SqlFrontend.parseQuery(sql)
     def joinOp(stats: StatsModel): Operator = {
-      val opt = new CascadesOptimizer(TestRules.joinStrategyRules,
+      val opt = TestRules.golden(TestRules.joinStrategyRules,
         costModel = new ClusterCostModel, stats = stats)
       val w = opt.optimize(logical, required).get
       def find(p: PlanNode): Option[Operator] = p.op match {
@@ -250,7 +253,7 @@ class CascadesExecSpec extends GraftSuite {
     }
     assert(hasFilterOverScan(pushed), pushed.explain())
     def joinOf(stats: StatsModel): Operator = {
-      val opt = new CascadesOptimizer(TestRules.joinStrategyRules,
+      val opt = TestRules.golden(TestRules.joinStrategyRules,
         costModel = new ClusterCostModel, stats = stats)
       val w = opt.optimize(pushed, required).get
       def find(p: PlanNode): Option[Operator] = p.op match {
@@ -317,7 +320,7 @@ class CascadesExecSpec extends GraftSuite {
     val pushed = new HepOptimizer(
       Seq(Rules.PushFilterThroughJoinRule(schemaCat))).optimize(parsed)
     def joinOf(stats: StatsModel): Operator = {
-      val opt = new CascadesOptimizer(TestRules.joinStrategyRules,
+      val opt = TestRules.golden(TestRules.joinStrategyRules,
         costModel = new ClusterCostModel, stats = stats)
       val w = opt.optimize(pushed, required).get
       def find(p: PlanNode): Option[Operator] = p.op match {
@@ -404,7 +407,7 @@ class CascadesExecSpec extends GraftSuite {
     val (logical, required) = SqlFrontend.parseQuery(sql)
     val stats = ParquetStats.fromDir(d, Seq("customer", "nation"))
     val model = new ClusterCostModel
-    val opt = new CascadesOptimizer(TestRules.joinStrategyRules,
+    val opt = TestRules.golden(TestRules.joinStrategyRules,
       costModel = model, stats = stats)
     val (winnerOpt, memo) = opt.optimizeWithMemo(logical, required)
     val winner = winnerOpt.get
@@ -479,7 +482,7 @@ class CascadesExecSpec extends GraftSuite {
       CascadesExecOps.sqls("cascades_exec_semi_join"),
       Map("customer" -> Seq("c_custkey", "c_name"),
         "orders" -> Seq("o_orderkey", "o_custkey")))
-    val opt = new CascadesOptimizer(TestRules.joinStrategyRules,
+    val opt = TestRules.golden(TestRules.joinStrategyRules,
       costModel = new ClusterCostModel, stats = blind)
     val w = opt.optimize(parsed, required).get
     def findJoin(p: PlanNode): Option[Operator] = p.op match {
@@ -534,7 +537,7 @@ class CascadesExecSpec extends GraftSuite {
     val pushed = new HepOptimizer(
       Seq(Rules.PushFilterThroughJoinRule(schemaCat))).optimize(
       SqlFrontend.parse(CascadesExecOps.sqls("cascades_exec_disjunction")))
-    val opt = new CascadesOptimizer(TestRules.joinStrategyRules,
+    val opt = TestRules.golden(TestRules.joinStrategyRules,
       costModel = new ClusterCostModel, stats = blind)
     val w = opt.optimize(pushed,
       PhysicalPropertySet.default).get
@@ -596,7 +599,7 @@ class CascadesExecSpec extends GraftSuite {
       Seq(Rules.PushFilterThroughJoinRule(schemaCat))).optimize(
       SqlFrontend.parse(
         CascadesExecOps.sqls("cascades_exec_string_filter")))
-    val opt = new CascadesOptimizer(TestRules.joinStrategyRules,
+    val opt = TestRules.golden(TestRules.joinStrategyRules,
       costModel = new ClusterCostModel, stats = blind)
     val w = opt.optimize(pushed, PhysicalPropertySet.default).get
     def findJoin(p: PlanNode): Option[Operator] = p.op match {
@@ -726,10 +729,14 @@ class CascadesExecSpec extends GraftSuite {
     // row-model counterfactual: the SAME SQL priced by row counts
     // broadcasts the 500-row build — pinning that the executed flip is
     // attributable to the byte axis, not the search or the stats
-    def rowModel(hepRules: Seq[OptRule]) = CascadesExecOps.planAndLower(
-      spark, d, CascadesExecOps.sqls("cascades_exec_wide_build"),
-      TestRules.joinStrategyRules, new ClusterCostModel,
-      hepRules = hepRules)._1
+    def rowModel(hepRules: Seq[OptRule]): PlanNode = {
+      val name = "cascades_exec_wide_build"
+      val (parsed, required) = SqlFrontend.parseQuery(
+        CascadesExecOps.sqls(name), CascadesExecOps.schemaCat)
+      CascadesExecOps.search(parsed, required,
+        CascadesExecOps.stats(spark, d, name), TestRules.joinStrategyRules,
+        hepRules, new ClusterCostModel).get
+    }
     val rowWinner = rowModel(CascadesExecOps.defaultHep)
     assert(ops(rowWinner).exists(_.isInstanceOf[PhysicalBroadcastHashJoin]),
       rowWinner.explain())
@@ -744,7 +751,7 @@ class CascadesExecSpec extends GraftSuite {
     val clustered = PlanNode(LogicalScan("customer", None,
       bucketBy = Seq(Col("c_custkey")), sortBy = Seq(Col("c_custkey"))))
     def optimize(req: PhysicalPropertySet): PlanNode =
-      new CascadesOptimizer(Rules.all,
+      TestRules.golden(Rules.all,
         costModel = new CardinalityCostModel, stats = stats)
         .optimize(clustered, req).get
     def sorts(p: PlanNode): Seq[PhysicalSort] = (p.op match {
@@ -1152,5 +1159,30 @@ class CascadesExecSpec extends GraftSuite {
           "graft_bk_orders" -> 1), s"$nSessions session(s): $writes")
       }
     } finally pool.shutdown()
+  }
+
+  test("session hygiene: building and collecting each cascades_exec_* " +
+      "query leaves its caller's conf, optimizer rules and strategies as " +
+      "they were; only the first build adds tables, all graft_bk_*") {
+    val s = spark.newSession()
+    def extras = (s.experimental.extraOptimizations,
+      s.experimental.extraStrategies)
+    def tables = s.catalog.listTables().collect().map(_.name).toSet
+    def buildAll(): Unit =
+      CascadesExecOps.sqls.keys.toSeq.sorted.foreach { name =>
+        val (conf, rules) = (s.conf.getAll.toSet, extras)
+        CascadesExecOps.planFor(s, sfDir, name)._2.collect()
+        val after = s.conf.getAll.toSet
+        assert(((after diff conf) ++ (conf diff after)).isEmpty,
+          s"$name changed the conf")
+        assert(extras == rules, s"$name changed the rules or strategies")
+      }
+    val initial = tables
+    buildAll()
+    val first = tables
+    assert((first -- initial).forall(_.startsWith("graft_bk_")),
+      first -- initial)
+    buildAll()
+    assert(tables == first)
   }
 }

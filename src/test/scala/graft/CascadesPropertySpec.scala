@@ -116,7 +116,7 @@ class CascadesPropertySpec extends AnyFunSuite {
   test("optimize is total over limit-free trees, physical-only output") {
     (1 to Trials).foreach { seed =>
       val plan = sample(genPlan(3, withLimit = false), seed.toLong)
-      val out = new CascadesOptimizer(
+      val out = TestRules.golden(
         costModel = new CardinalityCostModel, stats = stats).optimize(plan)
       assert(out.isDefined, s"seed $seed: no plan for\n${plan.explain()}")
       assert(physicalOps(out.get).forall(!_.isLogical),
@@ -128,7 +128,7 @@ class CascadesPropertySpec extends AnyFunSuite {
     "and solved plans hold no limit") {
     (1 to Trials).foreach { seed =>
       val plan = sample(genPlan(3, withLimit = true), seed.toLong)
-      val out = new CascadesOptimizer(
+      val out = TestRules.golden(
         costModel = new CardinalityCostModel, stats = stats).optimize(plan)
       assert(out.isDefined == allLimitsAbsorbable(plan),
         s"seed $seed: defined=${out.isDefined} but absorbable=" +
@@ -143,7 +143,7 @@ class CascadesPropertySpec extends AnyFunSuite {
     val req = PhysicalPropertySet(order = OrderSpec.SortedBy.asc(Seq(Col("a"))))
     (1 to Trials).foreach { seed =>
       val plan = sample(genPlan(3, withLimit = false), seed.toLong)
-      val out = new CascadesOptimizer(
+      val out = TestRules.golden(
         costModel = new CardinalityCostModel, stats = stats)
         .optimize(plan, req)
       assert(out.isDefined, s"seed $seed")
@@ -160,7 +160,7 @@ class CascadesPropertySpec extends AnyFunSuite {
       distribution = DistributionSpec.Hashed(Seq(Col("b"))))
     (1 to Trials).foreach { seed =>
       val plan = sample(genPlan(3, withLimit = false), seed.toLong)
-      val out = new CascadesOptimizer(
+      val out = TestRules.golden(
         costModel = new CardinalityCostModel, stats = stats)
         .optimize(plan, req)
       assert(out.isDefined, s"seed $seed")
@@ -179,7 +179,7 @@ class CascadesPropertySpec extends AnyFunSuite {
     val req = PhysicalPropertySet(distribution = DistributionSpec.Random)
     val plan = sample(genPlan(3, withLimit = false), 1L)
     val e = intercept[IllegalArgumentException] {
-      new CascadesOptimizer(
+      TestRules.golden(
         costModel = new CardinalityCostModel, stats = stats)
         .optimize(plan, req)
     }
@@ -189,7 +189,7 @@ class CascadesPropertySpec extends AnyFunSuite {
   test("optimum never costs more than the naive 1:1 implementation") {
     (1 to Trials).foreach { seed =>
       val plan = sample(genPlan(3, withLimit = false), seed.toLong)
-      val out = new CascadesOptimizer(
+      val out = TestRules.golden(
         costModel = new CardinalityCostModel, stats = stats).optimize(plan)
       assert(out.isDefined, s"seed $seed")
       val best = planCost(out.get)
@@ -457,7 +457,7 @@ class CascadesPropertySpec extends AnyFunSuite {
         order =
           if (seed % 2 == 0) OrderSpec.SortedBy.asc(Seq(Col("b")))
           else OrderSpec.AnyOrder)
-      val out = new CascadesOptimizer(TestRules.fullJoinStrategyRules,
+      val out = TestRules.golden(TestRules.fullJoinStrategyRules,
         costModel = new ClusterCostModel, stats = stats)
         .optimize(plan, req)
       assert(out.isDefined, s"seed $seed: no plan for\n${plan.explain()}")
@@ -473,7 +473,7 @@ class CascadesPropertySpec extends AnyFunSuite {
     var found = 0
     (1 to Trials).foreach { seed =>
       val plan = sample(genLayoutPlan(3), seed.toLong)
-      val out = new CascadesOptimizer(TestRules.fullJoinStrategyRules,
+      val out = TestRules.golden(TestRules.fullJoinStrategyRules,
         costModel = new ClusterCostModel, stats = stats)
         .optimize(plan).get
       def walk(n: PlanNode): Unit = {
@@ -507,7 +507,7 @@ class CascadesPropertySpec extends AnyFunSuite {
     (1 to Trials).foreach { seed =>
       val plan = sample(genLayoutPlan(3), seed.toLong)
       def cost(rules: Seq[OptRule]): Double = {
-        val opt = new CascadesOptimizer(rules,
+        val opt = TestRules.golden(rules,
           costModel = new ClusterCostModel, stats = stats)
         val (out, memo) = opt.optimizeWithMemo(plan)
         assert(out.isDefined, s"seed $seed")

@@ -27,7 +27,7 @@ class CascadesSpec extends AnyFunSuite {
   // --- memo construction (memo.rs:851-994) ---
 
   test("memo seeds one group per distinct plan node, bottom-up") {
-    val memo = new Memo
+    val memo = new Memo(NoStats, Map.empty)
     val root = memo.insertPlan(join(scan("t1"), scan("t2"), "c1", "c2"))
     assert(memo.groups.size == 3)
     assert(memo.group(root).logicalExprs.size == 1)
@@ -36,7 +36,7 @@ class CascadesSpec extends AnyFunSuite {
   }
 
   test("memo dedups identical expressions into one group") {
-    val memo = new Memo
+    val memo = new Memo(NoStats, Map.empty)
     memo.insertPlan(join(scan("t1"), scan("t1"), "a", "b"))
     // scan(t1) appears twice but is one group expression
     assert(memo.groups.size == 2)
@@ -44,7 +44,7 @@ class CascadesSpec extends AnyFunSuite {
 
   test("duplicate-group detection: a rule result is aliased into its " +
       "target group") {
-    val memo = new Memo
+    val memo = new Memo(NoStats, Map.empty)
     val g1 = memo.insertPlan(scan("t1"))
     val g2 = memo.insertPlan(scan("t2"))
     // a rule claims scan(t2) is equivalent to group g1:
@@ -60,7 +60,7 @@ class CascadesSpec extends AnyFunSuite {
   // --- binding (binding.rs:125-318) ---
 
   test("binding: wildcard children bind as group handles") {
-    val memo = new Memo
+    val memo = new Memo(NoStats, Map.empty)
     val root = memo.insertPlan(join(scan("t1"), scan("t2"), "c1", "c2"))
     val e = memo.group(root).logicalExprs.head
     val bound = Binding.bindExpr(memo, e, Rules.CommutateJoinRule.pattern)
@@ -71,7 +71,7 @@ class CascadesSpec extends AnyFunSuite {
   }
 
   test("binding: nested pattern takes cartesian product over group members") {
-    val memo = new Memo
+    val memo = new Memo(NoStats, Map.empty)
     val root = memo.insertPlan(limit(10, limit(5, scan("t1"))))
     // add a second equivalent member to the inner limit group
     val innerGroup = memo.group(root).logicalExprs.head.inputs.head
@@ -88,7 +88,7 @@ class CascadesSpec extends AnyFunSuite {
 
   test("cascades implements join(scan,scan) as hash join over table scans") {
     val plan = join(scan("t1"), scan("t2"), "c1", "c2")
-    val out = new CascadesOptimizer().optimize(plan)
+    val out = TestRules.golden().optimize(plan)
     assert(out.isDefined)
     val p = out.get
     p match {
@@ -103,7 +103,7 @@ class CascadesSpec extends AnyFunSuite {
 
   test("cascades pushes limit into scan then implements (golden limit case)") {
     val plan = limit(10, project(limit(5, scan("t1")), "f1"))
-    val out = new CascadesOptimizer().optimize(plan)
+    val out = TestRules.golden().optimize(plan)
     assert(out.isDefined)
     out.get match {
       case PlanNode(PhysicalProject(_),
@@ -113,9 +113,9 @@ class CascadesSpec extends AnyFunSuite {
   }
 
   test("cascades cost: join plan costs 3.0 under the constant model") {
-    val memo = new Memo
+    val memo = new Memo(NoStats, Map.empty)
     val plan = join(scan("t1"), scan("t2"), "c1", "c2")
-    val opt = new CascadesOptimizer()
+    val opt = TestRules.golden()
     // optimize and re-derive cost by walking: 1 join + 2 scans = 3.0
     val out = opt.optimize(plan).get
     def countOps(p: PlanNode): Int = 1 + p.inputs.map(countOps).sum
@@ -126,7 +126,7 @@ class CascadesSpec extends AnyFunSuite {
     // no physical Limit exists (operator/physical.rs:15-20): a limit that
     // cannot reach a scan cannot be implemented — faithful to the reference.
     val plan = limit(3, join(scan("t1"), scan("t2"), "c1", "c2"))
-    assert(new CascadesOptimizer().optimize(plan).isEmpty)
+    assert(TestRules.golden().optimize(plan).isEmpty)
   }
 
   // --- enforcers (the completed properties/physical.rs:16-24 stub) ---
@@ -134,7 +134,7 @@ class CascadesSpec extends AnyFunSuite {
   test("requiring sorted output inserts PhysicalSort above the hash join") {
     val plan = join(scan("t1"), scan("t2"), "c1", "c2")
     val req = PhysicalPropertySet(order = OrderSpec.SortedBy.asc(Seq(Col("c1"))))
-    val out = new CascadesOptimizer().optimize(plan, req)
+    val out = TestRules.golden().optimize(plan, req)
     assert(out.isDefined)
     out.get match {
       case PlanNode(PhysicalSort(Seq(SortKey(Col("c1"), true, true))),
@@ -142,14 +142,14 @@ class CascadesSpec extends AnyFunSuite {
       case other => fail(s"expected Sort over HashJoin:\n${other.explain()}")
     }
     // the same search without the requirement must NOT pay for a sort
-    val unordered = new CascadesOptimizer().optimize(plan).get
+    val unordered = TestRules.golden().optimize(plan).get
     assert(!unordered.explain().contains("PhysicalSort"))
   }
 
   test("enforcer costs still prune: sorted requirement adds sort cost once") {
     val plan = join(scan("t1"), scan("t2"), "c1", "c2")
     val req = PhysicalPropertySet(order = OrderSpec.SortedBy.asc(Seq(Col("c1"))))
-    val (out, memo) = new CascadesOptimizer().optimizeWithMemo(plan, req)
+    val (out, memo) = TestRules.golden().optimizeWithMemo(plan, req)
     assert(out.isDefined)
     val sorted = memo.group(memo.root).winner(req).get
     val plain = memo.group(memo.root).winner(PhysicalPropertySet.default).get
@@ -163,7 +163,7 @@ class CascadesSpec extends AnyFunSuite {
     val plan = scan("t1")
     val req = PhysicalPropertySet(
       distribution = DistributionSpec.Hashed(Seq(Col("c1"))))
-    val out = new CascadesOptimizer().optimize(plan, req)
+    val out = TestRules.golden().optimize(plan, req)
     assert(out.isDefined)
     out.get match {
       case PlanNode(PhysicalExchange(Seq(Col("c1"))),
@@ -171,13 +171,13 @@ class CascadesSpec extends AnyFunSuite {
       case other => fail(s"expected Exchange over TableScan:\n${other.explain()}")
     }
     // the same search without the requirement must NOT pay for an exchange
-    val plain = new CascadesOptimizer().optimize(plan).get
+    val plain = TestRules.golden().optimize(plan).get
     assert(!plain.explain().contains("PhysicalExchange"))
   }
 
   test("requiring singleton distribution inserts a gather exchange") {
     val req = PhysicalPropertySet(distribution = DistributionSpec.Singleton)
-    val out = new CascadesOptimizer().optimize(scan("t1"), req).get
+    val out = TestRules.golden().optimize(scan("t1"), req).get
     out match {
       case PlanNode(PhysicalExchange(Nil), Seq(_)) =>
       case other => fail(s"expected gather Exchange:\n${other.explain()}")
@@ -189,7 +189,7 @@ class CascadesSpec extends AnyFunSuite {
     val plan = join(scan("t1"), scan("t2"), "c1", "c2")
     val req = PhysicalPropertySet(
       distribution = DistributionSpec.Hashed(Seq(Col("c1"))))
-    val (out, memo) = new CascadesOptimizer().optimizeWithMemo(plan, req)
+    val (out, memo) = TestRules.golden().optimizeWithMemo(plan, req)
     assert(out.isDefined)
     val hashed = memo.group(memo.root).winner(req).get
     val plain = memo.group(memo.root).winner(PhysicalPropertySet.default).get
@@ -208,7 +208,7 @@ class CascadesSpec extends AnyFunSuite {
       Seq(scan("t1")))
     val req = PhysicalPropertySet(
       distribution = DistributionSpec.Hashed(Seq(Col("c1"))))
-    val opt = new CascadesOptimizer(
+    val opt = TestRules.golden(
       costModel = new CardinalityCostModel,
       stats = TableStats(Map("t1" -> 1000L)))
     val out = opt.optimize(plan, req).get
@@ -231,7 +231,7 @@ class CascadesSpec extends AnyFunSuite {
     val plan = join(scan("t1"), scan("t2"), "c1", "c2")
     val req = PhysicalPropertySet(
       distribution = DistributionSpec.Hashed(Seq(Col("c2"))))
-    val out = new CascadesOptimizer().optimize(plan, req).get
+    val out = TestRules.golden().optimize(plan, req).get
     def walk(p: PlanNode): Unit = p.op match {
       case PhysicalHashJoin(_, cond) =>
         p.inputs.head.op match {
@@ -257,7 +257,7 @@ class CascadesSpec extends AnyFunSuite {
     // probe-side key: pushdown IS legal, and exactly one exchange appears
     val reqProbe = PhysicalPropertySet(
       distribution = DistributionSpec.Hashed(Seq(Col("c1"))))
-    val probe = new CascadesOptimizer().optimize(plan, reqProbe).get
+    val probe = TestRules.golden().optimize(plan, reqProbe).get
     assert(countOcc(probe.explain(), "PhysicalExchange") == 1, probe.explain())
   }
 
@@ -266,7 +266,7 @@ class CascadesSpec extends AnyFunSuite {
     // single-partition — the only legal Singleton plan gathers the output
     val plan = join(scan("t1"), scan("t2"), "c1", "c2")
     val req = PhysicalPropertySet(distribution = DistributionSpec.Singleton)
-    val out = new CascadesOptimizer().optimize(plan, req).get
+    val out = TestRules.golden().optimize(plan, req).get
     out match {
       case PlanNode(PhysicalExchange(Nil),
           Seq(PlanNode(PhysicalHashJoin(_, _), _))) =>
@@ -279,7 +279,7 @@ class CascadesSpec extends AnyFunSuite {
     val req = PhysicalPropertySet(
       distribution = DistributionSpec.Hashed(Seq(Col("c1"))),
       order = OrderSpec.SortedBy.asc(Seq(Col("c1"))))
-    val out = new CascadesOptimizer().optimize(plan, req).get
+    val out = TestRules.golden().optimize(plan, req).get
     // an exchange destroys order, so the only correct stacking is
     // Sort(...Exchange...) — sort at the root, exchange somewhere below
     out match {
@@ -296,7 +296,7 @@ class CascadesSpec extends AnyFunSuite {
 
   test("memo derives group cardinalities bottom-up from table stats") {
     val stats = TableStats(Map("t1" -> 10000L))
-    val memo = new Memo(stats)
+    val memo = new Memo(stats, Map.empty)
     val root = memo.insertPlan(
       limit(7, PlanNode(LogicalFilter(EqCond(Col("a"), Col("b")), Nil),
         Seq(scan("t1")))))
@@ -315,7 +315,7 @@ class CascadesSpec extends AnyFunSuite {
     // 10-row table is built and the 10000-row table probes
     val stats = TableStats(Map("small" -> 10L, "big" -> 10000L))
     val plan = join(scan("small"), scan("big"), "c1", "c2")
-    val opt = new CascadesOptimizer(
+    val opt = TestRules.golden(
       costModel = new CardinalityCostModel, stats = stats)
     val out = opt.optimize(plan)
     assert(out.isDefined)
@@ -337,7 +337,7 @@ class CascadesSpec extends AnyFunSuite {
     val stats = TableStats(Map("small" -> 10L, "big" -> 10000L))
     val plan = join(scan("small"), scan("big"), "c1", "c2")
     val req = PhysicalPropertySet(order = OrderSpec.SortedBy.asc(Seq(Col("c2"))))
-    val out = new CascadesOptimizer(
+    val out = TestRules.golden(
       costModel = new CardinalityCostModel, stats = stats)
       .optimize(plan, req)
     assert(out.isDefined)
@@ -631,7 +631,7 @@ class CascadesSpec extends AnyFunSuite {
     assert(Rules.JoinAssociativityRule(
       bindRoot(dup), new MemoContext(dup)).isEmpty)
     // abstains: no column catalog — provenance unknown, never guessed
-    val bare = new Memo(chainStats)
+    val bare = new Memo(chainStats, Map.empty)
     bare.insertPlan(chainPlan("b_x", "c_x"))
     assert(Rules.JoinAssociativityRule(
       bindRoot(bare), new MemoContext(bare)).isEmpty)
@@ -650,7 +650,7 @@ class CascadesSpec extends AnyFunSuite {
 
   private def bestWith(rules: Seq[OptRule], stats: TableStats,
       plan: PlanNode): (PlanNode, Double) = {
-    val opt = new CascadesOptimizer(rules,
+    val opt = TestRules.golden(rules,
       costModel = new ClusterCostModel, stats = stats)
     val (out, memo) = opt.optimizeWithMemo(plan)
     (out.get,
@@ -703,7 +703,7 @@ class CascadesSpec extends AnyFunSuite {
       "small-but-wide build side (the threshold is byte-based, like " +
       "Spark's autoBroadcastJoinThreshold)") {
     def bestBytes(stats: TableStats, plan: PlanNode): PlanNode = {
-      val opt = new CascadesOptimizer(TestRules.joinStrategyRules,
+      val opt = TestRules.golden(TestRules.joinStrategyRules,
         costModel = new ByteWeightedClusterCostModel, stats = stats)
       opt.optimize(plan).get
     }
@@ -751,14 +751,14 @@ class CascadesSpec extends AnyFunSuite {
     assert(Rules.Join2BroadcastJoinRule(
       Node(LogicalJoin(JoinType.Full, EqCond(Col("a"), Col("b"))),
         Seq(GroupHandle(0), GroupHandle(1))),
-      new MemoContext(new Memo)).isEmpty)
+      new MemoContext(new Memo(NoStats, Map.empty))).isEmpty)
   }
 
   // --- sort-merge join + interesting orders (clustered scan layouts) ---
 
   private def bestOrdered(rules: Seq[OptRule], stats: TableStats,
       plan: PlanNode, req: PhysicalPropertySet): (PlanNode, Double) = {
-    val opt = new CascadesOptimizer(rules,
+    val opt = TestRules.golden(rules,
       costModel = new ClusterCostModel, stats = stats)
     val (out, memo) = opt.optimizeWithMemo(plan, req)
     (out.get, memo.group(memo.root).winner(req).get.cost)
@@ -872,7 +872,7 @@ class CascadesSpec extends AnyFunSuite {
       "SELECT a_k, b_x FROM a JOIN b ON a_k = b_k ORDER BY a_k",
       layouts = layouts)
     assert(req.order == OrderSpec.SortedBy.asc(Seq(Col("a_k"))))
-    val opt = new CascadesOptimizer(TestRules.fullJoinStrategyRules,
+    val opt = TestRules.golden(TestRules.fullJoinStrategyRules,
       costModel = new ClusterCostModel, stats = stats)
     val out = opt.optimize(plan, req).get
     // the ORDER BY pushes through the projection; the merge join
@@ -897,7 +897,7 @@ class CascadesSpec extends AnyFunSuite {
     val plan = PlanNode(LogicalAggregate(Seq(Col("g")), aggs),
       Seq(scan("big")))
     val stats = TableStats(Map("big" -> 1000000L))
-    val opt = new CascadesOptimizer(Rules.all,
+    val opt = TestRules.golden(Rules.all,
       costModel = new CardinalityCostModel, stats = stats)
     val got = opt.optimize(plan).get
     // split: partial shrinks 1e6 -> 2e5 BEFORE the exchange; the
@@ -915,7 +915,7 @@ class CascadesSpec extends AnyFunSuite {
     // search keeps whichever implementation it saw first — but the
     // Complete form STILL gets its correctness exchange (child
     // requirements are not a cost feature)
-    val flat = new CascadesOptimizer(Rules.all).optimize(plan).get
+    val flat = TestRules.golden(Rules.all).optimize(plan).get
     def exchangedInput(p: PlanNode): Boolean = p.op match {
       case PhysicalHashAggregate(AggMode.Complete, _, _) =>
         p.inputs.head.op == PhysicalExchange(Seq(Col("g")))
@@ -932,7 +932,7 @@ class CascadesSpec extends AnyFunSuite {
     val plan = PlanNode(LogicalAggregate(Seq(Col("g")), aggs),
       Seq(scan("big")))
     val stats = TableStats(Map("big" -> 1000000L))
-    val opt = new CascadesOptimizer(Rules.all,
+    val opt = TestRules.golden(Rules.all,
       costModel = new CardinalityCostModel, stats = stats)
     val got = opt.optimize(plan, PhysicalPropertySet.default.copy(
       distribution = DistributionSpec.Hashed(Seq(Col("g"))))).get

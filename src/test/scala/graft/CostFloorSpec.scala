@@ -20,7 +20,7 @@ import graft.ops.CascadesExecOps
   *
   * Pure memo-level searches (no Spark session): parse, then
   * [[graft.ops.CascadesExecOps.search]] over a fixed catalog —
-  * [[graft.ops.CascadesExecOps.planAndLower]] without the lowering.
+  * [[graft.ops.CascadesExecOps.planFor]] without the lowering.
   */
 class CostFloorSpec extends AnyFunSuite {
 

@@ -59,7 +59,7 @@ class SqlFrontendSpec extends GraftSuite {
   }
 
   test("parser: sql through the full cascades search implements physically") {
-    val best = new CascadesOptimizer()
+    val best = TestRules.golden()
       .optimize(SqlFrontend.parse("SELECT f1 FROM t1 LIMIT 3", t1Schema))
     assert(best.isDefined)
     val s = best.get.explain()
@@ -216,7 +216,7 @@ class SqlFrontendSpec extends GraftSuite {
     // THROUGH the order-preserving projection and the sort lands below
     // it — same cost here (the projection is row-preserving), and the
     // shape a clustered layout could satisfy for free.
-    val opt = new CascadesOptimizer(Rules.all)
+    val opt = TestRules.golden(Rules.all)
     val got = opt.optimize(plan, req).get
     assert(got == PlanNode(PhysicalProject(Seq(Col("a"))),
       Seq(PlanNode(PhysicalSort(Seq(SortKey(Col("a")))),
@@ -265,7 +265,7 @@ class SqlFrontendSpec extends GraftSuite {
     assert(plan == PlanNode(LogicalAggregate(Seq(Col("g")), aggs),
       Seq(PlanNode(LogicalFilter(EqCond(Col("g"), Col("h")), Nil),
         Seq(PlanNode(LogicalScan("big")))))), plan.explain())
-    val opt = new CascadesOptimizer(Rules.all,
+    val opt = TestRules.golden(Rules.all,
       costModel = new CardinalityCostModel,
       stats = TableStats(Map("big" -> 1000000L)))
     val got = opt.optimize(plan).get

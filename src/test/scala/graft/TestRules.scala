@@ -1,9 +1,11 @@
 package graft
 
-import graft.cascades.OptRule
+import graft.cascades._
 import graft.cascades.Rules._
 
-/** Rule sets that only the specs search with. */
+/** Rule sets, a cost model and an optimizer configuration that only the
+  * specs search with.
+  */
 object TestRules {
   /** `all` + the broadcast join implementation: join-STRATEGY enumeration.
     * Not in `all`, which stays reference-faithful (one physical join), and
@@ -22,4 +24,20 @@ object TestRules {
     */
   val fullJoinStrategyRules: Seq[OptRule] =
     joinStrategyRules :+ Join2SortMergeJoinRule
+
+  /** The reference's `SimpleCostModel` (`cost/trivial.rs:9-30`): every
+    * operator costs 1, so a plan's cost is its operator count.
+    */
+  object ConstantCostModel extends CostModel {
+    def operatorCost(op: PhysicalOp, inputRows: Seq[Long]): Double = 1.0
+  }
+
+  /** The goldens' optimizer: the reference-faithful `all`, the constant
+    * model, no statistics and no column catalog, unless a spec says
+    * otherwise.
+    */
+  def golden(rules: Seq[OptRule] = all,
+      costModel: CostModel = ConstantCostModel, stats: StatsModel = NoStats,
+      columns: Map[String, Seq[String]] = Map.empty): CascadesOptimizer =
+    new CascadesOptimizer(rules, costModel, stats, columns)
 }
