@@ -15,26 +15,12 @@ SF_DIR="${1:-/root/testdata/sf0.1}"
 CPUS="${2:-4}"
 REPEATS="${3:-3}"
 
-CLASSES="target/scala-2.13/classes"
-[ -d "$CLASSES" ] || { echo "run 'sbt compile' first" >&2; exit 1; }
-
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+. scripts/jvm.sh
 
 exec env \
   SPARK_GRAFT_SF_DIR="$SF_DIR" \
   SPARK_GRAFT_CPUS="$CPUS" \
   SPARK_GRAFT_REPEATS="$REPEATS" \
-  SPARK_LOCAL_IP=127.0.0.1 \
-  java $ADD_OPENS \
+  "${GRAFT_JAVA[@]}" \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
-  -cp "$CLASSES:/opt/spark/jars/*" \
   graft.Bench

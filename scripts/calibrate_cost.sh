@@ -10,24 +10,10 @@ cd "$(dirname "$0")/.."
 SF_DIR="${1:-/tmp/graft_sf1}"
 REPEATS="${2:-5}"
 
-CLASSES="target/scala-2.13/classes"
-[ -d "$CLASSES" ] || { echo "run 'sbt compile' first" >&2; exit 1; }
-
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+. scripts/jvm.sh
 
 exec env \
   SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
-  SPARK_LOCAL_IP=127.0.0.1 \
-  java $ADD_OPENS \
+  "${GRAFT_JAVA[@]}" \
   -Xmx"${SPARK_DRIVER_MEM:-48g}" \
-  -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
-  -cp "$CLASSES:/opt/spark/jars/*" \
   graft.tools.CalibrateCost "$SF_DIR" "$REPEATS"

@@ -16,25 +16,14 @@ SF_DIR="${1:-/root/testdata/sf0.01}"
 OUT="${2:-/tmp/verify_close}"
 MIN="${3:-443}"   # last committed green count — a shrink is a red flag
 
-CLASSES="target/scala-2.13/classes"
-[ -d "$CLASSES" ] || { echo "CLOSE GATE RED: run 'sbt compile' first" >&2; exit 1; }
+MISSING_PREFIX="CLOSE GATE RED: "
+. scripts/jvm.sh
 
 rm -rf "$OUT"   # REQUIRED: stale outputs from a prior run pass check.py
 
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-
 ERRLOG="$(mktemp /tmp/close_gate_verify_err.XXXXXX)"
-env SPARK_LOCAL_IP=127.0.0.1 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-4}" \
-  java $ADD_OPENS -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "$CLASSES:/opt/spark/jars/*" \
+SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-4}" \
+  "${GRAFT_JAVA[@]}" -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   graft.Verify "$SF_DIR" "$OUT" 2>"$ERRLOG" \
   || { echo "CLOSE GATE RED: graft.Verify exited non-zero" >&2; exit 1; }
 

@@ -17,17 +17,7 @@ ONLY="${1:?comma-separated query names or prefixes ending in *}"
 IFS=, read -r -a SF_DIRS <<< "${2:-$DEFAULT_SF}"
 OUT="${3:-/tmp/verify_subset}"
 
-CLASSES="target/scala-2.13/classes"
-[ -d "$CLASSES" ] || { echo "run 'sbt compile' first" >&2; exit 1; }
-
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+. scripts/jvm.sh
 
 failed=()
 for sf in "${SF_DIRS[@]}"; do
@@ -36,10 +26,7 @@ for sf in "${SF_DIRS[@]}"; do
   [ "${#SF_DIRS[@]}" -eq 1 ] || out="$OUT/$(basename "$sf")"
   rm -rf "$out"
   rc=0
-  env SPARK_LOCAL_IP=127.0.0.1 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-4}" \
-    java $ADD_OPENS -Xmx8g \
-    -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-    -cp "$CLASSES:/opt/spark/jars/*" \
+  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-4}" "${GRAFT_JAVA[@]}" -Xmx8g \
     graft.Verify "$sf" "$out" "$ONLY" 2>/dev/null || rc=$?
   # Verify exits non-zero when a query threw; still compare what it dumped
   python3 scripts/check.py "$sf" "$out" || rc=$?

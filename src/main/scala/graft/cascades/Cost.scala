@@ -96,16 +96,8 @@ trait StatsModel {
       case LogicalScan(t, _, _, _) => tableWidth(t)
       case PhysicalTableScan(t, _, _, _) => tableWidth(t)
       // semi/anti joins emit LEFT rows only — no width concatenation
-      case LogicalJoin(JoinType.Semi | JoinType.Anti, _) => inputWidths(0)
-      case PhysicalHashJoin(JoinType.Semi | JoinType.Anti, _) =>
-        inputWidths(0)
-      case PhysicalBroadcastHashJoin(JoinType.Semi | JoinType.Anti, _) =>
-        inputWidths(0)
-      case PhysicalSortMergeJoin(JoinType.Semi | JoinType.Anti, _) =>
-        inputWidths(0)
-      case _: LogicalJoin | _: PhysicalHashJoin |
-          _: PhysicalBroadcastHashJoin | _: PhysicalSortMergeJoin =>
-        inputWidths(0) + inputWidths(1)
+      case j: JoinOp =>
+        if (j.leftOnly) inputWidths(0) else inputWidths(0) + inputWidths(1)
       case _ => inputWidths.headOption.getOrElse(16L)
     }
 
@@ -116,19 +108,13 @@ trait StatsModel {
     case PhysicalFilter(p, _) => filtered(p, inputRows.head)
     case _: LogicalProject | _: PhysicalProject => inputRows.head
     // semi/anti joins emit a SUBSET of left rows — |A| is the honest
-    // upper bound (the schema-less IR has no containment statistic)
-    case LogicalJoin(JoinType.Semi | JoinType.Anti, _) => inputRows(0)
-    case PhysicalHashJoin(JoinType.Semi | JoinType.Anti, _) => inputRows(0)
-    case PhysicalBroadcastHashJoin(JoinType.Semi | JoinType.Anti, _) =>
-      inputRows(0)
-    case PhysicalSortMergeJoin(JoinType.Semi | JoinType.Anti, _) =>
-      inputRows(0)
-    case _: LogicalJoin | _: PhysicalHashJoin |
-        _: PhysicalBroadcastHashJoin | _: PhysicalSortMergeJoin =>
-      // FK-join heuristic: |A ⋈ B| ~ max(|A|,|B|) — symmetric, so the
-      // commuted join lands in a group with the same cardinality and only
-      // the COST (build-side choice) differentiates the two
-      math.max(inputRows(0), inputRows(1))
+    // upper bound (the schema-less IR has no containment statistic).
+    // Otherwise the FK-join heuristic: |A ⋈ B| ~ max(|A|,|B|) —
+    // symmetric, so the commuted join lands in a group with the same
+    // cardinality and only the COST (build-side choice) differentiates
+    // the two
+    case j: JoinOp =>
+      if (j.leftOnly) inputRows(0) else math.max(inputRows(0), inputRows(1))
     case LogicalLimit(n)       => math.min(inputRows.head, n.toLong)
     case LogicalTopK(n, _)     => math.min(inputRows.head, n.toLong)
     case PhysicalTopK(n, _)    => math.min(inputRows.head, n.toLong)
@@ -331,23 +317,25 @@ final class CardinalityCostModel extends CostModel {
     case PhysicalTableScan(_, _, _, _) => 1.0 // output rows priced by parent
     case PhysicalFilter(_, _)      => inputRows.head.toDouble
     case PhysicalProject(_)        => inputRows.head.toDouble
-    case PhysicalHashJoin(_, _)    =>
-      inputRows(0).toDouble + 2.0 * inputRows(1).toDouble
-    // never chosen under this model (replication factor 2W > the hash
-    // join's 2x build) — the single-node model sees no shuffle to avoid.
-    // ClusterCostModel is where the tradeoff exists.
-    case PhysicalBroadcastHashJoin(_, _) =>
-      inputRows(0).toDouble +
-        2.0 * ClusterCostModel.W * inputRows(1).toDouble
-    // one interleaved streaming pass over both (already-sorted, already-
-    // co-partitioned) inputs — the sorts and exchanges it REQUIRES are
-    // explicit child-plan operators (enforcers), priced where they stand;
-    // when a clustered base-table layout or a reusable sort satisfies
-    // them for free, none appear and the merge is the whole price. That
-    // asymmetry vs the 2x build of a hash join is exactly the
-    // interesting-orders tradeoff the goldens pin.
-    case PhysicalSortMergeJoin(_, _) =>
-      inputRows(0).toDouble + inputRows(1).toDouble
+    case PhysicalJoin(s, _, _) => s match {
+      case JoinStrategy.ShuffledHash =>
+        inputRows(0).toDouble + 2.0 * inputRows(1).toDouble
+      // never chosen under this model (replication factor 2W > the hash
+      // join's 2x build) — the single-node model sees no shuffle to
+      // avoid. ClusterCostModel is where the tradeoff exists.
+      case JoinStrategy.Broadcast =>
+        inputRows(0).toDouble +
+          2.0 * ClusterCostModel.W * inputRows(1).toDouble
+      // one interleaved streaming pass over both (already-sorted,
+      // already-co-partitioned) inputs — the sorts and exchanges it
+      // REQUIRES are explicit child-plan operators (enforcers), priced
+      // where they stand; when a clustered base-table layout or a
+      // reusable sort satisfies them for free, none appear and the merge
+      // is the whole price. That asymmetry vs the 2x build of a hash join
+      // is exactly the interesting-orders tradeoff the goldens pin.
+      case JoinStrategy.SortMerge =>
+        inputRows(0).toDouble + inputRows(1).toDouble
+    }
     case PhysicalSort(_)           =>
       val n = inputRows.head.toDouble
       n * (math.log(n + 1.0) / math.log(2.0))
@@ -425,12 +413,10 @@ object PlanCost {
 final class ClusterCostModel extends CostModel {
   private val base = new CardinalityCostModel
   def operatorCost(op: PhysicalOp, inputRows: Seq[Long]): Double = op match {
-    case PhysicalHashJoin(_, _) =>
+    case PhysicalJoin(JoinStrategy.ShuffledHash, _, _) =>
       2.0 * inputRows(0).toDouble + 2.0 * inputRows(1).toDouble +
         inputRows(0).toDouble + 2.0 * inputRows(1).toDouble
-    case PhysicalBroadcastHashJoin(_, _) =>
-      inputRows(0).toDouble +
-        2.0 * ClusterCostModel.W * inputRows(1).toDouble
+    // a broadcast join's base price already is its cluster price
     case other => base.operatorCost(other, inputRows)
   }
 }
@@ -452,15 +438,14 @@ final class ByteWeightedClusterCostModel extends CostModel {
     base.operatorCost(op, inputRows)
   override def operatorCost(op: PhysicalOp, inputRows: Seq[Long],
       inputWidths: Seq[Long]): Double = op match {
-    case PhysicalHashJoin(_, _) | PhysicalBroadcastHashJoin(_, _) |
-        PhysicalSortMergeJoin(_, _) =>
+    case PhysicalJoin(s, _, _) =>
       // row-equivalents: bytes moved / default row width
       val probe = inputRows(0).toDouble * inputWidths(0).toDouble / 16.0
       val build = inputRows(1).toDouble * inputWidths(1).toDouble / 16.0
-      op match {
-        case PhysicalHashJoin(_, _) => // 2 exchanges + probe + 2x build
+      s match {
+        case JoinStrategy.ShuffledHash => // 2 exchanges + probe + 2x build
           2.0 * probe + 2.0 * build + probe + 2.0 * build
-        case PhysicalSortMergeJoin(_, _) =>
+        case JoinStrategy.SortMerge =>
           // one interleaved streaming pass over both sides' BYTES — the
           // required child sorts/exchanges are explicit enforcer nodes,
           // priced where they stand (as in CardinalityCostModel), so the
@@ -468,7 +453,7 @@ final class ByteWeightedClusterCostModel extends CostModel {
           // through to the ROW-count price and was systematically
           // underpriced for wide rows vs the byte-priced hash joins
           probe + build
-        case _ => // replicate the build BYTES to each of W executors
+        case JoinStrategy.Broadcast => // build BYTES to each of W executors
           probe + 2.0 * ClusterCostModel.W * build
       }
     case other => base.operatorCost(other, inputRows)

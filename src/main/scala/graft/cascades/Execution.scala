@@ -89,9 +89,7 @@ object Execution {
             else Project(projected.map(c => named(col(c.name))), f)
           case PhysicalProject(exprs) =>
             Project(exprs.map(e => named(exprToColumn(e))), kids.head)
-          case PhysicalHashJoin(jt, cond)          => join(op, kids, jt, cond)
-          case PhysicalBroadcastHashJoin(jt, cond) => join(op, kids, jt, cond)
-          case PhysicalSortMergeJoin(jt, cond)     => join(op, kids, jt, cond)
+          case j: PhysicalJoin => join(j, kids)
           case PhysicalHashAggregate(_, g, aggs) =>
             aggregate(kids.head, g, aggs)
           case PhysicalTopK(n, keys) =>
@@ -113,18 +111,18 @@ object Execution {
     /** The join with the winner's strategy hint on its build side, the
       * right input (the hint `.hint(name)` puts on a DataFrame).
       */
-    private def join(op: Operator, kids: Seq[LogicalPlan], jt: JoinType,
-        cond: EqCond): LogicalPlan = {
-      val sparkType = jt match {
+    private def join(j: PhysicalJoin, kids: Seq[LogicalPlan]): LogicalPlan = {
+      val sparkType = j.joinType match {
         case JoinType.Inner => Inner
         case JoinType.Left  => LeftOuter
         case JoinType.Full  => FullOuter
         case JoinType.Semi  => LeftSemi
         case JoinType.Anti  => LeftAnti
       }
-      val build = UnresolvedHint(joinStrategy(op).get.displayName, Nil, kids(1))
+      val build =
+        UnresolvedHint(joinStrategy(j.strategy).displayName, Nil, kids(1))
       Join(kids(0), build, sparkType,
-        Some(expr(col(cond.left.name) === col(cond.right.name))),
+        Some(expr(col(j.cond.left.name) === col(j.cond.right.name))),
         JoinHint.NONE)
     }
 
@@ -147,16 +145,15 @@ object Execution {
   }
 
   /** The Catalyst join-strategy hint that makes `JoinSelection` plan a
-    * winner's join operator, over Catalyst's own size-based pick. The one
+    * winner's join strategy, over Catalyst's own size-based pick. The one
     * mapping from a winner's join choice to Spark: lowering puts it on
     * the build side of each lowered join, and
     * [[graft.rules.CascadesJoinHints]] on the join Catalyst itself built.
     */
-  def joinStrategy(op: Operator): Option[JoinStrategyHint] = op match {
-    case _: PhysicalBroadcastHashJoin => Some(BROADCAST)
-    case _: PhysicalHashJoin          => Some(SHUFFLE_HASH)
-    case _: PhysicalSortMergeJoin     => Some(SHUFFLE_MERGE)
-    case _                            => None
+  def joinStrategy(s: JoinStrategy): JoinStrategyHint = s match {
+    case JoinStrategy.Broadcast    => BROADCAST
+    case JoinStrategy.ShuffledHash => SHUFFLE_HASH
+    case JoinStrategy.SortMerge    => SHUFFLE_MERGE
   }
 
   /** A [[SortKey]]'s exact Spark sort column — direction AND null

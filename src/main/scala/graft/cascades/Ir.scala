@@ -8,6 +8,12 @@ package graft.cascades
   * this IR — real queries execute via Catalyst; MiniCascades reproduces the
   * reference's *optimizer* capability (plan-space search) for plan-choice
   * tests and explanation, as the reference itself does over DataFusion.
+  *
+  * Like the reference's (`operator/physical.rs:15-20`), the IR has ONE
+  * physical join, [[PhysicalJoin]]. How it runs — shuffled hash,
+  * broadcast or sort-merge — is its [[JoinStrategy]] field, not a class
+  * of its own; only cost pricing, delivered and required properties, and
+  * the lowering's Catalyst hint look at the strategy.
   */
 sealed trait Expr
 final case class Col(name: String) extends Expr
@@ -92,9 +98,23 @@ final case class LogicalFilter(pred: Expr, projected: Seq[Col])
 final case class LogicalProject(exprs: Seq[Expr]) extends LogicalOp {
   def arity = 1
 }
+/** The view every join shares, logical or physical: a join type and an
+  * equi condition whose `left` column comes from the left input. Rules
+  * and derivations that treat all joins alike match this once.
+  */
+sealed trait JoinOp extends Operator {
+  def joinType: JoinType
+  def cond: EqCond
+  final def arity = 2
+  /** Semi/anti joins emit a subset of the LEFT rows and the left schema
+    * only.
+    */
+  final def leftOnly: Boolean =
+    joinType == JoinType.Semi || joinType == JoinType.Anti
+}
 /** `Join { join_type, expr }` (equi-only) — `operator/join.rs:14-33`. */
 final case class LogicalJoin(joinType: JoinType, cond: EqCond)
-    extends LogicalOp { def arity = 2 }
+    extends LogicalOp with JoinOp
 /** `Limit { limit }` — `operator/limit.rs:7-13`. */
 final case class LogicalLimit(n: Int) extends LogicalOp { def arity = 1 }
 /** Top-k: the first `n` rows under `cols` order — SQL's ORDER BY + LIMIT,
@@ -175,36 +195,46 @@ final case class PhysicalFilter(pred: Expr, projected: Seq[Col])
 final case class PhysicalProject(exprs: Seq[Expr]) extends PhysicalOp {
   def arity = 1
 }
-final case class PhysicalHashJoin(joinType: JoinType, cond: EqCond)
-    extends PhysicalOp { def arity = 2 }
-/** Sort-merge join — the THIRD physical join strategy, and the one that
-  * makes sort an INTERESTING ORDER (System R's term): it REQUIRES each
-  * child Hashed+SortedBy its join key ([[PhysicalPropertySet
-  * .requiredChildProperties]]) and in exchange DELIVERS key order and
-  * key partitioning at its output — so an ORDER BY on the join key above
-  * it, or a bucketed+sorted base-table layout below it, is satisfied
-  * with no extra operator. Whether paying two child sorts beats one hash
-  * build (or beats sorting the join output) is decided by the memo's
-  * winner comparison, never by a heuristic — Spark's SortMergeJoinExec /
-  * EnsureRequirements interplay in miniature. Full joins keep delivery
+/** How a physical join moves and matches its rows. The hash strategies
+  * build their RIGHT input.
+  *
+  * `ShuffledHash`: both inputs are exchanged on their join keys and the
+  * right side is built into a hash table per partition — the reference's
+  * one physical join (`operator/physical.rs:15-20`), Spark's
+  * ShuffledHashJoinExec. Any join type.
+  *
+  * `Broadcast`: the right input is replicated to every partition of the
+  * probe side, so neither side shuffles. Only correct when unmatched
+  * BUILD rows never need emitting (Inner/Left/Semi/Anti; a Full join
+  * must see every build row exactly once — broadcast would emit its
+  * unmatched rows once PER COPY). Whether it beats the shuffle is a pure
+  * cost question ([[ClusterCostModel]]: W-fold replication vs two
+  * exchanges) — Spark's BroadcastHashJoinExec.
+  *
+  * `SortMerge`: the strategy that makes sort an INTERESTING ORDER (System
+  * R's term). It REQUIRES each child Hashed+SortedBy its join key
+  * ([[PhysicalPropertySet.requiredChildProperties]]) and in exchange
+  * DELIVERS key order and key partitioning at its output — so an ORDER BY
+  * on the join key above it, or a bucketed+sorted base-table layout below
+  * it, is satisfied with no extra operator. Whether paying two child sorts
+  * beats one hash build is the memo's winner comparison, never a
+  * heuristic — Spark's SortMergeJoinExec / EnsureRequirements interplay
+  * in miniature. Any join type merges; Full joins keep delivery
   * conservative (null-extended rows break key order/placement claims on
   * the LEFT key; Spark likewise degrades outer SMJ ordering).
   */
-final case class PhysicalSortMergeJoin(joinType: JoinType, cond: EqCond)
-    extends PhysicalOp { def arity = 2 }
-/** Broadcast hash join — the second physical join strategy, beyond the
-  * reference's single `PhysicalHashJoin` (`operator/physical.rs:15-20`):
-  * the RIGHT (build) input is replicated to every partition of the probe
-  * side, so neither side shuffles. Only correct when unmatched BUILD rows
-  * never need emitting (Inner/Left; a Full join must see every build row
-  * exactly once — broadcast would emit its unmatched rows once PER COPY).
-  * Whether it beats the shuffle variant is a pure cost question
-  * ([[ClusterCostModel]]: W-fold replication vs two exchanges), decided by
-  * the cascades search — Spark's BroadcastHashJoinExec vs
-  * ShuffledHashJoinExec choice in miniature.
+sealed trait JoinStrategy
+object JoinStrategy {
+  case object ShuffledHash extends JoinStrategy
+  case object Broadcast extends JoinStrategy
+  case object SortMerge extends JoinStrategy
+}
+/** The one physical join: a [[LogicalJoin]] with its [[JoinStrategy]]
+  * chosen. All strategies of one logical join land in the same memo
+  * group and the cost search picks among them.
   */
-final case class PhysicalBroadcastHashJoin(joinType: JoinType, cond: EqCond)
-    extends PhysicalOp { def arity = 2 }
+final case class PhysicalJoin(strategy: JoinStrategy, joinType: JoinType,
+    cond: EqCond) extends PhysicalOp with JoinOp
 /** Sort ENFORCER — one step beyond the reference, which declares the
   * enforcer hook but returns an empty vec (`properties/physical.rs:16-24`,
   * consumed at `task.rs:431-462`) and stubs `OrderSpec::satisfies` to true
@@ -271,10 +301,12 @@ final case class PlanNode(op: Operator, inputs: Seq[PlanNode] = Nil) {
         s"${if (so.nonEmpty) s", sortBy=[${so.mkString(",")}]" else ""})"
     case PhysicalFilter(p, _)    => s"PhysicalFilter($p)"
     case PhysicalProject(e)      => s"PhysicalProjection(${e.mkString(",")})"
-    case PhysicalHashJoin(jt, c) => s"PhysicalHashJoin($jt, $c)"
-    case PhysicalSortMergeJoin(jt, c) => s"PhysicalSortMergeJoin($jt, $c)"
-    case PhysicalBroadcastHashJoin(jt, c) =>
-      s"PhysicalBroadcastHashJoin($jt, $c, BuildRight)"
+    case PhysicalJoin(s, jt, c) => s match {
+      case JoinStrategy.ShuffledHash => s"PhysicalHashJoin($jt, $c)"
+      case JoinStrategy.SortMerge    => s"PhysicalSortMergeJoin($jt, $c)"
+      case JoinStrategy.Broadcast =>
+        s"PhysicalBroadcastHashJoin($jt, $c, BuildRight)"
+    }
     case PhysicalSort(keys) =>
       s"PhysicalSort(${keys.map(sortKeyStr).mkString(",")})"
     case PhysicalExchange(keys) =>
@@ -387,8 +419,8 @@ object PhysicalPropertySet {
     // the merge emits in key order; a Full join's null-extended right
     // rows have no left-key position to claim. Semi/Anti emit a SUBSET
     // of left rows in left-key order — the claim holds a fortiori.
-    case PhysicalSortMergeJoin(JoinType.Inner | JoinType.Left |
-        JoinType.Semi | JoinType.Anti, cond) =>
+    case PhysicalJoin(JoinStrategy.SortMerge, JoinType.Inner |
+        JoinType.Left | JoinType.Semi | JoinType.Anti, cond) =>
       OrderSpec.SortedBy.asc(Seq(cond.left))
     case _                     => OrderSpec.AnyOrder
   }
@@ -420,8 +452,8 @@ object PhysicalPropertySet {
     // matched outputs stay co-partitioned by the left key; Full joins
     // also emit null-left-key rows — no claim (as the hash join comment).
     // Semi/Anti output subsets of the co-partitioned left rows.
-    case PhysicalSortMergeJoin(JoinType.Inner | JoinType.Left |
-        JoinType.Semi | JoinType.Anti, cond) =>
+    case PhysicalJoin(JoinStrategy.SortMerge, JoinType.Inner |
+        JoinType.Left | JoinType.Semi | JoinType.Anti, cond) =>
       DistributionSpec.Hashed(Seq(cond.left))
     // Final/Complete REQUIRE a co-partitioned (or gathered) input — see
     // [[requiredChildDistribution]] — so their output provably carries
@@ -461,7 +493,7 @@ object PhysicalPropertySet {
     */
   def requiredChildProperties(
       op: PhysicalOp): Option[Seq[PhysicalPropertySet]] = op match {
-    case PhysicalSortMergeJoin(_, cond) => Some(Seq(
+    case PhysicalJoin(JoinStrategy.SortMerge, _, cond) => Some(Seq(
       PhysicalPropertySet(DistributionSpec.Hashed(Seq(cond.left)),
         OrderSpec.SortedBy.asc(Seq(cond.left))),
       PhysicalPropertySet(DistributionSpec.Hashed(Seq(cond.right)),
@@ -506,7 +538,7 @@ object PhysicalPropertySet {
     *  - `Filter`/`Project` keep placement but may drop columns: Hashed(keys)
     *    pushes down only if the keys survive the projection (a filter with
     *    an empty projected list keeps all columns);
-    *  - `HashJoin` streams its LEFT (probe) side through unchanged, so only
+    *  - a hash join streams its LEFT (probe) side through unchanged, so only
     *    Hashed on exactly the probe-side join key is known-preserved (any
     *    other column's provenance is unknowable in this schema-less IR);
     *    Singleton can NEVER push through a join — gathering one side does
@@ -532,13 +564,13 @@ object PhysicalPropertySet {
       // subset), so probe-key partitioning survives. A FULL join also
       // emits unmatched build rows whose probe key is NULL — not
       // co-partitioned by cond.left (Spark likewise reports
-      // UnknownPartitioning for full-outer shuffled hash joins).
-      case (PhysicalHashJoin(jt, cond), DistributionSpec.Hashed(keys))
-          if keys == Seq(cond.left) && jt != JoinType.Full => Some(0)
-      // the broadcast variant streams the probe side through IDENTICALLY
-      // (the build side is replicated everywhere, touching no placement)
-      case (PhysicalBroadcastHashJoin(jt, cond), DistributionSpec.Hashed(keys))
-          if keys == Seq(cond.left) && jt != JoinType.Full => Some(0)
+      // UnknownPartitioning for full-outer shuffled hash joins). Both
+      // hash strategies stream the probe side through (broadcast
+      // replicates the build side everywhere, touching no placement);
+      // the merge join has its own child requirements instead.
+      case (PhysicalJoin(s, jt, cond), DistributionSpec.Hashed(keys))
+          if s != JoinStrategy.SortMerge && keys == Seq(cond.left) &&
+            jt != JoinType.Full => Some(0)
       case _ => None
     }
   }

@@ -94,15 +94,7 @@ object Provenance {
     case LogicalProject(es) => es.collect { case Col(n) => n }.toSet
     case PhysicalProject(es) => es.collect { case Col(n) => n }.toSet
     // semi/anti joins output the LEFT schema only
-    case LogicalJoin(JoinType.Semi | JoinType.Anti, _) => inputs(0)
-    case PhysicalHashJoin(JoinType.Semi | JoinType.Anti, _) => inputs(0)
-    case PhysicalBroadcastHashJoin(JoinType.Semi | JoinType.Anti, _) =>
-      inputs(0)
-    case PhysicalSortMergeJoin(JoinType.Semi | JoinType.Anti, _) =>
-      inputs(0)
-    case _: LogicalJoin | _: PhysicalHashJoin |
-        _: PhysicalBroadcastHashJoin | _: PhysicalSortMergeJoin =>
-      inputs(0) ++ inputs(1)
+    case j: JoinOp => if (j.leftOnly) inputs(0) else inputs(0) ++ inputs(1)
     // an aggregate provides its group keys plus its canonically-named
     // aggregate outputs ([[AggCall.outName]] — cnt, sum_x, …), which is
     // what lets a HAVING filter above it resolve columns
@@ -277,66 +269,47 @@ object Rules {
     }
   }
 
-  /** Logical join → physical hash join (implementation) —
-    * `dolomite/src/rules/join.rs:71-114`.
+  /** Logical join → [[PhysicalJoin]] with one [[JoinStrategy]]
+    * (implementation) — `dolomite/src/rules/join.rs:71-114`. Each strategy
+    * is its own rule with its own id, so a rule set chooses which
+    * strategies the search may use; all of them land in the join's memo
+    * group and the cost search picks per query. ANY join type implements
+    * (the reference matches `LogicalJoin(_)`, `rules/join.rs:80-82`) —
+    * only COMMUTATION is inner-only; leaving Left/Full joins with no
+    * physical member was a silent optimize-to-None found by
+    * CascadesPropertySpec. The one exception is broadcast, which refuses
+    * Full joins: a Full join must emit each unmatched build row exactly
+    * once, and every replicated copy would emit it.
     */
-  object Join2HashJoinRule extends OptRule {
-    val id = RuleId.Join2HashJoin
+  final class Join2PhysicalJoinRule(val id: RuleId, strategy: JoinStrategy)
+      extends OptRule {
     override val isImplementation = true
-    // ANY join type implements (the reference matches `LogicalJoin(_)`,
-    // `rules/join.rs:80-82`) — only COMMUTATION is inner-only. Matching
-    // inner here would leave Left/Full joins with no physical member, a
-    // silent optimize-to-None found by CascadesPropertySpec.
     val pattern = Pattern.node(isJoin, Pattern.any, Pattern.any)
     def apply(expr: Node, ctx: RuleContext): Option[OptExpression] = expr match {
-      case Node(LogicalJoin(jt, cond), inputs) =>
-        Some(Node(PhysicalHashJoin(jt, cond), inputs))
+      case Node(LogicalJoin(jt, cond), inputs)
+          if strategy != JoinStrategy.Broadcast || jt != JoinType.Full =>
+        Some(Node(PhysicalJoin(strategy, jt, cond), inputs))
       case _ => None
     }
   }
 
-  /** Second join implementation, beyond the reference's single physical
-    * join: [[PhysicalBroadcastHashJoin]] (build = RIGHT, replicated to
-    * every probe partition). Inner/Left/Semi/Anti — every type whose
-    * output never emits an unmatched BUILD row; a Full join must emit
-    * each unmatched build row exactly once, which a replicated build side
-    * cannot guarantee (each copy would emit it). Both implementations land
-    * in the same memo group and the cost search picks per query; under
-    * [[ClusterCostModel]] the small-build join goes broadcast and the
-    * big-big join keeps the shuffled variant — Spark's
-    * autoBroadcastJoinThreshold decision, made by search instead of a
-    * size cutoff.
+  /** The reference's one physical join: shuffled hash. */
+  val Join2HashJoinRule: OptRule =
+    new Join2PhysicalJoinRule(RuleId.Join2HashJoin, JoinStrategy.ShuffledHash)
+  /** Broadcast, beyond the reference: under [[ClusterCostModel]] a
+    * small-build join goes broadcast and a big-big join keeps the
+    * shuffled variant — Spark's autoBroadcastJoinThreshold decision, made
+    * by search instead of a size cutoff.
     */
-  object Join2BroadcastJoinRule extends OptRule {
-    val id = RuleId.Join2BroadcastJoin
-    override val isImplementation = true
-    val pattern = Pattern.node(isJoin, Pattern.any, Pattern.any)
-    def apply(expr: Node, ctx: RuleContext): Option[OptExpression] = expr match {
-      case Node(LogicalJoin(jt, cond), inputs) if jt != JoinType.Full =>
-        Some(Node(PhysicalBroadcastHashJoin(jt, cond), inputs))
-      case _ => None
-    }
-  }
-
-  /** Third join implementation: [[PhysicalSortMergeJoin]]. Any join type
-    * merges correctly (like the shuffled hash join — full outers too,
-    * both streams advance in key order); what varies by type is what the
-    * operator can DELIVER (see [[PhysicalPropertySet.deliveredOrder]]).
-    * Lands in the same memo group as the hash variants; whether the two
-    * enforced child sorts beat one hash build — or cost NOTHING because
-    * a bucketed+sorted scan layout or an interesting order already
-    * provides them — is the memo winner comparison's call.
+  val Join2BroadcastJoinRule: OptRule =
+    new Join2PhysicalJoinRule(RuleId.Join2BroadcastJoin, JoinStrategy.Broadcast)
+  /** Sort-merge: whether its two enforced child sorts beat one hash
+    * build — or cost NOTHING because a bucketed+sorted scan layout or an
+    * interesting order already provides them — is the memo winner
+    * comparison's call.
     */
-  object Join2SortMergeJoinRule extends OptRule {
-    val id = RuleId.Join2SortMergeJoin
-    override val isImplementation = true
-    val pattern = Pattern.node(isJoin, Pattern.any, Pattern.any)
-    def apply(expr: Node, ctx: RuleContext): Option[OptExpression] = expr match {
-      case Node(LogicalJoin(jt, cond), inputs) =>
-        Some(Node(PhysicalSortMergeJoin(jt, cond), inputs))
-      case _ => None
-    }
-  }
+  val Join2SortMergeJoinRule: OptRule =
+    new Join2PhysicalJoinRule(RuleId.Join2SortMergeJoin, JoinStrategy.SortMerge)
 
   /** Logical scan → physical table scan (implementation) —
     * `dolomite/src/rules/table_scan.rs:20-57`.
@@ -380,6 +353,31 @@ object Rules {
     }
   }
 
+  /** The table-set walk of the two through-join rules: the columns, by
+    * `catalog`, of the base tables a bound rule input reads. None when
+    * any leaf is an unexpanded memo group (cascades) — the rule then
+    * abstains.
+    */
+  private def tableCols(catalog: Map[String, Seq[String]],
+      e: OptExpression): Option[Set[String]] = {
+    def scanned(op: Operator): Set[String] = op match {
+      case LogicalScan(t, _, _, _)       => Set(t)
+      case PhysicalTableScan(t, _, _, _) => Set(t)
+      case _                             => Set.empty
+    }
+    def ofPlan(p: PlanNode): Set[String] =
+      scanned(p.op) ++ p.inputs.flatMap(ofPlan)
+    def tables(e: OptExpression): Option[Set[String]] = e match {
+      case PlanHandle(p)  => Some(ofPlan(p))
+      case GroupHandle(_) => None
+      case Node(op, inputs) =>
+        inputs.foldLeft(Option(scanned(op))) { (acc, in) =>
+          for (a <- acc; t <- tables(in)) yield a ++ t
+        }
+    }
+    tables(e).map(_.flatMap(t => catalog.getOrElse(t, Nil)))
+  }
+
   /** Beyond the reference: predicate pushdown through joins, gated on a
     * LOGICAL PROPERTY (which base tables — hence which columns — each join
     * input provides). The reference declares logical-property derivation
@@ -407,32 +405,6 @@ object Rules {
     val pattern = Pattern.node(_.isInstanceOf[LogicalFilter],
       Pattern.node(isJoin, Pattern.any, Pattern.any))
 
-    private def tablesOfPlan(p: PlanNode): Set[String] = (p.op match {
-      case LogicalScan(t, _, _, _) => Set(t)
-      case PhysicalTableScan(t, _, _, _) => Set(t)
-      case _                       => Set.empty[String]
-    }) ++ p.inputs.flatMap(tablesOfPlan)
-
-    /** Tables provided by a bound rule input; None when any leaf is an
-      * unexpanded memo group (cascades) — the rule then abstains.
-      */
-    private def tables(e: OptExpression): Option[Set[String]] = e match {
-      case PlanHandle(p)  => Some(tablesOfPlan(p))
-      case GroupHandle(_) => None
-      case Node(op, inputs) =>
-        val own = op match {
-          case LogicalScan(t, _, _, _) => Set(t)
-          case PhysicalTableScan(t, _, _, _) => Set(t)
-          case _                       => Set.empty[String]
-        }
-        inputs.foldLeft(Option(own)) { (acc, in) =>
-          for (a <- acc; t <- tables(in)) yield a ++ t
-        }
-    }
-
-    private def cols(ts: Set[String]): Set[String] =
-      ts.flatMap(t => catalog.getOrElse(t, Nil))
-
     /** Columns a pushable predicate references: both sides of an
       * equality, the column of a column-vs-literal comparison (the r8
       * literal-predicate surface — also null-rejecting, so the same
@@ -459,8 +431,8 @@ object Rules {
           Seq(Node(j @ LogicalJoin(jt, _), Seq(a, b)))) =>
         predCols(pred) match {
           case Some(need) =>
-            val leftHas = tables(a).exists(ts => need.subsetOf(cols(ts)))
-            val rightHas = tables(b).exists(ts => need.subsetOf(cols(ts)))
+            val leftHas = tableCols(catalog, a).exists(need.subsetOf)
+            val rightHas = tableCols(catalog, b).exists(need.subsetOf)
             val pushLeft = leftHas && !rightHas && jt != JoinType.Full
             val pushRight = rightHas && !leftHas && jt == JoinType.Inner
             if (pushLeft) Some(Node(j, Seq(Node(f, Seq(a)), b)))
@@ -495,29 +467,6 @@ object Rules {
     val pattern = Pattern.node(_.isInstanceOf[LogicalProject],
       Pattern.node(isJoin, Pattern.any, Pattern.any))
 
-    private def tablesOfPlan(p: PlanNode): Set[String] = (p.op match {
-      case LogicalScan(t, _, _, _) => Set(t)
-      case PhysicalTableScan(t, _, _, _) => Set(t)
-      case _                       => Set.empty[String]
-    }) ++ p.inputs.flatMap(tablesOfPlan)
-
-    private def tables(e: OptExpression): Option[Set[String]] = e match {
-      case PlanHandle(p)  => Some(tablesOfPlan(p))
-      case GroupHandle(_) => None
-      case Node(op, inputs) =>
-        val own = op match {
-          case LogicalScan(t, _, _, _) => Set(t)
-          case PhysicalTableScan(t, _, _, _) => Set(t)
-          case _                       => Set.empty[String]
-        }
-        inputs.foldLeft(Option(own)) { (acc, in) =>
-          for (a <- acc; t <- tables(in)) yield a ++ t
-        }
-    }
-
-    private def cols(ts: Set[String]): Set[String] =
-      ts.flatMap(t => catalog.getOrElse(t, Nil))
-
     /** Wrap `in` in a Project(keep) unless it already is one. */
     private def wrap(in: OptExpression,
         keep: Seq[Col]): (OptExpression, Boolean) = in match {
@@ -535,8 +484,10 @@ object Rules {
           if (outCols.length != exprs.length) None // non-column exprs
           else {
             val need = (outCols ++ Seq(jl, jr)).distinct
-            (for (ta <- tables(a); tb <- tables(b)) yield {
-              val (ca, cb) = (cols(ta), cols(tb))
+            (for {
+              ca <- tableCols(catalog, a)
+              cb <- tableCols(catalog, b)
+            } yield {
               if (!need.forall(c => ca(c.name) != cb(c.name))) None
               else {
                 val (wa, chA) = wrap(a, need.filter(c => ca(c.name)))

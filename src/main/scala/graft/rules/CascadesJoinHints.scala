@@ -51,13 +51,14 @@ object CascadesJoinHints extends Rule[LogicalPlan] {
         (dir, lt) <- scanTable(left)
         (rightDir, rt) <- scanTable(right) if rightDir == dir
         w <- Try(winner(dir, lt, rt, lk.name, rk.name)).toOption.flatten
-        strategy <- Execution.joinStrategy(w.op)
+        PhysicalJoin(strategy, _, _) <- Some(w.op)
         // the IR build side is the join's right input; if the search
         // commuted the join, the Catalyst orientation stays and the hint
         // moves to the left side instead
         build <- w.inputs.lift(1).flatMap(scanOf)
       } yield {
-        val info = Some(HintInfo(strategy = Some(strategy)))
+        val info =
+          Some(HintInfo(strategy = Some(Execution.joinStrategy(strategy))))
         j.copy(hint =
           if (build == rt) JoinHint(None, info) else JoinHint(info, None))
       }

@@ -659,13 +659,6 @@ object StreamingOps {
       joinType)
   }
 
-  /** Explicit override for the state-store partition count of the
-    * streaming ops; when unset it is DERIVED from input size (see
-    * [[statePartitionsFor]]). A production deployment sets this to its
-    * measured key cardinality / state-size target.
-    */
-  val StatePartitionsKey = "spark.graft.streamStatePartitions"
-
   /** Input bytes per state-store partition when deriving the count. */
   val DefaultStateChunkBytes: Long = 32L * 1024 * 1024
 
@@ -683,14 +676,12 @@ object StreamingOps {
     * value saturates the cap, so no production parallelism is lost.
     */
   private[graft] def statePartitionsFor(spark: SparkSession, dir: String,
-      table: String): Int =
-    spark.conf.getOption(StatePartitionsKey).map(_.toInt).getOrElse {
-      val (bytes, _) =
-        graft.ops.Tables.dataSize(spark, s"$dir/$table.parquet")
-      val chunk = DefaultStateChunkBytes
-      val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      math.max(1L, math.min(cap.toLong, (bytes + chunk - 1) / chunk)).toInt
-    }
+      table: String): Int = {
+    val (bytes, _) = graft.ops.Tables.dataSize(spark, s"$dir/$table.parquet")
+    val chunk = DefaultStateChunkBytes
+    val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    math.max(1L, math.min(cap.toLong, (bytes + chunk - 1) / chunk)).toInt
+  }
 
   /** Run a streaming DataFrame to completion against the (finite) file
     * source and return the memory-sink table. NOTE: in Update mode the
@@ -1029,8 +1020,7 @@ object StreamingOps {
     // count): the brute-force scoring fan-out makes per-key work huge
     // relative to input bytes, so the bytes proxy starves the topk stage;
     // the session default (the deployment's own shuffle sizing) is right
-    // here. The explicit spark.graft.streamStatePartitions override still
-    // applies through the session conf at query start.
+    // here.
     "sim_ann_serve_stream" -> { (s, d) =>
       import org.apache.spark.sql.functions.col
       runToMemory(annServeTopk(s,

@@ -8,6 +8,8 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 import graft.cascades._
+import graft.cascades.JoinStrategy._
+import graft.TestRules.isJoin
 import graft.ops.CascadesExecOps
 
 /** Cascades winners EXECUTED — the `planner.rs:29-55` lifecycle edge
@@ -35,9 +37,9 @@ class CascadesExecSpec extends GraftSuite {
   /** The Spark physical operator each winner node must appear as. */
   private def marks(p: PlanNode): Seq[String] = {
     val own = p.op match {
-      case _: PhysicalBroadcastHashJoin => Seq("BroadcastHashJoin")
-      case _: PhysicalHashJoin          => Seq("ShuffledHashJoin")
-      case _: PhysicalSortMergeJoin     => Seq("SortMergeJoin")
+      case PhysicalJoin(Broadcast, _, _)    => Seq("BroadcastHashJoin")
+      case PhysicalJoin(ShuffledHash, _, _) => Seq("ShuffledHashJoin")
+      case PhysicalJoin(SortMerge, _, _)    => Seq("SortMergeJoin")
       case _: PhysicalTopK              => Seq("TakeOrderedAndProject")
       case _: PhysicalHashAggregate     => Seq("HashAggregate")
       case _: PhysicalSort              => Seq("Sort ")
@@ -70,7 +72,7 @@ class CascadesExecSpec extends GraftSuite {
       CascadesExecOps.planFor(spark, d, "cascades_exec_smj_clustered")
     def ops(p: PlanNode): Seq[Operator] = p.op +: p.inputs.flatMap(ops)
     val w = ops(winner)
-    assert(w.exists(_.isInstanceOf[PhysicalSortMergeJoin]),
+    assert(w.exists(isJoin(SortMerge)),
       winner.explain())
     assert(!w.exists(_.isInstanceOf[PhysicalSort]), winner.explain())
     assert(!w.exists(_.isInstanceOf[PhysicalExchange]), winner.explain())
@@ -118,12 +120,11 @@ class CascadesExecSpec extends GraftSuite {
       CascadesExecOps.planFor(spark, d, "cascades_exec_broadcast_dim")
     // winner: TopK over Project over BroadcastHashJoin(customer, nation)
     def findJoin(p: PlanNode): Option[PlanNode] = p.op match {
-      case _: PhysicalBroadcastHashJoin | _: PhysicalHashJoin |
-          _: PhysicalSortMergeJoin => Some(p)
+      case _: PhysicalJoin => Some(p)
       case _ => p.inputs.flatMap(findJoin).headOption
     }
     val j = findJoin(winner).getOrElse(fail(winner.explain()))
-    assert(j.op.isInstanceOf[PhysicalBroadcastHashJoin], winner.explain())
+    assert(isJoin(Broadcast)(j.op), winner.explain())
     assert(j.inputs(1).op == PhysicalTableScan("nation"), winner.explain())
     val plan = executedPlan(df)
     assert(plan.contains("BroadcastHashJoin"), plan)
@@ -165,9 +166,9 @@ class CascadesExecSpec extends GraftSuite {
       "customer" -> ((Seq(Col("c_custkey")), Seq(Col("c_custkey")))),
       "orders" -> ((Seq(Col("o_custkey")), Seq(Col("o_custkey"))))))
     assert(smj.explain() != smjDefault.explain(), smj.explain())
-    assert(ops(smj).exists(_.isInstanceOf[PhysicalSortMergeJoin]),
+    assert(ops(smj).exists(isJoin(SortMerge)),
       smj.explain())
-    assert(!ops(smjDefault).exists(_.isInstanceOf[PhysicalSortMergeJoin]),
+    assert(!ops(smjDefault).exists(isJoin(SortMerge)),
       smjDefault.explain())
     // without projection pushdown no join input is narrowed
     val (prune, _) = CascadesExecOps.planFor(spark, d, "cascades_exec_prune")
@@ -183,7 +184,7 @@ class CascadesExecSpec extends GraftSuite {
     val (winner, _) =
       CascadesExecOps.planFor(spark, d, "cascades_exec_commute_build")
     def findJoin(p: PlanNode): Option[PlanNode] = p.op match {
-      case _: PhysicalBroadcastHashJoin | _: PhysicalHashJoin => Some(p)
+      case _: PhysicalJoin => Some(p)
       case _ => p.inputs.flatMap(findJoin).headOption
     }
     val j = findJoin(winner).getOrElse(fail(winner.explain()))
@@ -215,7 +216,7 @@ class CascadesExecSpec extends GraftSuite {
         costModel = new ClusterCostModel, stats = stats)
       val w = opt.optimize(logical, required).get
       def find(p: PlanNode): Option[Operator] = p.op match {
-        case j @ (_: PhysicalBroadcastHashJoin | _: PhysicalHashJoin) =>
+        case j: PhysicalJoin =>
           Some(j)
         case _ => p.inputs.flatMap(find).headOption
       }
@@ -225,12 +226,12 @@ class CascadesExecSpec extends GraftSuite {
     // (broadcast needs build < probe/6 under ClusterCostModel at W=8)
     val synthetic = TableStats(
       Map("customer" -> 10000L, "nation" -> 10000L))
-    assert(joinOp(synthetic).isInstanceOf[PhysicalHashJoin])
+    assert(isJoin(ShuffledHash)(joinOp(synthetic)))
     // real: nation's footer says 25 rows — broadcast wins
     val real = ParquetStats.fromDir(d, Seq("customer", "nation"))
     assert(real.tableRows("nation") == 25L)
     assert(real.tableRows("customer") == 1500L)
-    assert(joinOp(real).isInstanceOf[PhysicalBroadcastHashJoin])
+    assert(isJoin(Broadcast)(joinOp(real)))
   }
 
   test("selective_filter: footer min/max selectivity flips the filtered " +
@@ -257,7 +258,7 @@ class CascadesExecSpec extends GraftSuite {
         costModel = new ClusterCostModel, stats = stats)
       val w = opt.optimize(pushed, required).get
       def find(p: PlanNode): Option[Operator] = p.op match {
-        case j @ (_: PhysicalBroadcastHashJoin | _: PhysicalHashJoin) =>
+        case j: PhysicalJoin =>
           Some(j)
         case _ => p.inputs.flatMap(find).headOption
       }
@@ -269,9 +270,9 @@ class CascadesExecSpec extends GraftSuite {
     // blind: same row counts, NO ranges — filter estimates 10% = 1500
     // rows, too big to broadcast against a 1500-row probe
     val blind = TableStats(real.catalog, real.widths)
-    assert(joinOf(blind).isInstanceOf[PhysicalHashJoin])
+    assert(isJoin(ShuffledHash)(joinOf(blind)))
     // ranges: ~101 of 15000 rows survive <= 100 — broadcast the build
-    assert(joinOf(real).isInstanceOf[PhysicalBroadcastHashJoin])
+    assert(isJoin(Broadcast)(joinOf(real)))
   }
 
   test("three_way: the associativity search reshapes the left-deep SQL " +
@@ -280,8 +281,7 @@ class CascadesExecSpec extends GraftSuite {
     val (winner, df) =
       CascadesExecOps.planFor(spark, d, "cascades_exec_three_way")
     def findJoins(p: PlanNode): Seq[PlanNode] = (p.op match {
-      case _: PhysicalBroadcastHashJoin | _: PhysicalHashJoin |
-          _: PhysicalSortMergeJoin => Seq(p)
+      case _: PhysicalJoin => Seq(p)
       case _ => Nil
     }) ++ p.inputs.flatMap(findJoins)
     val joins = findJoins(winner)
@@ -290,12 +290,12 @@ class CascadesExecSpec extends GraftSuite {
     // top join: shuffled hash, fact (lineitem) on the probe side, and
     // its BUILD side is the (orders ⋈ customer) join — the reshaped
     // right-deep tree, not the SQL's left-deep order
-    assert(top.op.isInstanceOf[PhysicalHashJoin], winner.explain())
+    assert(isJoin(ShuffledHash)(top.op), winner.explain())
     assert(top.inputs(0).op == PhysicalTableScan("lineitem"),
       winner.explain())
     val inner = findJoins(top.inputs(1)).headOption
       .getOrElse(fail(winner.explain()))
-    assert(inner.op.isInstanceOf[PhysicalBroadcastHashJoin],
+    assert(isJoin(Broadcast)(inner.op),
       winner.explain())
     assert(inner.inputs(0).op == PhysicalTableScan("orders"),
       winner.explain())
@@ -324,7 +324,7 @@ class CascadesExecSpec extends GraftSuite {
         costModel = new ClusterCostModel, stats = stats)
       val w = opt.optimize(pushed, required).get
       def find(p: PlanNode): Option[Operator] = p.op match {
-        case j @ (_: PhysicalBroadcastHashJoin | _: PhysicalHashJoin) =>
+        case j: PhysicalJoin =>
           Some(j)
         case _ => p.inputs.flatMap(find).headOption
       }
@@ -333,7 +333,7 @@ class CascadesExecSpec extends GraftSuite {
     val footer = ParquetStats.fromDir(d, Seq("orders", "lineitem"))
     // pass 1: the cross-column equality has no range — blind 10% says
     // 6000 rows, far too big to broadcast against a 15k probe
-    assert(joinOf(footer).isInstanceOf[PhysicalHashJoin])
+    assert(isJoin(ShuffledHash)(joinOf(footer)))
     // the runtime statistic: the truth is two orders of magnitude lower
     val pred = EqCond(Col("l_partkey"), Col("l_suppkey"))
     val observed = graft.ops.Tables(spark, d).lineitem
@@ -341,12 +341,12 @@ class CascadesExecSpec extends GraftSuite {
     assert(observed < 100L, s"observed=$observed")
     // pass 2: feedback flips the strategy
     val fed = FeedbackStats(footer, Map(pred -> observed))
-    assert(joinOf(fed).isInstanceOf[PhysicalBroadcastHashJoin])
+    assert(isJoin(Broadcast)(joinOf(fed)))
     // and the shipped query executes the pass-2 winner
     val (winner, df) =
       CascadesExecOps.planFor(spark, d, "cascades_exec_adaptive")
     def ops(p: PlanNode): Seq[Operator] = p.op +: p.inputs.flatMap(ops)
-    assert(ops(winner).exists(_.isInstanceOf[PhysicalBroadcastHashJoin]),
+    assert(ops(winner).exists(isJoin(Broadcast)),
       winner.explain())
     assert(executedPlan(df).contains("BroadcastHashJoin"))
   }
@@ -377,8 +377,7 @@ class CascadesExecSpec extends GraftSuite {
     val (winner, _) =
       CascadesExecOps.planFor(spark, d, "cascades_exec_conjunction")
     def findJoin(p: PlanNode): Option[PlanNode] = p.op match {
-      case _: PhysicalBroadcastHashJoin | _: PhysicalHashJoin |
-          _: PhysicalSortMergeJoin => Some(p)
+      case _: PhysicalJoin => Some(p)
       case _ => p.inputs.flatMap(findJoin).headOption
     }
     val j = findJoin(winner).getOrElse(fail(winner.explain()))
@@ -468,7 +467,7 @@ class CascadesExecSpec extends GraftSuite {
       CascadesExecOps.planFor(spark, d, "cascades_exec_semi_join")
     def ops(p: PlanNode): Seq[Operator] = p.op +: p.inputs.flatMap(ops)
     assert(ops(winner).exists {
-      case PhysicalBroadcastHashJoin(JoinType.Semi, _) => true
+      case PhysicalJoin(Broadcast, JoinType.Semi, _) => true
       case _ => false
     }, winner.explain())
     val plan2 = executedPlan(df)
@@ -486,12 +485,12 @@ class CascadesExecSpec extends GraftSuite {
       costModel = new ClusterCostModel, stats = blind)
     val w = opt.optimize(parsed, required).get
     def findJoin(p: PlanNode): Option[Operator] = p.op match {
-      case j @ (_: PhysicalBroadcastHashJoin | _: PhysicalHashJoin) =>
+      case j: PhysicalJoin =>
         Some(j)
       case _ => p.inputs.flatMap(findJoin).headOption
     }
     assert(findJoin(w).exists {
-      case PhysicalHashJoin(JoinType.Semi, _) => true
+      case PhysicalJoin(ShuffledHash, JoinType.Semi, _) => true
       case _ => false
     }, w.explain())
   }
@@ -502,7 +501,7 @@ class CascadesExecSpec extends GraftSuite {
       CascadesExecOps.planFor(spark, d, "cascades_exec_anti_join")
     def ops(p: PlanNode): Seq[Operator] = p.op +: p.inputs.flatMap(ops)
     assert(ops(winner).exists {
-      case PhysicalHashJoin(JoinType.Anti, _) => true
+      case PhysicalJoin(ShuffledHash, JoinType.Anti, _) => true
       case _ => false
     }, winner.explain())
     val plan = executedPlan(df)
@@ -525,7 +524,7 @@ class CascadesExecSpec extends GraftSuite {
     val (winner, df) =
       CascadesExecOps.planFor(spark, d, "cascades_exec_disjunction")
     def ops(p: PlanNode): Seq[Operator] = p.op +: p.inputs.flatMap(ops)
-    assert(ops(winner).exists(_.isInstanceOf[PhysicalBroadcastHashJoin]),
+    assert(ops(winner).exists(isJoin(Broadcast)),
       winner.explain())
     assert(executedPlan(df).contains("BroadcastHashJoin"))
     // blind: no ranges → OrCond falls to the 10% fallback → shuffled
@@ -542,11 +541,11 @@ class CascadesExecSpec extends GraftSuite {
     val w = opt.optimize(pushed,
       PhysicalPropertySet.default).get
     def findJoin(p: PlanNode): Option[Operator] = p.op match {
-      case j @ (_: PhysicalBroadcastHashJoin | _: PhysicalHashJoin) =>
+      case j: PhysicalJoin =>
         Some(j)
       case _ => p.inputs.flatMap(findJoin).headOption
     }
-    assert(findJoin(w).exists(_.isInstanceOf[PhysicalHashJoin]),
+    assert(findJoin(w).exists(isJoin(ShuffledHash)),
       w.explain())
   }
 
@@ -570,7 +569,7 @@ class CascadesExecSpec extends GraftSuite {
     val (winner, df) =
       CascadesExecOps.planFor(spark, d, "cascades_exec_between")
     def ops(p: PlanNode): Seq[Operator] = p.op +: p.inputs.flatMap(ops)
-    assert(ops(winner).exists(_.isInstanceOf[PhysicalBroadcastHashJoin]),
+    assert(ops(winner).exists(isJoin(Broadcast)),
       winner.explain())
     assert(executedPlan(df).contains("BroadcastHashJoin"))
   }
@@ -585,9 +584,9 @@ class CascadesExecSpec extends GraftSuite {
     val (winner, df) =
       CascadesExecOps.planFor(spark, d, "cascades_exec_string_filter")
     def ops(p: PlanNode): Seq[Operator] = p.op +: p.inputs.flatMap(ops)
-    assert(ops(winner).exists(_.isInstanceOf[PhysicalHashJoin]),
+    assert(ops(winner).exists(isJoin(ShuffledHash)),
       winner.explain())
-    assert(!ops(winner).exists(_.isInstanceOf[PhysicalBroadcastHashJoin]),
+    assert(!ops(winner).exists(isJoin(Broadcast)),
       winner.explain())
     assert(executedPlan(df).contains("ShuffledHashJoin"))
     // blind: 10% of 500 = 50 rows — under the crossover, broadcasts
@@ -603,11 +602,11 @@ class CascadesExecSpec extends GraftSuite {
       costModel = new ClusterCostModel, stats = blind)
     val w = opt.optimize(pushed, PhysicalPropertySet.default).get
     def findJoin(p: PlanNode): Option[Operator] = p.op match {
-      case j @ (_: PhysicalBroadcastHashJoin | _: PhysicalHashJoin) =>
+      case j: PhysicalJoin =>
         Some(j)
       case _ => p.inputs.flatMap(findJoin).headOption
     }
-    assert(findJoin(w).exists(_.isInstanceOf[PhysicalBroadcastHashJoin]),
+    assert(findJoin(w).exists(isJoin(Broadcast)),
       w.explain())
     // and the out-of-range equality axis: a literal below the footer
     // min prices ~0 rows (string ranges are decision-grade, not lexical
@@ -665,7 +664,7 @@ class CascadesExecSpec extends GraftSuite {
     val (winner, _) =
       CascadesExecOps.planFor(spark, d, "cascades_exec_strategy")
     def ops(p: PlanNode): Seq[Operator] = p.op +: p.inputs.flatMap(ops)
-    assert(ops(winner).exists(_.isInstanceOf[PhysicalBroadcastHashJoin]),
+    assert(ops(winner).exists(isJoin(Broadcast)),
       winner.explain())
   }
 
@@ -718,10 +717,10 @@ class CascadesExecSpec extends GraftSuite {
     // narrow-side exchanges at every scale leg (probe grows with SF,
     // build bytes dominate regardless)
     assert(ops(winner).exists {
-      case PhysicalHashJoin(JoinType.Inner, _) => true
+      case PhysicalJoin(ShuffledHash, JoinType.Inner, _) => true
       case _ => false
     }, winner.explain())
-    assert(!ops(winner).exists(_.isInstanceOf[PhysicalBroadcastHashJoin]),
+    assert(!ops(winner).exists(isJoin(Broadcast)),
       winner.explain())
     val plan = executedPlan(df)
     assert(plan.contains("ShuffledHashJoin"), plan)
@@ -738,7 +737,7 @@ class CascadesExecSpec extends GraftSuite {
         hepRules, new ClusterCostModel).get
     }
     val rowWinner = rowModel(CascadesExecOps.defaultHep)
-    assert(ops(rowWinner).exists(_.isInstanceOf[PhysicalBroadcastHashJoin]),
+    assert(ops(rowWinner).exists(isJoin(Broadcast)),
       rowWinner.explain())
     // the SQL has no WHERE, so the default HEP pass leaves it as it was
     assert(rowWinner.explain() == rowModel(Nil).explain(), rowWinner.explain())
@@ -930,8 +929,7 @@ class CascadesExecSpec extends GraftSuite {
     val (winner, _) =
       CascadesExecOps.planFor(spark, d, "cascades_exec_three_way")
     def joins(p: PlanNode): Int = (p.op match {
-      case _: PhysicalHashJoin | _: PhysicalBroadcastHashJoin |
-          _: PhysicalSortMergeJoin => 1
+      case _: PhysicalJoin => 1
       case _ => 0
     }) + p.inputs.map(joins).sum
     assert(joins(winner) >= 2, winner.explain())

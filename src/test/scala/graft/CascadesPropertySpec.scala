@@ -5,6 +5,7 @@ import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cascades._
+import graft.cascades.JoinStrategy._
 
 /** Property-based hardening of MiniCascades over randomized logical plan
   * trees (raw ScalaCheck generators driven by fixed seeds — deterministic,
@@ -86,7 +87,7 @@ class CascadesPropertySpec extends AnyFunSuite {
       p.inputs.map(naive))
     case LogicalProject(e)   => PlanNode(PhysicalProject(e),
       p.inputs.map(naive))
-    case LogicalJoin(jt, c)  => PlanNode(PhysicalHashJoin(jt, c),
+    case LogicalJoin(jt, c)  => PlanNode(PhysicalJoin(ShuffledHash, jt, c),
       p.inputs.map(naive))
     case other => fail(s"unexpected logical op in naive translation: $other")
   }
@@ -427,13 +428,7 @@ class CascadesPropertySpec extends AnyFunSuite {
           case DistributionSpec.Singleton => DistributionSpec.Singleton
           case _ => DistributionSpec.Any
         }
-        case PhysicalHashJoin(jt, cond)
-            if jt == JoinType.Inner || jt == JoinType.Left =>
-          childProps(0).distribution match {
-            case h @ DistributionSpec.Hashed(ks) if ks == Seq(cond.left) => h
-            case _ => DistributionSpec.Any
-          }
-        case PhysicalBroadcastHashJoin(jt, cond)
+        case PhysicalJoin(ShuffledHash | Broadcast, jt, cond)
             if jt == JoinType.Inner || jt == JoinType.Left =>
           childProps(0).distribution match {
             case h @ DistributionSpec.Hashed(ks) if ks == Seq(cond.left) => h
@@ -478,7 +473,7 @@ class CascadesPropertySpec extends AnyFunSuite {
         .optimize(plan).get
       def walk(n: PlanNode): Unit = {
         n.op match {
-          case PhysicalSortMergeJoin(_, cond) =>
+          case PhysicalJoin(SortMerge, _, cond) =>
             found += 1
             val lp = deliveredProps(n.inputs(0))
             val rp = deliveredProps(n.inputs(1))

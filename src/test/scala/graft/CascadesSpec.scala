@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cascades._
+import graft.cascades.JoinStrategy._
 import graft.cascades.OptExpression.{GroupHandle, Node}
 
 /** MiniCascades unit tests, porting the reference's own expectations:
@@ -92,7 +93,7 @@ class CascadesSpec extends AnyFunSuite {
     assert(out.isDefined)
     val p = out.get
     p match {
-      case PlanNode(PhysicalHashJoin(JoinType.Inner, _),
+      case PlanNode(PhysicalJoin(ShuffledHash, JoinType.Inner, _),
           Seq(PlanNode(PhysicalTableScan(a, None, _, _), Nil),
               PlanNode(PhysicalTableScan(b, None, _, _), Nil))) =>
         // commutation explored; constant cost model ties → either order wins
@@ -138,7 +139,7 @@ class CascadesSpec extends AnyFunSuite {
     assert(out.isDefined)
     out.get match {
       case PlanNode(PhysicalSort(Seq(SortKey(Col("c1"), true, true))),
-          Seq(PlanNode(PhysicalHashJoin(JoinType.Inner, _), _))) =>
+          Seq(PlanNode(PhysicalJoin(ShuffledHash, JoinType.Inner, _), _))) =>
       case other => fail(s"expected Sort over HashJoin:\n${other.explain()}")
     }
     // the same search without the requirement must NOT pay for a sort
@@ -233,7 +234,7 @@ class CascadesSpec extends AnyFunSuite {
       distribution = DistributionSpec.Hashed(Seq(Col("c2"))))
     val out = TestRules.golden().optimize(plan, req).get
     def walk(p: PlanNode): Unit = p.op match {
-      case PhysicalHashJoin(_, cond) =>
+      case PhysicalJoin(ShuffledHash, _, cond) =>
         p.inputs.head.op match {
           case PhysicalExchange(keys) =>
             assert(keys == Seq(cond.left),
@@ -269,7 +270,7 @@ class CascadesSpec extends AnyFunSuite {
     val out = TestRules.golden().optimize(plan, req).get
     out match {
       case PlanNode(PhysicalExchange(Nil),
-          Seq(PlanNode(PhysicalHashJoin(_, _), _))) =>
+          Seq(PlanNode(PhysicalJoin(ShuffledHash, _, _), _))) =>
       case other => fail(s"expected gather ABOVE the join:\n${other.explain()}")
     }
   }
@@ -320,7 +321,7 @@ class CascadesSpec extends AnyFunSuite {
     val out = opt.optimize(plan)
     assert(out.isDefined)
     out.get match {
-      case PlanNode(PhysicalHashJoin(JoinType.Inner, cond),
+      case PlanNode(PhysicalJoin(ShuffledHash, JoinType.Inner, cond),
           Seq(PlanNode(PhysicalTableScan(l, None, _, _), Nil),
               PlanNode(PhysicalTableScan(r, None, _, _), Nil))) =>
         assert(l == "big" && r == "small",
@@ -343,7 +344,7 @@ class CascadesSpec extends AnyFunSuite {
     assert(out.isDefined)
     out.get match {
       case PlanNode(PhysicalSort(Seq(SortKey(Col("c2"), true, true))),
-          Seq(PlanNode(PhysicalHashJoin(JoinType.Inner, _),
+          Seq(PlanNode(PhysicalJoin(ShuffledHash, JoinType.Inner, _),
             Seq(PlanNode(PhysicalTableScan(l, None, _, _), Nil),
                 PlanNode(PhysicalTableScan(r, None, _, _), Nil))))) =>
         assert(l == "big" && r == "small",
@@ -379,7 +380,8 @@ class CascadesSpec extends AnyFunSuite {
     // terminates (no A->B->A flip-flop) and keeps the ORIGINAL orientation;
     // implementation rules still fire, producing the physical form
     hep.optimize(plan) match {
-      case PlanNode(PhysicalHashJoin(JoinType.Inner, EqCond(Col("c1"), Col("c2"))),
+      case PlanNode(PhysicalJoin(ShuffledHash, JoinType.Inner,
+        EqCond(Col("c1"), Col("c2"))),
           Seq(PlanNode(PhysicalTableScan("t1", None, _, _), Nil),
               PlanNode(PhysicalTableScan("t2", None, _, _), Nil))) =>
       case other => fail(s"unexpected:\n${other.explain()}")
@@ -585,19 +587,23 @@ class CascadesSpec extends AnyFunSuite {
     assert(enumCost < plainCost - 900000.0,
       s"enum $enumCost vs plain $plainCost")
     assert(plain == PlanNode(
-      PhysicalHashJoin(JoinType.Inner, EqCond(Col("b_x"), Col("c_x"))),
+      PhysicalJoin(ShuffledHash, JoinType.Inner,
+        EqCond(Col("b_x"), Col("c_x"))),
       Seq(PlanNode(
-        PhysicalHashJoin(JoinType.Inner, EqCond(Col("a_k"), Col("b_k"))),
+        PhysicalJoin(ShuffledHash, JoinType.Inner,
+          EqCond(Col("a_k"), Col("b_k"))),
         Seq(PlanNode(PhysicalTableScan("big")),
           PlanNode(PhysicalTableScan("sml")))),
         PlanNode(PhysicalTableScan("mid")))), s"got:\n${plain.explain()}")
     // rotated: big ⋈ (mid ⋈ sml) — inner join commuted so the 10-row
     // side builds, outer cond re-oriented left-to-right by the rule
     assert(enumd == PlanNode(
-      PhysicalHashJoin(JoinType.Inner, EqCond(Col("a_k"), Col("b_k"))),
+      PhysicalJoin(ShuffledHash, JoinType.Inner,
+        EqCond(Col("a_k"), Col("b_k"))),
       Seq(PlanNode(PhysicalTableScan("big")),
         PlanNode(
-          PhysicalHashJoin(JoinType.Inner, EqCond(Col("c_x"), Col("b_x"))),
+          PhysicalJoin(ShuffledHash, JoinType.Inner,
+            EqCond(Col("c_x"), Col("b_x"))),
           Seq(PlanNode(PhysicalTableScan("mid")),
             PlanNode(PhysicalTableScan("sml")))))),
       s"got:\n${enumd.explain()}")
@@ -667,13 +673,14 @@ class CascadesSpec extends AnyFunSuite {
     // the cluster model prices its two exchanges (2*(1e6+10)) on top of
     // probe + 2x build
     assert(plain == PlanNode(
-      PhysicalHashJoin(JoinType.Inner, EqCond(Col("f_k"), Col("d_k"))),
+      PhysicalJoin(ShuffledHash, JoinType.Inner,
+        EqCond(Col("f_k"), Col("d_k"))),
       Seq(PlanNode(PhysicalTableScan("fact")),
         PlanNode(PhysicalTableScan("dim")))), s"got:\n${plain.explain()}")
     // with the broadcast implementation in the search, the 10-row build
     // side replicates (2*W*10 = 160) instead of shuffling the fact table
     assert(chosen == PlanNode(
-      PhysicalBroadcastHashJoin(JoinType.Inner,
+      PhysicalJoin(Broadcast, JoinType.Inner,
         EqCond(Col("f_k"), Col("d_k"))),
       Seq(PlanNode(PhysicalTableScan("fact")),
         PlanNode(PhysicalTableScan("dim")))), s"got:\n${chosen.explain()}")
@@ -693,7 +700,8 @@ class CascadesSpec extends AnyFunSuite {
     // sides once (3.8e6): the memo keeps BOTH physical members and the
     // winner comparison picks the exchange plan
     assert(chosen == PlanNode(
-      PhysicalHashJoin(JoinType.Inner, EqCond(Col("f_k"), Col("g_k"))),
+      PhysicalJoin(ShuffledHash, JoinType.Inner,
+        EqCond(Col("f_k"), Col("g_k"))),
       Seq(PlanNode(PhysicalTableScan("fact")),
         PlanNode(PhysicalTableScan("fact2")))),
       s"got:\n${chosen.explain()}")
@@ -712,7 +720,7 @@ class CascadesSpec extends AnyFunSuite {
     // (replicating 100×16B rows beats exchanging the fact table)
     val narrow = TableStats(Map("fact" -> 1000000L, "dim" -> 100L))
     assert(bestBytes(narrow, plan).op ==
-      PhysicalBroadcastHashJoin(JoinType.Inner,
+      PhysicalJoin(Broadcast, JoinType.Inner,
         EqCond(Col("f_k"), Col("d_k"))),
       s"got:\n${bestBytes(narrow, plan).explain()}")
     // SAME row counts, but each dim row carries 64 KiB (an embeddings
@@ -721,14 +729,15 @@ class CascadesSpec extends AnyFunSuite {
     val wide = TableStats(Map("fact" -> 1000000L, "dim" -> 100L),
       widths = Map("fact" -> 16L, "dim" -> 65536L))
     assert(bestBytes(wide, plan).op ==
-      PhysicalHashJoin(JoinType.Inner, EqCond(Col("f_k"), Col("d_k"))),
+      PhysicalJoin(ShuffledHash, JoinType.Inner,
+        EqCond(Col("f_k"), Col("d_k"))),
       s"got:\n${bestBytes(wide, plan).explain()}")
     // control: the ROW-count ClusterCostModel cannot see the width and
     // still broadcasts the wide dim — the flip is the byte axis, not
     // the stats plumbing
     val (rowChosen, _) = bestWith(TestRules.joinStrategyRules, wide, plan)
     assert(rowChosen.op ==
-      PhysicalBroadcastHashJoin(JoinType.Inner,
+      PhysicalJoin(Broadcast, JoinType.Inner,
         EqCond(Col("f_k"), Col("d_k"))),
       s"got:\n${rowChosen.explain()}")
   }
@@ -740,11 +749,11 @@ class CascadesSpec extends AnyFunSuite {
     // (one exchange below the join) rather than enforcing above it —
     // same contract as the shuffled probe-side passthrough
     assert(PhysicalPropertySet.distributionPushdownChild(
-      PhysicalBroadcastHashJoin(JoinType.Inner,
+      PhysicalJoin(Broadcast, JoinType.Inner,
         EqCond(Col("f_k"), Col("d_k"))),
       DistributionSpec.Hashed(Seq(Col("f_k")))) == Some(0))
     assert(PhysicalPropertySet.distributionPushdownChild(
-      PhysicalBroadcastHashJoin(JoinType.Inner,
+      PhysicalJoin(Broadcast, JoinType.Inner,
         EqCond(Col("f_k"), Col("d_k"))),
       DistributionSpec.Hashed(Seq(Col("d_k")))).isEmpty)
     // Full joins never broadcast: unmatched build rows would emit per copy
@@ -779,7 +788,7 @@ class CascadesSpec extends AnyFunSuite {
     // (2 exchanges + probe + 2x build = 3.4e6) and the broadcast variant
     // (1e6 + 2*W*1e5 = 2.6e6) — with NO Sort or Exchange anywhere
     assert(chosen == PlanNode(
-      PhysicalSortMergeJoin(JoinType.Inner,
+      PhysicalJoin(SortMerge, JoinType.Inner,
         EqCond(Col("f_k"), Col("d_k"))),
       Seq(PlanNode(PhysicalTableScan("fact", None,
         Seq(Col("f_k")), Seq(Col("f_k")))),
@@ -797,7 +806,7 @@ class CascadesSpec extends AnyFunSuite {
     // sorting 1e6 rows (n·log2 n ~ 2e7) dwarfs everything: the winner is
     // the broadcast hash join (2.6e6), same as without the SMJ rule —
     // the memo HOLDS the merge member, the comparison rejects it
-    assert(chosen.op == PhysicalBroadcastHashJoin(JoinType.Inner,
+    assert(chosen.op == PhysicalJoin(Broadcast, JoinType.Inner,
       EqCond(Col("f_k"), Col("d_k"))), s"got:\n${chosen.explain()}")
   }
 
@@ -818,7 +827,7 @@ class CascadesSpec extends AnyFunSuite {
     // (~1.9e6 for 1e5 rows). Every hash alternative must SORT THE JOIN
     // OUTPUT (1e6·log2(1e6) ~ 2e7) on top — an order of magnitude worse.
     chosen match {
-      case PlanNode(PhysicalSortMergeJoin(JoinType.Inner,
+      case PlanNode(PhysicalJoin(SortMerge, JoinType.Inner,
           EqCond(Col("f_k"), Col("d_k"))), Seq(left, right)) =>
         assert(left == PlanNode(PhysicalTableScan("fact", None,
           Seq(Col("f_k")), Seq(Col("f_k")))), s"left:\n${left.explain()}")
@@ -880,7 +889,7 @@ class CascadesSpec extends AnyFunSuite {
     // requirements — no Sort, no Exchange, end to end from SQL text
     assert(out == PlanNode(
       PhysicalProject(Seq(Col("a_k"), Col("b_x"))),
-      Seq(PlanNode(PhysicalSortMergeJoin(JoinType.Inner,
+      Seq(PlanNode(PhysicalJoin(SortMerge, JoinType.Inner,
         EqCond(Col("a_k"), Col("b_k"))),
         Seq(PlanNode(PhysicalTableScan("a", None,
           Seq(Col("a_k")), Seq(Col("a_k")))),
@@ -958,5 +967,39 @@ class CascadesSpec extends AnyFunSuite {
       """LogicalJoin(Inner, EqCond(Col(c1),Col(c2)))
         |  LogicalScan(t1)
         |  LogicalScan(t2, limit=3)""".stripMargin)
+  }
+
+  test("explain renders each physical join strategy (golden text)") {
+    // one join implementation rule per search, so the winner joins with
+    // exactly that strategy; CASCADES.md and winner comparisons across
+    // versions read these strings
+    def winner(rule: OptRule, jt: JoinType): Option[String] = {
+      val rules = Rules.all.filterNot(_.id == RuleId.Join2HashJoin) :+ rule
+      val plan = PlanNode(LogicalJoin(jt, EqCond(Col("c1"), Col("c2"))),
+        Seq(scan("t1"), scan("t2")))
+      TestRules.golden(rules).optimize(plan).map(_.explain())
+    }
+    assert(winner(Rules.Join2HashJoinRule, JoinType.Inner).contains(
+      """PhysicalHashJoin(Inner, EqCond(Col(c1),Col(c2)))
+        |  PhysicalTableScan(t1)
+        |  PhysicalTableScan(t2)""".stripMargin))
+    assert(winner(Rules.Join2BroadcastJoinRule, JoinType.Inner).contains(
+      """PhysicalBroadcastHashJoin(Inner, EqCond(Col(c1),Col(c2)), BuildRight)
+        |  PhysicalTableScan(t1)
+        |  PhysicalTableScan(t2)""".stripMargin))
+    assert(winner(Rules.Join2SortMergeJoinRule, JoinType.Inner).contains(
+      """PhysicalSortMergeJoin(Inner, EqCond(Col(c1),Col(c2)))
+        |  PhysicalSort(Col(c1))
+        |    PhysicalExchange(hash:Col(c1))
+        |      PhysicalTableScan(t1)
+        |  PhysicalSort(Col(c2))
+        |    PhysicalExchange(hash:Col(c2))
+        |      PhysicalTableScan(t2)""".stripMargin))
+    assert(winner(Rules.Join2HashJoinRule, JoinType.Semi).contains(
+      """PhysicalHashJoin(Semi, EqCond(Col(c1),Col(c2)))
+        |  PhysicalTableScan(t1)
+        |  PhysicalTableScan(t2)""".stripMargin))
+    // a replicated build side cannot emit its unmatched rows once
+    assert(winner(Rules.Join2BroadcastJoinRule, JoinType.Full).isEmpty)
   }
 }

@@ -3,6 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cascades._
+import graft.cascades.JoinStrategy._
+import graft.TestRules.isJoin
 import graft.ops.CascadesExecOps
 
 /** Executable evidence for the r10 stage-floor adjudication (CASCADES.md
@@ -90,11 +92,11 @@ class CostFloorSpec extends AnyFunSuite {
           columns = CascadesExecOps.schemaCat)
           .optimize(parsed, required).get
       val byByte = winner(byteModel)
-      assert(ops(byByte).exists(_.isInstanceOf[PhysicalHashJoin]) &&
-        !ops(byByte).exists(_.isInstanceOf[PhysicalBroadcastHashJoin]),
+      assert(ops(byByte).exists(isJoin(ShuffledHash)) &&
+        !ops(byByte).exists(isJoin(Broadcast)),
         s"byte model at ${f}x:\n" + byByte.explain())
       val byRow = winner(new ClusterCostModel)
-      assert(ops(byRow).exists(_.isInstanceOf[PhysicalBroadcastHashJoin]),
+      assert(ops(byRow).exists(isJoin(Broadcast)),
         s"row model at ${f}x:\n" + byRow.explain())
     }
   }

@@ -724,8 +724,8 @@ class StreamingSpec extends GraftSuite {
     }
   }
 
-  test("state partitions derive from input bytes, honor the override, " +
-    "and runToMemory restores shuffle.partitions after the stream") {
+  test("state partitions derive from input bytes, and runToMemory " +
+    "restores shuffle.partitions after the stream") {
     val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt
     // derived: min(cap, ceil(bytes/chunk)) — sf0.001 events is tiny, so
     // the derived count collapses far below the core-count default the
@@ -736,10 +736,6 @@ class StreamingSpec extends GraftSuite {
     val chunk = StreamingOps.DefaultStateChunkBytes
     val want = math.max(1L, math.min(cap.toLong, (bytes + chunk - 1) / chunk))
     assert(derived.toLong == want, s"derived=$derived want=$want")
-    // explicit override wins (the production knob)
-    spark.conf.set(StreamingOps.StatePartitionsKey, "3")
-    try assert(StreamingOps.statePartitionsFor(spark, sfDir, "events") == 3)
-    finally spark.conf.unset(StreamingOps.StatePartitionsKey)
     // the conf is pinned only for the stream's duration
     val before = spark.conf.get("spark.sql.shuffle.partitions")
     StreamingOps.runToMemory(

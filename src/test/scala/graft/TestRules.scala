@@ -3,8 +3,8 @@ package graft
 import graft.cascades._
 import graft.cascades.Rules._
 
-/** Rule sets, a cost model and an optimizer configuration that only the
-  * specs search with.
+/** Rule sets, a cost model, an optimizer configuration and a join
+  * matcher that only the specs use.
   */
 object TestRules {
   /** `all` + the broadcast join implementation: join-STRATEGY enumeration.
@@ -30,6 +30,12 @@ object TestRules {
     */
   object ConstantCostModel extends CostModel {
     def operatorCost(op: PhysicalOp, inputRows: Seq[Long]): Double = 1.0
+  }
+
+  /** Is `op` a physical join with `strategy`? */
+  def isJoin(strategy: JoinStrategy)(op: Operator): Boolean = op match {
+    case j: PhysicalJoin => j.strategy == strategy
+    case _               => false
   }
 
   /** The goldens' optimizer: the reference-faithful `all`, the constant
