@@ -1,7 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, Expression, Literal, Multiply, NumericEvalContext, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{Decimal, DecimalType, DoubleType, LongType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -102,6 +104,63 @@ object Kernels {
     val w = h << 8
     if (w == 0L) 57 else java.lang.Long.numberOfLeadingZeros(w) + 1
   }
+
+  // --- Exact micro-units of a double ----------------------------------------
+  // `(d.cast(DECIMAL(28,6)) * 1000000).cast(LONG)` without a Decimal per row.
+  // The cast renders d with Double.toString (the JVM's own rendering: on
+  // JDK 17 not always the shortest), rounds that decimal HALF_UP to six
+  // places and takes its unscaled value. The rendering round-trips, so it
+  // lies within ulp(d)/2 of d, and d * 1e6 in double lies within about
+  // 1.5 ulp of the rendering times 1e6. Unless that product is within
+  // 4 ulp of a half-micro, both round to the same integer, and the double
+  // product decides. Everything else takes the cast chain's own path.
+
+  /** [[exactMicros]]'s answer for a value off its fast path. The fast path
+    * never returns it: its results are below 2^32 * 1e6 in magnitude.
+    */
+  final val NotFast: Long = Long.MinValue
+
+  private final val FastLimit = 4294967296.0 // 2^32
+
+  /** The micro-units of `d` by double arithmetic alone, or [[NotFast]]
+    * when `d` is NaN, infinite, at least 2^32 in magnitude, or within
+    * 4 ulp of a half-micro — there [[exactMicrosSlow]] decides.
+    */
+  def exactMicros(d: Double): Long =
+    if (!(math.abs(d) < FastLimit)) NotFast
+    else {
+      val x = d * 1e6
+      val a = math.abs(x)
+      val whole = math.floor(a)
+      val frac = a - whole // exact
+      if (math.abs(frac - 0.5) <= 4 * math.ulp(a)) NotFast
+      else {
+        val r = if (frac > 0.5) whole.toLong + 1 else whole.toLong
+        if (x < 0) -r else r
+      }
+    }
+
+  /** The cast chain itself, per eval mode (LEGACY, ANSI): Spark's own
+    * `Cast` and `Multiply`, built as the analyser builds them for
+    * `(c.cast(DECIMAL(28,6)) * 1000000).cast(LONG)`, so every NULL (NaN,
+    * ±Inf, decimal overflow) and every ANSI error
+    * (NUMERIC_VALUE_OUT_OF_RANGE, CAST_OVERFLOW) is the cast's own.
+    */
+  private val castChains: Array[Expression] = Array(false, true).map { ansi =>
+    val mode = EvalMode.fromBoolean(ansi)
+    Cast(Multiply(
+      Cast(BoundReference(0, DoubleType, nullable = true),
+        DecimalType(28, 6), None, mode),
+      Literal(Decimal(1000000), DecimalType(7, 0)),
+      NumericEvalContext(mode)), LongType, None, mode)
+  }
+
+  /** [[exactMicros]] off its fast path: the cast chain, evaluated on `d`.
+    * NULL comes back as `null`.
+    */
+  def exactMicrosSlow(d: Double, ansi: Boolean): java.lang.Long =
+    castChains(if (ansi) 1 else 0).eval(InternalRow(d))
+      .asInstanceOf[java.lang.Long]
 
   /** 64-bit SimHash over a token multiset: bit i of the signature is the
     * sign of Σ_tokens count(t) * (bit_i(xxh64(t)) ? +1 : -1).

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, NamedExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Bridge between the public `Column`/`DataFrame` API and catalyst
@@ -411,6 +412,40 @@ case class SimHash64(child: Expression) extends UnaryExpression
   override protected def doGenCode(
       ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => s"${codegenNames.kernels}.simhash64($c)")
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** Exact micro-units of a double: the value, NULL or ANSI error of
+  * `(child.cast(DECIMAL(28,6)) * 1000000).cast(LONG)` without a Decimal
+  * per row (see [[Kernels.exactMicros]]). `ansi` is the cast's eval mode,
+  * read from the conf in force when the expression is built, as `Cast`
+  * reads its default.
+  */
+case class ExactMicros(child: Expression,
+    ansi: Boolean = SQLConf.get.ansiEnabled) extends UnaryExpression
+    with ExpectsInputTypes {
+  override def dataType: DataType = LongType
+  override def prettyName: String = "exact_micros"
+  override def inputTypes: Seq[DataType] = Seq(DoubleType)
+  override def nullable: Boolean = true // NaN, ±Inf, decimal overflow
+  override def nullIntolerant: Boolean = true
+  override protected def nullSafeEval(d: Any): Any = {
+    val v = d.asInstanceOf[Double]
+    val units = Kernels.exactMicros(v)
+    if (units != Kernels.NotFast) units else Kernels.exactMicrosSlow(v, ansi)
+  }
+  override protected def doGenCode(
+      ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, d => {
+      val slow = ctx.freshName("slow")
+      s"""${ev.value} = ${codegenNames.kernels}.exactMicros($d);
+         |if (${ev.value} == ${Kernels.NotFast}L) {
+         |  java.lang.Long $slow = ${codegenNames.kernels}.exactMicrosSlow($d, $ansi);
+         |  if ($slow == null) ${ev.isNull} = true;
+         |  else ${ev.value} = $slow;
+         |}""".stripMargin
+    })
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }

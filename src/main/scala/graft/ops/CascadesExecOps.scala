@@ -303,12 +303,7 @@ object CascadesExecOps {
       // session-wide set after the lazy lowering would not.
       val session =
         if (name != "cascades_exec_smj_clustered") s
-        else {
-          val s2 = s.newSession()
-          s2.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering",
-            "true")
-          s2
-        }
+        else orderedSession(s)
       val clustered = clusteredFor(name)
       val bucketed = clustered.map { case (t, key) =>
         t -> bucketedTable(session, d, t, key) }
@@ -322,6 +317,29 @@ object CascadesExecOps {
       val catalog = tableCatalog(session, d)
       (winner, Execution.lower(winner, t => bucketed.getOrElse(t, catalog(t))))
   }
+
+  /** The child session smj_clustered builds on for caller `s`, created
+    * once and kept while `s` lives: later builds read the layouts through
+    * the relations this session already resolved (see [[bucketedTable]])
+    * instead of refreshing and resolving the tables in a new session each
+    * time.
+    */
+  private def orderedSession(s: SparkSession): SparkSession =
+    orderedSessions.synchronized {
+      orderedSessions.computeIfAbsent(s, _ => {
+        val child = s.newSession()
+        child.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering",
+          "true")
+        child
+      })
+    }
+
+  /** [[orderedSession]]'s children, weakly keyed by caller (by identity:
+    * a session does not override `equals`); a child does not refer back
+    * to its caller, so a caller that is dropped takes its child with it.
+    */
+  private val orderedSessions =
+    new java.util.WeakHashMap[SparkSession, SparkSession]()
 
   /** The clustered layouts a query reads, table → bucket-and-sort key.
     * agg_clustered runs with whatever bucketedTableScan ordering conf the

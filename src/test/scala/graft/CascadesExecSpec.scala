@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 import graft.cascades._
@@ -1065,6 +1066,27 @@ class CascadesExecSpec extends GraftSuite {
     }
     assert(jobs == 0, s"a warm build launched $jobs job(s)")
     assert(rows(df) == oracle(d, agg))
+  }
+
+  test("layout cache: smj_clustered builds on ONE child session per " +
+      "caller, so a warm rebuild reads its layouts through the relations " +
+      "that child already resolved") {
+    val s = spark.newSession()
+    def relations(df: DataFrame) = df.queryExecution.analyzed.collect {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r }
+    val first = CascadesExecOps.planFor(s, d, smj)._2
+    assert(rows(first) == oracle(d, smj))
+    val child = first.sparkSession
+    assert(child ne s)
+    assert(child.conf.get(
+      "spark.sql.legacy.bucketedTableScan.outputOrdering") == "true")
+    val second = CascadesExecOps.planFor(s, d, smj)._2
+    assert(second.sparkSession eq child)
+    val (r1, r2) = (relations(first), relations(second))
+    assert(r1.size == 2 && r2.size == 2, r1)
+    assert(r1.zip(r2).forall { case (a, b) => a eq b },
+      "the warm build resolved its layouts again")
+    assert(rows(second) == oracle(d, smj))
   }
 
   test("layout cache: a scale switch through another session's rewrite " +

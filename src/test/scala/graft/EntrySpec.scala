@@ -27,12 +27,14 @@ class EntrySpec extends GraftSuite {
   test("fast-sum mode drops decimal casts from the plan, same results shape") {
     import graft.ops.Oracle
     def q5 = SparkEntry.queries("q5_region_revenue")(spark, sfDir)
+    // the exact sum converts each row by the micro-unit kernel
     val exactPlan = q5.queryExecution.optimizedPlan.toString
-    assert(exactPlan.contains("decimal(28,6)"), exactPlan.take(2000))
+    assert(exactPlan.contains("exact_micros"), exactPlan.take(2000))
     val exactRows = q5.count()
     try {
       spark.conf.set(Oracle.ExactSumsKey, "false")
       val fastPlan = q5.queryExecution.optimizedPlan.toString
+      assert(!fastPlan.contains("exact_micros"), fastPlan.take(2000))
       assert(!fastPlan.contains("decimal(28,6)"), fastPlan.take(2000))
       // same groups come back; values carry float-sum semantics instead of
       // the DuckDB bit-parity contract

@@ -187,6 +187,123 @@ class FunctionsSpec extends GraftSuite {
       Option(err.getCause).exists(_.toString.contains("zorder2")), err)
   }
 
+  private def exact_micros(c: org.apache.spark.sql.Column) =
+    graft.functions.ColumnBridge.column(graft.functions.ExactMicros(
+      graft.functions.ColumnBridge.expression(c)))
+
+  /** `(c.cast(DECIMAL(28,6)) * 1e6).cast(LONG)`: the per-row conversion
+    * exact_micros replaces, as Spark evaluates it. */
+  private def castChain(c: org.apache.spark.sql.Column) =
+    (c.cast(org.apache.spark.sql.types.DecimalType(28, 6)) * lit(1000000L))
+      .cast("long")
+
+  /** What evaluating `run` gives: Right(the value, or None for NULL), or
+    * Left(the error class of the first SparkThrowable in the cause chain).
+    */
+  private def outcome(run: => Any): Either[String, Option[Long]] =
+    try Right(Option(run).map(_.asInstanceOf[Long]))
+    catch {
+      case e: Throwable =>
+        Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .collectFirst { case t: org.apache.spark.SparkThrowable =>
+            Left(t.getCondition) }
+          .getOrElse(throw e)
+    }
+
+  /** A one-column DataFrame over an RDD: no local relation the optimizer
+    * could fold, so the projection runs in generated code. */
+  private def doubles(vs: Seq[java.lang.Double]) = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+    spark.createDataFrame(spark.sparkContext.parallelize(vs.map(Row(_)), 4),
+      StructType(Seq(StructField("c", DoubleType))))
+  }
+
+  test("exact_micros equals the DECIMAL(28,6) cast chain: value, NULL or " +
+      "error class, in generated code and interpreted, ANSI on and off") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import graft.functions.ExactMicros
+    val rnd = new scala.util.Random(20261019L)
+    def sign = if (rnd.nextBoolean()) 1.0 else -1.0
+    // across magnitudes: 2^-40 .. 2^42 (below the long cast's limit)
+    val random = Seq.fill(100000)(
+      sign * math.scalb(1.0 + rnd.nextDouble(), rnd.nextInt(83) - 40))
+    // TPC-H-shaped p * (1 - d) * (1 + t): cents, whole-percent rates
+    val tpch = Seq.fill(100000) {
+      val p = (90000 + rnd.nextInt(10400000)) / 100.0
+      p * (1.0 - rnd.nextInt(11) / 100.0) * (1.0 + rnd.nextInt(9) / 100.0)
+    }
+    // near half-micros: k ulp either side of (u + 0.5) / 1e6
+    val nearHalf = Seq.fill(20000) {
+      var d = (rnd.nextLong() % 4000000000000L + 0.5) / 1e6
+      val k = rnd.nextInt(17) - 8
+      (1 to k.abs).foreach(_ => d = if (k > 0) math.nextUp(d) else math.nextDown(d))
+      d
+    }
+    val limit = 4294967296.0 // the fast path's bound, 2^32
+    val edges: Seq[java.lang.Double] = Seq(5e-7, 2.5e-6, -1.0000005,
+      123.4567895, -5e-7, 0.0, -0.0, Double.MinPositiveValue,
+      -Double.MinPositiveValue, java.lang.Double.MIN_NORMAL / 3,
+      java.lang.Double.MIN_NORMAL, math.nextDown(limit), limit,
+      math.nextUp(limit), -math.nextDown(limit), -limit, -math.nextUp(limit),
+      9.2e12, -9.2e12, 9.3e12, -9.3e12, 1e21, 1e22, -1e22, 1e300,
+      Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+      .map(Double.box) :+ null
+    val bulk = (random ++ tpch ++ nearHalf).map(Double.box)
+    for (ansi <- Seq(true, false)) {
+      spark.conf.set("spark.sql.ansi.enabled", ansi.toString)
+      try {
+        // bulk: no error is possible below 2^42, one query per side
+        val rows = doubles(bulk)
+          .select(exact_micros(col("c")), castChain(col("c"))).collect()
+        val diff = rows.filter(r => r.get(0) != r.get(1))
+        assert(diff.isEmpty, s"ansi=$ansi: ${diff.take(5).mkString(", ")}")
+        assert(rows.length == bulk.length)
+        // edges: one query each, so an error stops only its own value
+        for (d <- edges) {
+          val want = outcome(doubles(Seq(d)).select(castChain(col("c")))
+            .collect()(0).get(0))
+          val got = outcome(doubles(Seq(d)).select(exact_micros(col("c")))
+            .collect()(0).get(0))
+          val interpreted = outcome(
+            ExactMicros(Literal(d, org.apache.spark.sql.types.DoubleType), ansi)
+              .eval())
+          assert(got == want && interpreted == want,
+            s"ansi=$ansi d=$d: chain $want, kernel $got, interpreted $interpreted")
+        }
+      } finally spark.conf.unset("spark.sql.ansi.enabled")
+    }
+    // the edges reach every arm: NULL, both error classes, wrapping
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      assert(outcome(doubles(Seq(1e22)).select(exact_micros(col("c")))
+        .collect()(0).get(0)) == Left("NUMERIC_VALUE_OUT_OF_RANGE.WITH_SUGGESTION"))
+      assert(outcome(doubles(Seq(9.3e12)).select(exact_micros(col("c")))
+        .collect()(0).get(0)) == Left("CAST_OVERFLOW"))
+    } finally spark.conf.unset("spark.sql.ansi.enabled")
+    assert(ExactMicros(Literal(Double.NaN), ansi = true).eval() == null)
+    assert(ExactMicros(Literal(9.3e12), ansi = false).eval() ==
+      -9146744073709551616L) // 9.3e18 - 2^64
+  }
+
+  test("dsum runs exact_micros inside whole-stage codegen") {
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.debug._
+    val df = spark.read.parquet(s"$sfDir/lineitem.parquet")
+      .groupBy(col("l_returnflag"))
+      .agg(graft.ops.Oracle.dsum(spark, col("l_extendedprice")).as("s"))
+    df.collect() // the adaptive plan is final once executed
+    val code = df.queryExecution.debug.codegenToSeq().map(_._2).mkString("\n")
+    assert(code.contains("exactMicros"), "kernel call not in generated code")
+    // the map-side stage, where each row is converted, is a codegen stage
+    val plan = df.queryExecution.executedPlan
+    val stages = new AdaptiveSparkPlanHelper {}.collect(plan) {
+      case w: WholeStageCodegenExec => w }
+    assert(stages.exists(_.child.exists(_.expressions.exists(
+      _.exists(_.isInstanceOf[graft.functions.ExactMicros])))), plan)
+  }
+
   private object Tables0 {
     def embeddings(s: org.apache.spark.sql.SparkSession, d: String) =
       s.read.parquet(s"$d/embeddings.parquet")
