@@ -3,12 +3,17 @@
 parquet written by graft.Verify, run the oracle SQL in DuckDB over the same
 source tables and compare schema + values exactly (columns sorted by name,
 rows in result order). Usage: check.py <sfDir> <verifyOutDir>"""
-import json, sys, glob, os
+import atexit, json, sys, glob, os, shutil, tempfile
 import duckdb
 import pyarrow.parquet as pq
 
 sf_dir, out_dir = sys.argv[1], sys.argv[2]
-con = duckdb.connect()
+# DuckDB spills to `.tmp/` under the working directory by default; the
+# largest oracles spill gigabytes, so give it a fresh directory outside
+# the checkout and remove it at exit.
+spill_dir = tempfile.mkdtemp(prefix="check_duckdb_spill_")
+atexit.register(shutil.rmtree, spill_dir, ignore_errors=True)
+con = duckdb.connect(config={"temp_directory": spill_dir})
 for p in glob.glob(f"{sf_dir}/*.parquet"):
     name = os.path.basename(p).replace(".parquet", "")
     con.sql(f"CREATE VIEW {name} AS SELECT * FROM '{p}'")

@@ -76,20 +76,6 @@ object Bench {
       val ok = runs.filter(_ >= 0)
       name -> (if (ok.size < runs.size) -1.0 else median(ok))
     }
-    // fast-sum mode demo: q5 re-timed with plain double sums instead of the
-    // DECIMAL(28,6) oracle-parity contract — the production fast path
-    // (results keep Spark float-sum semantics; not oracle-comparable)
-    val fastQ5 = if (only.nonEmpty) -1.0 else try {
-      spark.conf.set(graft.ops.Oracle.ExactSumsKey, "false")
-      val t0 = System.nanoTime()
-      SparkEntry.queries("q5_region_revenue")(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
-      (System.nanoTime() - t0) / 1e9
-    } catch { case NonFatal(_) => -1.0 } finally {
-      spark.conf.set(graft.ops.Oracle.ExactSumsKey, "true")
-      drain(spark)
-    }
-    val withFast = results + ("q5_region_revenue_fast_sums" -> fastQ5)
     // fixed-point, 3 dp: keeps the line short. Field order matters for
     // robustness, not JSON semantics: the driver tail-captures the line, so
     // the load-bearing totals go LAST — a truncated head eats individual
@@ -105,10 +91,8 @@ object Bench {
       }.mkString("{", ",", "}")
       println(s"""{"metric":"runs","repeats":$repeats,"queries":$rs}""")
     }
-    val qs = withFast.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
+    val qs = results.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
-    // totals cover the CONTRACT queries only — the fast-sum demo entry is
-    // informational and must not skew round-over-round totals
     val total = if (results.nonEmpty) results.values.filter(_ >= 0).sum else 0.0
     val failed = results.values.count(_ < 0)
     println(s"""{"metric":"total","queries":$qs,"n_queries":${results.size},"n_failed":$failed,"sf":"$sfDir","unit":"sec","value":${fmt(total)}}""")

@@ -28,14 +28,14 @@ object Analytics {
         .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-          dsum(s, col("l_quantity")).as("sum_qty"),
-          dsum(s, col("l_extendedprice")).as("sum_base_price"),
-          dsum(s, col("l_extendedprice") * (lit(1.0) - col("l_discount")))
+          dsum(col("l_quantity")).as("sum_qty"),
+          dsum(col("l_extendedprice")).as("sum_base_price"),
+          dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
             .as("sum_disc_price"),
-          dsum(s, col("l_extendedprice") * (lit(1.0) - col("l_discount")) *
+          dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")) *
             (lit(1.0) + col("l_tax"))).as("sum_charge"),
-          davg(s, col("l_quantity")).as("avg_qty"),
-          davg(s, col("l_extendedprice")).as("avg_price"),
+          davg(col("l_quantity")).as("avg_qty"),
+          davg(col("l_extendedprice")).as("avg_price"),
           count(lit(1)).as("count_order"))
         .orderBy("l_returnflag", "l_linestatus")
     },
@@ -48,7 +48,7 @@ object Analytics {
         .join(t.lineitem, col("o_orderkey") === col("l_orderkey"))
         .filter(col("l_shipdate") > lit("1995-03-15").cast("timestamp"))
         .groupBy("l_orderkey", "o_orderdate")
-        .agg(dsum(s, col("l_extendedprice") * (lit(1.0) - col("l_discount")))
+        .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
           .as("revenue"))
         // date-pure values rendered as DATE: a timestamp_ntz OUTPUT is a
         // cross-stack canonicalization hazard (plan-gate type audit)
@@ -65,7 +65,7 @@ object Analytics {
     "q18_large_orders" -> { (s, d) =>
       val t = Tables(s, d)
       val big = t.lineitem.groupBy("l_orderkey")
-        .agg(dsum(s, col("l_quantity")).as("sum_qty"))
+        .agg(dsum(col("l_quantity")).as("sum_qty"))
         .filter(col("sum_qty") > 300)
       t.orders.join(big, col("o_orderkey") === col("l_orderkey"))
         .join(t.customer, col("o_custkey") === col("c_custkey"))
@@ -84,7 +84,7 @@ object Analytics {
         .join(t.orders, col("c_custkey") === col("o_custkey"))
         .join(t.lineitem, col("o_orderkey") === col("l_orderkey"))
         .groupBy("r_name", "n_name")
-        .agg(dsum(s, col("l_extendedprice") * (lit(1.0) - col("l_discount")))
+        .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
           .as("revenue"),
           count(lit(1)).as("n"))
         .orderBy("r_name", "n_name")
@@ -122,7 +122,7 @@ object Analytics {
             col("cust_nation") === "NATION_1"))
         .groupBy(col("supp_nation"), col("cust_nation"),
           year(col("l_shipdate")).as("l_year"))
-        .agg(dsum(s, col("l_extendedprice") * (lit(1.0) - col("l_discount")))
+        .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
           .as("revenue"))
         .orderBy("supp_nation", "cust_nation", "l_year")
     },
@@ -148,7 +148,7 @@ object Analytics {
           col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("n_name").as("nation"),
           year(col("o_orderdate")).as("o_year"))
-        .agg(dsum(s, col("l_extendedprice") * (lit(1.0) - col("l_discount")))
+        .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
           .as("profit"))
         .orderBy(col("nation").asc, col("o_year").desc)
     },
@@ -166,9 +166,9 @@ object Analytics {
           col("l_shipdate") < lit("1995-11-01").cast("timestamp"))
         .join(broadcast(t.part), col("l_partkey") === col("p_partkey"))
         .agg(
-          dsum(s, when(col("p_type") === "PROMO", disc).otherwise(lit(0.0)))
+          dsum(when(col("p_type") === "PROMO", disc).otherwise(lit(0.0)))
             .as("promo_revenue"),
-          dsum(s, disc).as("total_revenue"))
+          dsum(disc).as("total_revenue"))
         .select(col("promo_revenue"), col("total_revenue"),
           (col("promo_revenue") * lit(100.0) / col("total_revenue"))
             .as("promo_pct"))
@@ -184,10 +184,10 @@ object Analytics {
     "q17_small_quantity" -> { (s, d) =>
       val li = Tables(s, d).lineitem
       val avgq = li.groupBy(col("l_partkey").as("ak"))
-        .agg(davg(s, col("l_quantity")).as("avg_qty"))
+        .agg(davg(col("l_quantity")).as("avg_qty"))
       li.join(avgq, col("l_partkey") === col("ak"))
         .filter(col("l_quantity") < lit(0.2) * col("avg_qty"))
-        .agg((dsum(s, col("l_extendedprice")) / lit(7.0)).as("avg_yearly"),
+        .agg((dsum(col("l_extendedprice")) / lit(7.0)).as("avg_yearly"),
           count(lit(1)).as("n"))
     },
     "agg_stats" -> { (s, d) =>
@@ -203,7 +203,7 @@ object Analytics {
     "rollup_agg" -> { (s, d) =>
       Tables(s, d).lineitem
         .rollup("l_returnflag", "l_linestatus")
-        .agg(count(lit(1)).as("n"), dsum(s, col("l_quantity")).as("sum_qty"))
+        .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("sum_qty"))
         .orderBy(col("l_returnflag").asc_nulls_first,
           col("l_linestatus").asc_nulls_first)
     },
@@ -224,7 +224,7 @@ object Analytics {
     "cube_agg" -> { (s, d) =>
       Tables(s, d).orders
         .cube("o_orderstatus", "o_orderpriority")
-        .agg(count(lit(1)).as("n"), dsum(s, col("o_totalprice")).as("sum_price"))
+        .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("sum_price"))
         .orderBy(col("o_orderstatus").asc_nulls_first,
           col("o_orderpriority").asc_nulls_first)
     },
@@ -416,7 +416,7 @@ object Analytics {
     // Scalar aggregate subquery: orders above the (exact) mean price.
     "subquery_scalar" -> { (s, d) =>
       val t = Tables(s, d)
-      val avgPrice = t.orders.agg(davg(s, col("o_totalprice")).as("a"))
+      val avgPrice = t.orders.agg(davg(col("o_totalprice")).as("a"))
       t.orders.crossJoin(avgPrice)
         .filter(col("o_totalprice") > col("a"))
         .select("o_orderkey", "o_totalprice")
@@ -431,7 +431,7 @@ object Analytics {
           col("l_shipdate") < lit("1995-01-01").cast("timestamp") &&
           col("l_discount") >= 0.04 && col("l_discount") <= 0.06 &&
           col("l_quantity") < 24)
-        .agg(dsum(s, col("l_extendedprice") * col("l_discount")).as("revenue"),
+        .agg(dsum(col("l_extendedprice") * col("l_discount")).as("revenue"),
           count(lit(1)).as("n"))
     },
     // Correlated scalar subquery through the SQL surface — Catalyst
@@ -457,7 +457,7 @@ object Analytics {
     "agg_by_partsupp" -> { (s, d) =>
       Tables(s, d).lineitem
         .groupBy("l_partkey", "l_suppkey")
-        .agg(dsum(s, col("l_quantity")).as("sum_qty"), count(lit(1)).as("n"))
+        .agg(dsum(col("l_quantity")).as("sum_qty"), count(lit(1)).as("n"))
         .filter(col("n") >= 2)
         .orderBy("l_partkey", "l_suppkey")
     }

@@ -38,7 +38,7 @@ object AnalyticsExt {
         .agg(
           count(when(col("l_quantity") >= 25, 1)).as("n_heavy"),
           count(when(col("l_discount") > 0.05, 1)).as("n_discounted"),
-          dsum(s, when(col("l_tax") > 0.04, col("l_extendedprice"))
+          dsum(when(col("l_tax") > 0.04, col("l_extendedprice"))
             .otherwise(lit(0.0))).as("taxed_price"))
         .orderBy("l_returnflag")
     },
@@ -49,8 +49,8 @@ object AnalyticsExt {
     // path's per-row and per-group capacity (see Oracle doc).
     "agg_variance" -> { (s, d) =>
       val n = count(lit(1)).cast(DoubleType)
-      val sm = dsum(s, col("l_quantity"))
-      val sq = dsum(s, col("l_quantity") * col("l_quantity"))
+      val sm = dsum(col("l_quantity"))
+      val sq = dsum(col("l_quantity") * col("l_quantity"))
       Tables(s, d).lineitem
         .groupBy("l_returnflag")
         .agg(((sq - (sm * sm) / n) / (n - lit(1.0))).as("var_qty"),
@@ -98,7 +98,7 @@ object AnalyticsExt {
       val salted = Tables(s, d).lineitem
         .withColumn("salt", pmod(col("l_orderkey"), lit(8)))
         .groupBy("l_returnflag", "salt")
-        .agg(sum(col("l_extendedprice").cast(DecimalType(28, 6))).as("ps"),
+        .agg(exactDecimalSumWide(col("l_extendedprice")).as("ps"),
           count(lit(1)).as("pc"))
       salted.groupBy("l_returnflag")
         .agg(sum(col("ps")).cast(DoubleType).as("sum_price"),
@@ -121,7 +121,7 @@ object AnalyticsExt {
         .select(col("o_orderkey").as("k"), col("o_orderstatus"))
       li.join(ord, "k")
         .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"), dsum(s, col("l_extendedprice")).as("rev"))
+        .agg(count(lit(1)).as("n"), dsum(col("l_extendedprice")).as("rev"))
         .orderBy("o_orderstatus")
     },
     // BANDED range join — the scale-safe plan for "rows within Δt of
@@ -158,9 +158,7 @@ object AnalyticsExt {
         .rangeBetween(-30, 0)
       Tables(s, d).orders
         .withColumn("day_num", dayNum)
-        .withColumn("rolling_30d",
-          sum(col("o_totalprice").cast(DecimalType(28, 6))).over(w)
-            .cast(DoubleType))
+        .withColumn("rolling_30d", dsumOver(col("o_totalprice"), w))
         .select("o_custkey", "o_orderkey", "day_num", "rolling_30d")
         .orderBy("o_custkey", "o_orderkey")
     },
@@ -171,7 +169,7 @@ object AnalyticsExt {
       Tables(s, d).orders
         .withColumn("quartile", ntile(4).over(w))
         .groupBy("o_orderstatus", "quartile")
-        .agg(count(lit(1)).as("n"), dsum(s, col("o_totalprice")).as("sum_price"))
+        .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("sum_price"))
         .orderBy("o_orderstatus", "quartile")
     },
     // Custom TypedImperativeAggregate: exact top-5 order prices per status
@@ -516,9 +514,9 @@ object AnalyticsExt {
     "unpivot_metrics" -> { (s, d) =>
       Tables(s, d).lineitem
         .groupBy("l_returnflag")
-        .agg(dsum(s, col("l_quantity")).as("sum_qty"),
-          dsum(s, col("l_discount")).as("sum_disc"),
-          dsum(s, col("l_tax")).as("sum_tax"))
+        .agg(dsum(col("l_quantity")).as("sum_qty"),
+          dsum(col("l_discount")).as("sum_disc"),
+          dsum(col("l_tax")).as("sum_tax"))
         .unpivot(Array(col("l_returnflag")),
           Array(col("sum_qty"), col("sum_disc"), col("sum_tax")),
           "metric", "value")

@@ -68,9 +68,9 @@ object AnalyticsTpch {
         .join(supN, col("l_suppkey") === col("s_suppkey"))
         .groupBy(year(col("o_orderdate")).as("o_year"))
         .agg(
-          dsum(s, when(col("supp_nation") === "NATION_7", disc)
+          dsum(when(col("supp_nation") === "NATION_7", disc)
             .otherwise(lit(0.0))).as("nation_revenue"),
-          dsum(s, disc).as("total_revenue"))
+          dsum(disc).as("total_revenue"))
         .select(col("o_year"), col("nation_revenue"), col("total_revenue"),
           (col("nation_revenue") / col("total_revenue")).as("mkt_share"))
         .orderBy("o_year")
@@ -91,7 +91,7 @@ object AnalyticsTpch {
           col("o_orderkey") === col("l_orderkey"))
         .join(broadcast(t.nation), col("c_nationkey") === col("n_nationkey"))
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(dsum(s, col("l_extendedprice") * (lit(1.0) - col("l_discount")))
+        .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
           .as("revenue"))
         .orderBy(col("revenue").desc, col("c_custkey").asc)
         .limit(20)
@@ -128,7 +128,7 @@ object AnalyticsTpch {
               col("l_quantity").between(10, 20)) ||
             (col("p_brand") === "Brand#3" && col("p_size").between(1, 35) &&
               col("l_quantity").between(20, 30)))
-        .agg(dsum(s, col("l_extendedprice") * (lit(1.0) - col("l_discount")))
+        .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
           .as("revenue"), count(lit(1)).as("n"))
     },
     // TPC-H Q21-style (suppliers who kept orders waiting → here: the sole
@@ -195,7 +195,7 @@ object AnalyticsTpch {
         .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
           col("l_shipdate") < lit("1996-04-01").cast("timestamp"))
         .groupBy("l_suppkey")
-        .agg(dsum(s, col("l_extendedprice") * (lit(1.0) - col("l_discount")))
+        .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
           .as("total_revenue"))
       val mx = rev.agg(max(col("total_revenue")).as("mx"))
       rev.crossJoin(broadcast(mx))
@@ -240,7 +240,7 @@ object AnalyticsTpch {
         .join(broadcast(t.part.filter(col("p_type") === "PROMO")
           .select("p_partkey")), col("l_partkey") === col("p_partkey"))
         .groupBy("l_suppkey")
-        .agg(dsum(s, col("l_quantity")).as("qty"))
+        .agg(dsum(col("l_quantity")).as("qty"))
         .filter(col("qty") > 400.0)
       t.supplier
         .join(heavy, col("s_suppkey") === col("l_suppkey"), "left_semi")
@@ -269,9 +269,9 @@ object AnalyticsTpch {
       val perPart = t.lineitem
         .join(natSupp, col("l_suppkey") === col("s_suppkey"), "left_semi")
         .groupBy("l_partkey")
-        .agg(dsum(s, col("l_extendedprice") * col("l_quantity"))
+        .agg(dsum(col("l_extendedprice") * col("l_quantity"))
           .as("value"))
-      val total = perPart.agg(dsum(s, col("value")).as("tot"))
+      val total = perPart.agg(dsum(col("value")).as("tot"))
       perPart.crossJoin(broadcast(total))
         .filter(col("value") * lit(5000) > col("tot"))
         .select("l_partkey", "value")
@@ -309,7 +309,7 @@ object AnalyticsTpch {
     "q22_idle_customers" -> { (s, d) =>
       val t = Tables(s, d)
       val avgBal = t.customer.filter(col("c_acctbal") > 0.0)
-        .agg(davg(s, col("c_acctbal")).as("ab"))
+        .agg(davg(col("c_acctbal")).as("ab"))
       val recent = t.orders
         .filter(col("o_orderdate") >= lit("2000-01-01").cast("timestamp"))
         .select("o_custkey")
@@ -320,7 +320,7 @@ object AnalyticsTpch {
         .join(broadcast(t.nation), col("c_nationkey") === col("n_nationkey"))
         .groupBy("n_name")
         .agg(count(lit(1)).as("numcust"),
-          dsum(s, col("c_acctbal")).as("totacctbal"))
+          dsum(col("c_acctbal")).as("totacctbal"))
         .orderBy("n_name")
     }
   )

@@ -859,7 +859,7 @@ object DataOps {
     // rank is deterministic (the sorted multiset doesn't care which tied
     // row got which rank), which is all the threshold extraction reads.
     "data_winsorize" -> { (s, d) =>
-      winsorizeFrom(s, Tables(s, d).lineitemPar // r10: kernel rebalance
+      winsorizeFrom(Tables(s, d).lineitemPar // r10: kernel rebalance
         .select(col("l_returnflag").as("grp"), col("l_extendedprice").as("v")))
     },
     // Small-file compaction planner — the OPTIMIZE/bin-packing step a
@@ -1011,7 +1011,7 @@ object DataOps {
         .union(term(true, false)).union(term(true, true))
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_rows"),
-          Oracle.dsum(s, col("l_quantity")).as("sum_qty"))
+          Oracle.dsum(col("l_quantity")).as("sum_qty"))
         .orderBy("o_orderstatus")
     },
     "data_zonemap_prune" -> { (s, d) =>
@@ -1347,7 +1347,7 @@ object DataOps {
         .agg(count(lit(1)).as("n_events"),
           count(when(col("event_type") === "purchase", 1))
             .as("n_purchases"),
-          Oracle.dsum(s, col("value")).as("sum_value"))
+          Oracle.dsum(col("value")).as("sum_value"))
         .orderBy("pseudonym")
     },
     // CDC apply — the change-data-capture merge every lakehouse table
@@ -1925,7 +1925,7 @@ object DataOps {
   /** Winsorize core over any frame with (grp, v) — separated so specs can
     * plant a group with known order statistics.
     */
-  def winsorizeFrom(s: SparkSession, vals: DataFrame): DataFrame = {
+  def winsorizeFrom(vals: DataFrame): DataFrame = {
     val lorank = floor(lit(0.05) * (col("n") - 1)) + 1
     val hirank = floor(lit(0.95) * (col("n") - 1)) + 1
     val thr = vals
@@ -1945,7 +1945,7 @@ object DataOps {
       .agg(count(lit(1)).as("n"), max(col("lo")).as("lo"),
         max(col("hi")).as("hi"), sum(col("lowf")).as("n_low"),
         sum(col("highf")).as("n_high"),
-        Oracle.dsum(s, col("cv")).as("sum_winsorized"))
+        Oracle.dsum(col("cv")).as("sum_winsorized"))
       .orderBy("grp")
   }
 

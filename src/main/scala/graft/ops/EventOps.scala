@@ -59,7 +59,7 @@ object EventOps {
           // floor division, matching DuckDB's `//` for negative epochs
           expr(floorDivSql("ts_ms", HourMs)).as("hour_bucket"),
           col("event_type"))
-        .agg(count(lit(1)).as("n"), dsum(s, col("value")).as("sum_value"))
+        .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
         .orderBy("hour_bucket", "event_type")
     },
     // Exact SLIDING-window distinct users (3h window, 1h slide) via the
@@ -103,7 +103,7 @@ object EventOps {
         .agg(count(lit(1)).as("n_events"),
           min(col("ts_ms")).as("start_ms"),
           max(col("ts_ms")).as("end_ms"),
-          dsum(s, col("value")).as("sum_value"))
+          dsum(col("value")).as("sum_value"))
         .orderBy("user_id", "session_idx")
     },
     // Daily bounce rate — the engagement-health headline over the
@@ -222,7 +222,7 @@ object EventOps {
         .groupBy("user_id")
         .agg(count(lit(1)).as("n"),
           countDistinct(col("event_type")).as("n_types"),
-          dsum(s, col("value")).as("sum_value"),
+          dsum(col("value")).as("sum_value"),
           max(col("ts_ms")).as("last_ms"))
         .orderBy("user_id")
     },
@@ -300,7 +300,7 @@ object EventOps {
       def partial(df: DataFrame): DataFrame =
         df.groupBy("hour_bucket", "event_type")
           .agg(count(lit(1)).as("n"),
-            sum(col("value").cast(DecimalType(28, 6))).as("sv"))
+            exactDecimalSumWide(col("value")).as("sv"))
       val state = partial(e.filter(col("event_id") % 2 === 0))
       val delta = partial(e.filter(col("event_id") % 2 === 1))
       state.unionByName(delta)
@@ -318,7 +318,7 @@ object EventOps {
       e.groupBy(
           ((expr(floorDivSql("ts_ms", 86400000L)) + 4) % 7).as("dow"),
           (expr(floorDivSql("ts_ms", HourMs)) % 24).as("hod"))
-        .agg(count(lit(1)).as("n"), dsum(s, col("value")).as("sum_value"))
+        .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
         .orderBy("dow", "hod")
     },
     // Autocorrelation of the daily event-count series at lags 1 and 7 —
@@ -359,12 +359,8 @@ object EventOps {
         .rowsBetween(Window.unboundedPreceding, -1)
       withMs(Tables(s, d).events)
         .withColumn("n_prev", count(col("value")).over(w))
-        .withColumn("s1",
-          sum(col("value").cast(DecimalType(28, 6))).over(w)
-            .cast(DoubleType))
-        .withColumn("s2",
-          sum((col("value") * col("value")).cast(DecimalType(28, 6))).over(w)
-            .cast(DoubleType))
+        .withColumn("s1", dsumOver(col("value"), w))
+        .withColumn("s2", dsumOver(col("value") * col("value"), w))
         .filter(col("event_type") === "purchase" && col("n_prev") >= 5)
         .withColumn("mean", col("s1") / col("n_prev"))
         .withColumn("variance",
@@ -396,7 +392,7 @@ object EventOps {
     // rank-threshold broadcast compares (the data_winsorize trick), same
     // semantics. Tie-break on user_id makes every quintile deterministic.
     "events_rfm" -> { (s, d) =>
-      rfmFrom(s, withMs(Tables(s, d).events))
+      rfmFrom(withMs(Tables(s, d).events))
     },
     // Marketing attribution over the event stream: every non-purchase
     // event within the 7 days before a user's purchase is a "touch"; per
@@ -908,7 +904,7 @@ object EventOps {
     "events_holt_forecast" -> { (s, d) =>
       val days = withMs(Tables(s, d).events)
         .groupBy(expr(floorDivSql("ts_ms", DayMs)).as("day"))
-        .agg(dsum(s, col("value")).as("rev"))
+        .agg(dsum(col("value")).as("rev"))
         .select(col("day"), col("rev").cast("double").as("y"))
       days
         .agg(sort_array(collect_list(struct(col("day"), col("y"))))
@@ -946,7 +942,7 @@ object EventOps {
       val hourly = withMs(Tables(s, d).events)
         .groupBy(expr(floorDivSql("ts_ms", HourMs)).as("hb"),
           col("event_type"))
-        .agg(dsum(s, col("value")).as("v"))
+        .agg(dsum(col("value")).as("v"))
         .withColumn("day", expr(floorDivSql("hb", 24L)))
         .withColumn("i", pmod(col("hb"), lit(24L)))
       val w = Window.partitionBy("event_type", "day").orderBy("i")
@@ -1052,7 +1048,7 @@ object EventOps {
         .groupBy(col("cohort_w"),
           (expr(floorDivSql("day", 7L)) - col("cohort_w")).as("age_w"))
         .agg(countDistinct(col("user_id")).as("n_buyers"),
-          sum(col("value").cast(DecimalType(28, 6))).as("rev"))
+          exactDecimalSumWide(col("value")).as("rev"))
       val wc = Window.partitionBy("cohort_w").orderBy("age_w")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       cells.join(broadcast(sizes), "cohort_w")
@@ -1110,8 +1106,7 @@ object EventOps {
       val perUser = Tables(s, d).events
         .groupBy("user_id")
         .agg(coalesce(
-          sum(when(col("event_type") === "purchase", col("value"))
-            .cast(DecimalType(28, 6))).cast(DoubleType),
+          dsum(when(col("event_type") === "purchase", col("value"))),
           lit(0.0)).as("m"))
         .withColumn("arm",
           when(pmod(xxhash64(concat(lit("AB"),
@@ -1145,8 +1140,8 @@ object EventOps {
       val perUser = Tables(s, d).events
         .groupBy("user_id")
         .agg(coalesce(
-          sum(when(col("event_type") === "purchase", col("value"))
-            .cast(DecimalType(28, 6))),
+          exactDecimalSumWide(
+            when(col("event_type") === "purchase", col("value"))),
           lit(0).cast(DecimalType(28, 6))).as("m"))
         .withColumn("arm",
           when(pmod(xxhash64(concat(lit("AB"),
@@ -1390,7 +1385,7 @@ object EventOps {
       def cell(a: String, pre: Boolean) = {
         val per = if (pre) col("day") < col("split_day")
           else col("day") >= col("split_day")
-        coalesce(dsum(s, when(col("arm") === a && per &&
+        coalesce(dsum(when(col("arm") === a && per &&
           col("event_type") === "purchase", col("value"))), lit(0.0))
       }
       val g = e.crossJoin(broadcast(split)).withColumn("arm", arm)
@@ -1430,8 +1425,7 @@ object EventOps {
       val perUser = Tables(s, d).events
         .groupBy("user_id")
         .agg(coalesce(
-          sum(when(col("event_type") === "purchase", col("value"))
-            .cast(DecimalType(28, 6))).cast(DoubleType),
+          dsum(when(col("event_type") === "purchase", col("value"))),
           lit(0.0)).as("m"))
         .withColumn("arm",
           when(pmod(xxhash64(concat(lit("AB"),
@@ -1801,12 +1795,12 @@ object EventOps {
   /** RFM core over any frame with (user_id, ts_ms, value) — separated so
     * specs can plant users with known quintile boundaries.
     */
-  def rfmFrom(s: SparkSession, events: DataFrame): DataFrame = {
+  def rfmFrom(events: DataFrame): DataFrame = {
     def q(order: Seq[Column]): Column =
       ntile(5).over(Window.orderBy(order :+ col("user_id").asc: _*))
     events.groupBy("user_id")
       .agg(max(col("ts_ms")).as("r_ms"), count(lit(1)).as("f"),
-        dsum(s, col("value")).as("m"))
+        dsum(col("value")).as("m"))
       .withColumn("r_q", q(Seq(col("r_ms").desc)))
       .withColumn("f_q", q(Seq(col("f").desc)))
       .withColumn("m_q", q(Seq(col("m").desc)))

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.expressions.WindowSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
@@ -37,8 +38,7 @@ import graft.functions.{ColumnBridge, ExactMicros}
   * d). Every other row — near a half-micro, large, NaN or ±Inf —
   * evaluates Spark's own cast chain, so its value, NULL or ANSI error is
   * the cast's. q1_pricing in-JVM (sf0.1, `local[4]`, 12 warm runs):
-  * 969 ms median with the cast per row, 415 ms with the kernel, 329 ms
-  * with plain double sums.
+  * 969 ms median with the cast per row, 415 ms with the kernel.
   *
   * Capacity (100 TB framing): the per-row long cast holds for |value| <=
   * ~9.2e12 (money/metric magnitudes; ANSI mode makes the cast throw loudly
@@ -47,25 +47,14 @@ import graft.functions.{ColumnBridge, ExactMicros}
   * money-scale values). ANSI sum-overflow also throws rather than wrapping,
   * so exceeding either bound is loud, never silent corruption. Sums of
   * SQUARES (e.g. agg_corr's price^2 moments, ~1e16 units/row) exceed the
-  * hi capacity at large-group scale and deliberately stay on the direct
-  * decimal path at their call sites.
+  * hi capacity at large-group scale and go through the three-limb
+  * [[exactDecimalSumWide]] instead.
   *
-  * Production runs that accept standard float-sum semantics (every Spark
-  * deployment does) can set [[Oracle.ExactSumsKey]] to `false` and get
-  * plain double sums; results then match Spark-anywhere semantics
-  * (order-dependent last bits) instead of DuckDB bit-parity. The flag is
-  * read at QUERY BUILD time from the session the query builder was handed —
-  * NOT the thread-local active session, which on a builder thread other
-  * than the one that set the conf would silently resolve to a different
-  * (or no) session and fall back to the default mode.
+  * Every DECIMAL(28,6) sum of a double in graft goes through this object:
+  * [[dsum]]/[[davg]] for double results, [[dsumOver]] for window frames and
+  * [[exactDecimalSumWide]] where the decimal total itself is kept.
   */
 object Oracle {
-  /** Session conf key selecting exact (decimal) vs fast (double) sums. */
-  val ExactSumsKey = "spark.graft.exactSums"
-
-  private def exactSums(spark: SparkSession): Boolean =
-    spark.conf.get(ExactSumsKey, "true").toBoolean
-
   private val Shift = 23
   private val Mask = (1L << Shift) - 1
 
@@ -78,13 +67,14 @@ object Oracle {
     ColumnBridge.column(ExactMicros(ColumnBridge.expression(c)))
 
   /** Exact DECIMAL(28,6)-sum-to-double via two long partial sums (see the
-    * object doc). NULL rows drop out of both partials identically to a
-    * decimal sum; an all-null or empty group yields NULL hi/lo and thus a
+    * object doc), each taken by `total` (a group's `sum`, or `sum` over a
+    * window). NULL rows drop out of both partials identically to a decimal
+    * sum; an all-null or empty group or frame yields NULL hi/lo and thus a
     * NULL result, matching SUM semantics. */
-  private def hiloExactSum(c: Column): Column = {
+  private def hiloExactSum(c: Column, total: Column => Column): Column = {
     val units = micros(c)
-    val hi = sum(shiftright(units, Shift))
-    val lo = sum(units.bitwiseAND(lit(Mask)))
+    val hi = total(shiftright(units, Shift))
+    val lo = total(units.bitwiseAND(lit(Mask)))
     ((hi.cast(DecimalType(38, 0)) * lit(1L << Shift) +
       lo.cast(DecimalType(38, 0))) *
       lit(new java.math.BigDecimal("0.000001"))).cast(DoubleType)
@@ -111,20 +101,20 @@ object Oracle {
       lit(new java.math.BigDecimal("0.000001"))).cast(DecimalType(38, 6))
   }
 
-  /** Sum of a double column: exact (bit-identical to a DECIMAL(28,6) sum,
-    * via long hi/lo partials) by default, plain double sum when
-    * `spark.graft.exactSums=false` on `spark`'s conf. */
-  def dsum(spark: SparkSession, c: Column): Column =
-    if (exactSums(spark)) hiloExactSum(c)
-    else sum(c)
+  /** Sum of a double column, bit-identical to
+    * `sum(c.cast(DECIMAL(28,6))).cast(DOUBLE)` (via long hi/lo partials). */
+  def dsum(c: Column): Column = hiloExactSum(c, sum(_))
 
-  /** Average of a double column, same mode selection as [[dsum]]. */
-  def davg(spark: SparkSession, c: Column): Column =
-    if (exactSums(spark)) hiloExactSum(c) / count(lit(1))
-    else sum(c) / count(lit(1))
+  /** [[dsum]] over a window frame: bit-identical to
+    * `sum(c.cast(DECIMAL(28,6))).over(w).cast(DOUBLE)`, NULL on an empty
+    * frame. */
+  def dsumOver(c: Column, w: WindowSpec): Column =
+    hiloExactSum(c, sum(_).over(w))
 
-  /** The oracle-side spelling of [[dsum]] (the oracle always checks the
-    * exact mode — fast mode is not oracle-comparable by construction). */
+  /** Average of a double column: [[dsum]] over the group's row count. */
+  def davg(c: Column): Column = dsum(c) / count(lit(1))
+
+  /** The oracle-side spelling of [[dsum]]. */
   def sqlSum(expr: String): String =
     s"CAST(SUM(CAST($expr AS DECIMAL(28,6))) AS DOUBLE)"
 

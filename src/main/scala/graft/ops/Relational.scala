@@ -129,7 +129,7 @@ object Relational {
       val t = Tables(s, d)
       t.orders.join(t.lineitem, col("o_orderkey") === col("l_orderkey"))
         .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"), dsum(s, col("l_extendedprice")).as("sum_price"))
+        .agg(count(lit(1)).as("n"), dsum(col("l_extendedprice")).as("sum_price"))
         .orderBy("o_orderstatus")
     },
     // CommutateJoinRule (rules/join.rs:27-69): same join, build side swapped —
@@ -138,7 +138,7 @@ object Relational {
       val t = Tables(s, d)
       t.lineitem.join(t.orders, col("l_orderkey") === col("o_orderkey"))
         .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"), dsum(s, col("l_extendedprice")).as("sum_price"))
+        .agg(count(lit(1)).as("n"), dsum(col("l_extendedprice")).as("sum_price"))
         .orderBy("o_orderstatus")
     },
     // Join type surface beyond Inner (the reference's Join struct admits all

@@ -944,7 +944,7 @@ object SimilarityOps {
     // fan-out), collapses to (a, b) by conditional min, and the final
     // aggregate is label-keyed.
     "sim_silhouette" -> { (s, d) =>
-      silhouetteFrom(s, Tables(s, d).embeddings)
+      silhouetteFrom(Tables(s, d).embeddings)
     },
     // Recall-vs-depth curve for the multi-probe LSH search — the THIRD
     // tuning axis next to the nprobe curve (IVF) and threshold curve
@@ -1260,7 +1260,7 @@ object SimilarityOps {
           (col("mx") - col("mn")) / lit(255.0)))
     err.groupBy("label")
       .agg(count(lit(1)).as("n_elems"),
-        Oracle.dsum(s, col("err") * col("err") * lit(1.0e9)).as("se9"),
+        Oracle.dsum(col("err") * col("err") * lit(1.0e9)).as("se9"),
         max(abs(col("err"))).as("max_abs_err"))
       .select(col("label"), col("n_elems"),
         ((col("se9") / lit(1.0e9)) / col("n_elems").cast("double"))
@@ -1273,7 +1273,7 @@ object SimilarityOps {
     * frame — separated so specs can plant clusters with hand-computable
     * integer distances. See the `sim_silhouette` query comment.
     */
-  def silhouetteFrom(s: SparkSession, emb: DataFrame): DataFrame = {
+  def silhouetteFrom(emb: DataFrame): DataFrame = {
       val base = emb
         .filter(col("embedding").isNotNull)
         .select(col("vec_id"), col("label"),
@@ -1302,7 +1302,7 @@ object SimilarityOps {
       per.select(col("label"), sil.as("s"))
         .groupBy("label")
         .agg(count(lit(1)).as("n"),
-          graft.ops.Oracle.dsum(s, col("s")).as("sum_silhouette"))
+          graft.ops.Oracle.dsum(col("s")).as("sum_silhouette"))
         .select(col("label"), col("n"), col("sum_silhouette"),
           (col("sum_silhouette") / col("n").cast("double"))
             .as("avg_silhouette"))

@@ -56,7 +56,7 @@ object StreamingOps {
     events
       .withWatermark("event_ts", "2 hours")
       .groupBy(window(col("event_ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), dsum(events.sparkSession, col("value")).as("sum_value"))
+      .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
       .select(col("window.start").as("win_start"), col("event_type"),
         col("n"), col("sum_value"))
 
@@ -72,7 +72,7 @@ object StreamingOps {
       .groupBy(window(col("event_ts"), "2 hours", "1 hour"),
         col("event_type"))
       .agg(count(lit(1)).as("n"),
-        dsum(events.sparkSession, col("value")).as("sum_value"))
+        dsum(col("value")).as("sum_value"))
       .select(col("window.start").as("win_start"), col("event_type"),
         col("n"), col("sum_value"))
 
@@ -292,7 +292,7 @@ object StreamingOps {
         session_window(col("event_ts_ms"), "1800001 milliseconds").as("sw"))
       .agg(count(lit(1)).as("n_events"),
         max(unix_millis(col("event_ts_ms"))).as("end_ms"),
-        dsum(events.sparkSession, col("value")).as("sum_value"))
+        dsum(col("value")).as("sum_value"))
       .select(col("user_id"), unix_millis(col("sw.start")).as("start_ms"),
         col("n_events"), col("end_ms"), col("sum_value"))
 
@@ -871,7 +871,7 @@ object StreamingOps {
         .withWatermark("event_ts", "2 hours")
         .join(cust, "user_id")
         .groupBy(window(col("event_ts"), "1 hour"), col("c_nationkey"))
-        .agg(count(lit(1)).as("n"), dsum(s, col("value")).as("sum_value"))
+        .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
         .select(col("window.start").as("win_start"), col("c_nationkey"),
           col("n"), col("sum_value"))
       runToMemory(enriched, "events_enrich_stream_sink",

@@ -272,7 +272,7 @@ class DataOpsSpec extends GraftSuite {
       "sum on a planted 1..100 group") {
     import spark.implicits._
     val df = (1 to 100).map(i => ("A", i.toDouble)).toDF("grp", "v")
-    val r = DataOps.winsorizeFrom(spark, df).collect()
+    val r = DataOps.winsorizeFrom(df).collect()
     assert(r.length == 1)
     val row = r.head
     assert(row.getString(0) == "A")
@@ -523,7 +523,7 @@ class DataOpsSpec extends GraftSuite {
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_events"),
         count(when(col("event_type") === "purchase", 1)).as("n_purchases"),
-        graft.ops.Oracle.dsum(spark, col("value")).as("sum_value"))
+        graft.ops.Oracle.dsum(col("value")).as("sum_value"))
       .select(
         xxhash64(concat(lit("P"), col("user_id").cast("string")))
           .as("pseudonym"),

@@ -24,21 +24,14 @@ class EntrySpec extends GraftSuite {
     assert(rowsOnly.isEmpty, s"unexpected rows-only set: $rowsOnly")
   }
 
-  test("fast-sum mode drops decimal casts from the plan, same results shape") {
-    import graft.ops.Oracle
-    def q5 = SparkEntry.queries("q5_region_revenue")(spark, sfDir)
-    // the exact sum converts each row by the micro-unit kernel
-    val exactPlan = q5.queryExecution.optimizedPlan.toString
-    assert(exactPlan.contains("exact_micros"), exactPlan.take(2000))
-    val exactRows = q5.count()
-    try {
-      spark.conf.set(Oracle.ExactSumsKey, "false")
-      val fastPlan = q5.queryExecution.optimizedPlan.toString
-      assert(!fastPlan.contains("exact_micros"), fastPlan.take(2000))
-      assert(!fastPlan.contains("decimal(28,6)"), fastPlan.take(2000))
-      // same groups come back; values carry float-sum semantics instead of
-      // the DuckDB bit-parity contract
-      assert(q5.count() == exactRows)
-    } finally spark.conf.set(Oracle.ExactSumsKey, "true")
+  test("every DECIMAL(28,6) sum of a double runs the exact_micros kernel") {
+    val queries = Seq("q5_region_revenue", "events_hourly_incremental",
+      "events_anomaly_zscore", "events_cohort_ltv", "events_ab_quantiles",
+      "events_power_mde", "events_ab_ks", "agg_salted", "window_rolling_30d")
+    for (name <- queries) {
+      val plan = SparkEntry.queries(name)(spark, sfDir)
+        .queryExecution.optimizedPlan.toString
+      assert(plan.contains("exact_micros"), s"$name: ${plan.take(2000)}")
+    }
   }
 }

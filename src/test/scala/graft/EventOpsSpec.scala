@@ -212,7 +212,7 @@ class EventOpsSpec extends GraftSuite {
         (2 to 5).flatMap(i => (1 to i).map(j =>
           (i.toLong, (i * 100 + j).toLong, (i - 1).toDouble)))
     val df = rows.toDF("user_id", "ts_ms", "value")
-    val out = EventOps.rfmFrom(spark, df).collect()
+    val out = EventOps.rfmFrom(df).collect()
       .map(r => r.getLong(0) -> ((r.getInt(4), r.getInt(5), r.getInt(6),
         r.getInt(7)))).toMap
     // r desc: u1,u5,u4,u3,u2 ; f desc: u5,u4,u3,u2,u1 ; m desc (m =

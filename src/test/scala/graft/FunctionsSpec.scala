@@ -292,7 +292,7 @@ class FunctionsSpec extends GraftSuite {
     import org.apache.spark.sql.execution.debug._
     val df = spark.read.parquet(s"$sfDir/lineitem.parquet")
       .groupBy(col("l_returnflag"))
-      .agg(graft.ops.Oracle.dsum(spark, col("l_extendedprice")).as("s"))
+      .agg(graft.ops.Oracle.dsum(col("l_extendedprice")).as("s"))
     df.collect() // the adaptive plan is final once executed
     val code = df.queryExecution.debug.codegenToSeq().map(_._2).mkString("\n")
     assert(code.contains("exactMicros"), "kernel call not in generated code")
@@ -302,6 +302,48 @@ class FunctionsSpec extends GraftSuite {
       case w: WholeStageCodegenExec => w }
     assert(stages.exists(_.child.exists(_.expressions.exists(
       _.exists(_.isInstanceOf[graft.functions.ExactMicros])))), plan)
+  }
+
+  test("dsumOver equals the DECIMAL(28,6) window sum: ROWS to 1 preceding " +
+      "and RANGE -30..0 frames, NULLs, ±0.0 and near half-micros") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(20261020L)
+    def value: java.lang.Double = rnd.nextInt(8) match {
+      case 0 => null
+      case 1 => if (rnd.nextBoolean()) 0.0 else -0.0
+      case 2 => // k ulp either side of a half-micro: the kernel's slow path
+        var d = (rnd.nextLong() % 4000000000000L + 0.5) / 1e6
+        val k = rnd.nextInt(17) - 8
+        (1 to k.abs).foreach(_ =>
+          d = if (k > 0) math.nextUp(d) else math.nextDown(d))
+        d
+      case _ => (if (rnd.nextBoolean()) 1.0 else -1.0) *
+        math.scalb(1.0 + rnd.nextDouble(), rnd.nextInt(60) - 30)
+    }
+    val rows = (0 until 20000).map(i =>
+      Row(rnd.nextInt(40), i.toLong, rnd.nextInt(400), value))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4),
+      StructType(Seq(StructField("k", IntegerType),
+        StructField("i", LongType), StructField("day", IntegerType),
+        StructField("c", DoubleType))))
+    val frames = Seq(
+      "rows" -> Window.partitionBy("k").orderBy("i")
+        .rowsBetween(Window.unboundedPreceding, -1),
+      "range" -> Window.partitionBy("k").orderBy("day").rangeBetween(-30, 0))
+    def bits(v: Any) = Option(v).map(d =>
+      java.lang.Double.doubleToRawLongBits(d.asInstanceOf[Double]))
+    for ((frame, w) <- frames) {
+      val got = df.select(graft.ops.Oracle.dsumOver(col("c"), w),
+        sum(col("c").cast(DecimalType(28, 6))).over(w).cast(DoubleType))
+        .collect()
+      assert(got.length == rows.length)
+      val diff = got.filter(r => bits(r.get(0)) != bits(r.get(1)))
+      assert(diff.isEmpty, s"$frame: ${diff.take(5).mkString(", ")}")
+      if (frame == "rows") // each partition's first frame is empty: NULL
+        assert(got.count(_.isNullAt(1)) >= 40)
+    }
   }
 
   private object Tables0 {

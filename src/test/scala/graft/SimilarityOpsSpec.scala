@@ -355,7 +355,7 @@ class SimilarityOpsSpec extends GraftSuite {
       (1L, 0, Array(0.0f, 0.0f)), (2L, 0, Array(0.002f, 0.0f)),
       (3L, 1, Array(1.0f, 1.0f)), (4L, 1, Array(1.002f, 1.0f)))
       .toDF("vec_id", "label", "embedding")
-    val got = graft.ops.SimilarityOps.silhouetteFrom(spark, emb)
+    val got = graft.ops.SimilarityOps.silhouetteFrom(emb)
       .collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getDouble(3))).toSeq
     // integer replay: qv = floor(1000x + 0.5); cv = floor(1000*sv/cnt);

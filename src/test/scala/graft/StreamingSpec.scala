@@ -311,7 +311,7 @@ class StreamingSpec extends GraftSuite {
       .groupBy(expr(graft.ops.EventOps.floorDivSql("ts_ms", 3600000L))
         .as("hour_bucket"), col("c_nationkey"))
       .agg(count(lit(1)).as("n"),
-        graft.ops.Oracle.dsum(spark, col("value")).as("sum_value"))
+        graft.ops.Oracle.dsum(col("value")).as("sum_value"))
       .orderBy("hour_bucket", "c_nationkey")
       .collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
@@ -332,7 +332,7 @@ class StreamingSpec extends GraftSuite {
       .groupBy(expr(graft.ops.EventOps.floorDivSql("ts_ms", 3600000L))
         .as("hb"), col("event_type"))
       .agg(count(lit(1)).as("n"),
-        graft.ops.Oracle.dsum(spark, col("value")).as("v"))
+        graft.ops.Oracle.dsum(col("value")).as("v"))
       .collect().map(r => ((r.getLong(0), r.getString(1)),
         (r.getLong(2), r.getDouble(3)))).toMap
     // replay the fan-out: window w = hours {w, w+1}; counts add exactly,
