@@ -2,12 +2,12 @@
 """Mechanical per-query regression gate over the standalone bench series.
 
 Compares a fresh `scripts/bench_standalone.sh` output against the committed
-reference artifact (BENCH_LOCAL_r{N}.json): any contract query whose new
+reference capture (BENCH_LOCAL.json): any contract query whose new
 median exceeds 2x its recorded median (and is over an absolute floor, so
 sub-100ms jitter never trips) fails the gate. Queries new to the suite are
 reported informationally.
 
-Usage: bench_gate.py <reference.json> <new_output.json> [factor=2.0]
+Usage: bench_gate.py BENCH_LOCAL.json <new_output.json> [factor=2.0]
 
 Both files are Bench stdout captures; the first line (metric=runs) carries
 every repeat, from which medians are derived. Run-1 of a fresh JVM carries

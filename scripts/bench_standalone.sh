@@ -1,13 +1,14 @@
 #!/usr/bin/env bash
-# Standalone-JVM bench (judge r4 directive): timings must come from a plain
-# `java` process — never sbt-co-resident — on an otherwise idle machine.
+# Standalone-JVM bench: timings must come from a plain `java` process —
+# never sbt-co-resident — on an otherwise idle machine.
 # Usage:
 #   sbt compile                      # once, to refresh target/.../classes
 #   scripts/bench_standalone.sh [sfDir] [cpus] [repeats]
-# Defaults: sf0.1, 4 cpus (matches the driver's per-round capture), 3 repeats.
+# Defaults: sf0.1, 4 cpus, 3 repeats (the reference capture's protocol).
 # Output: the Bench JSON lines on stdout — the "runs" line carries every
-# individual timing, the "total" line the per-query medians. Redirect to a
-# file to commit as BENCH_LOCAL_r{N}.json.
+# individual timing, the "total" line the per-query medians. Redirect to
+# BENCH_LOCAL.json to retake the one reference capture that
+# scripts/bench_gate.py compares against.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 

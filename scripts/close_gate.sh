@@ -1,10 +1,8 @@
 #!/usr/bin/env bash
-# Round-close correctness gate (VERDICT r9 directive #1): run the driver's
-# exact correctness surfaces end-to-end FROM A CLEAN STATE and fail loudly
-# if any artifact is empty, any query errors, or the per-query count shrank.
-# An empty/absent driver artifact (CORRECTNESS_r09.json shipped as `{}`)
-# is indistinguishable from a silent total failure — this script makes that
-# state a red gate on the repo side.
+# Correctness gate: run graft.Verify (on the GraftSession session) and the
+# DuckDB compare end-to-end FROM A CLEAN STATE and fail loudly if any
+# artifact is empty, any query errors, or the per-query count shrank — an
+# empty dump is indistinguishable from a silent total failure.
 #
 # Usage: scripts/close_gate.sh [sfDir] [outDir] [minQueries]
 #   minQueries defaults to the CURRENT SparkEntry.queries size, read from

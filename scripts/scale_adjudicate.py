@@ -102,7 +102,7 @@ def main():
             "cpus": 32, "driver_mem": "48g",
             "note": "same java-standalone protocol both legs, medians of "
                     "repeats; 30 heaviest non-streaming queries of "
-                    "BENCH_LOCAL_r13",
+                    "a standalone bench capture",
         },
         "queries": rows,
         "summary": {

@@ -1,7 +1,8 @@
 #!/usr/bin/env bash
-# Added, deleted and net lines under src/main and src/test between a base
-# revision (default HEAD) and the working tree, uncommitted and untracked
-# files included: the net-lines figure each change reports.
+# Added, deleted and net lines under src/main and src/test, and added,
+# deleted and net tracked files repo-wide, between a base revision
+# (default HEAD) and the working tree, uncommitted and untracked files
+# included: the net-lines and file-count figures each change reports.
 # Usage: scripts/src_delta.sh [base]
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -13,3 +14,7 @@ for dir in src/main src/test; do
   } | awk -v d="$dir" '$1 != "-" { a += $1; r += $2 }
       END { printf "%-9s +%d -%d net %+d\n", d, a, r, a - r }'
 done
+{ git diff --name-status --no-renames "$base"
+  git ls-files --others --exclude-standard | sed 's/^/A\t/'
+} | awk '$1 == "A" { a++ } $1 == "D" { r++ }
+    END { printf "%-9s +%d -%d net %+d\n", "files", a, r, a - r }'

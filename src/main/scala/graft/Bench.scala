@@ -4,23 +4,13 @@ import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // repeats>1 = measurement mode (scripts/bench_standalone.sh): each query
     // timed N times, the reported number is the MEDIAN, and a detail line
-    // with every run is printed so spread is auditable. Default 1 keeps the
-    // driver's per-round invocation unchanged.
+    // with every run is printed so spread is auditable. Default 1 times
+    // each query once.
     val repeats = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "1").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // the generated-class cache defaults to 100 entries; a 150-query
-      // suite churns that LRU, so later queries recompile their codegen
-      // on EVERY repeat — measured as stable ~2x inflation on whichever
-      // query lands in a churn window (BASELINE.md r5 worked example).
-      // Sizing it to the suite removes the artifact; plans are unchanged.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: JVM/codegen/file-index startup must not be billed to
     // whichever query happens to run first (best-effort — a failed warmup
@@ -49,10 +39,10 @@ object Bench {
         // every output row through the full plan and discards it.
         try { fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true }
         catch {
-          // NonFatal only (judge r4): an executor OOM or other fatal JVM
-          // error must propagate and kill the run, not become a silent
-          // -1.0 — a bench JVM that has OOM'd once produces garbage
-          // timings for every query after.
+          // NonFatal only: an executor OOM or other fatal JVM error must
+          // propagate and kill the run, not become a silent -1.0 — a bench
+          // JVM that has OOM'd once produces garbage timings for every
+          // query after.
           case NonFatal(e) =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
             false
@@ -64,7 +54,8 @@ object Bench {
     }
     // SPARK_GRAFT_ONLY=q1,q2 — adjudication mode: re-time just the named
     // queries (gate-flagged movers) in isolation; the totals line then
-    // covers only that subset and must not be committed as a round artifact
+    // covers only that subset and must not be committed as the reference
+    // capture
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val selected = only.fold(SparkEntry.queries)(names =>
@@ -98,10 +89,10 @@ object Bench {
     println(s"""{"metric":"total","queries":$qs,"n_queries":${results.size},"n_failed":$failed,"sf":"$sfDir","unit":"sec","value":${fmt(total)}}""")
     // The driver tail-captures ~3 KB of output and parses the LAST JSON
     // line it finds: at ~100 queries the full line above exceeds the
-    // capture window, its head gets clipped, and parsing fails (r02, r03:
-    // "parsed": null). So the final line is a compact summary — totals
-    // plus only the slowest queries — sized well under the window; the
-    // full per-query map stays one line up for human/file consumption.
+    // capture window, its head gets clipped, and parsing fails. So the
+    // final line is a compact summary — totals plus only the slowest
+    // queries — sized well under the window; the full per-query map stays
+    // one line up for human/file consumption.
     val top = results.toSeq.sortBy(-_._2).take(25)
       .map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
@@ -115,8 +106,8 @@ object Bench {
     else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
   }
 
-  /** Inter-query teardown (judge r4 directive): one query's cleanup debt
-    * must never land on the next query's clock. Cached plans are dropped,
+  /** Inter-query teardown: one query's cleanup debt must never land on
+    * the next query's clock. Cached plans are dropped,
     * leaked persists unpersisted BLOCKING (clearCache alone is async), and
     * a GC pass runs so ContextCleaner's reference queue processes shuffle/
     * broadcast cleanup now rather than mid-next-query.

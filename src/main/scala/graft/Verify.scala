@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -16,17 +15,9 @@ object Verify {
         sys.exit(2)
     }
     def keep(name: String): Boolean = only.forall(_.exists(selects(_, name)))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same rationale as Bench: the 100-entry codegen-class LRU churns
-      // under a 443-query suite, recompiling generated code per query —
-      // pure fixed cost on a correctness dump this long
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    // the session users and perfbench run: GraftExtensions included
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     var nOk, nFail = 0
@@ -36,9 +27,8 @@ object Verify {
           .parquet(s"$outDir/$name")
         nOk += 1
       } catch {
-        // NonFatal only (mirrors the r5 Bench fix): an OOM'd JVM must
-        // abort the dump — a partial-but-plausible verify output is worse
-        // than a failed run
+        // NonFatal only: an OOM'd JVM must abort the dump — a
+        // partial-but-plausible verify output is worse than a failed run
         case scala.util.control.NonFatal(e) =>
           nFail += 1
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -67,8 +57,7 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // loud, machine-grepable summary — an empty/partial dump must be
-    // diagnosable from the log alone (CORRECTNESS_r09/r10 came back {}
-    // with no trace of why)
+    // diagnosable from the log alone
     println(s"[verify] dumped ok=$nOk failed=$nFail " +
       s"oracle_entries=${SparkEntry.oracleSql.count(e => keep(e._1))} -> $outDir")
     spark.stop()

@@ -23,8 +23,9 @@ import graft.functions._
   *
   * Usage:
   * {{{
-  *   SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
-  *   // or: spark.sql.extensions=graft.rules.GraftExtensions
+  *   graft.GraftSession.local()  // the graft session factory installs them
+  *   // or, on any builder: .withExtensions(new GraftExtensions)
+  *   // or the conf spark.sql.extensions=graft.rules.GraftExtensions
   * }}}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -2,8 +2,6 @@ package graft.tools
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
-
 import graft.cascades._
 import graft.ops.CascadesExecOps
 
@@ -39,13 +37,8 @@ object CalibrateCost {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/tmp/graft_sf1")
     val repeats = args.lift(1).map(_.toInt).getOrElse(5).max(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus)
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-calib-wh").toString)
       .getOrCreate()

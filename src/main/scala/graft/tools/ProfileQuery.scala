@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -19,13 +18,8 @@ object ProfileQuery {
     val sfDir = args(0)
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
     val repeats = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark =
+      graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     case class Job(id: Int, desc: String, start: Long, var end: Long = -1L)

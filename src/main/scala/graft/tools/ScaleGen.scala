@@ -56,11 +56,8 @@ object ScaleGen {
     require(Set("keys", "skew")(mode), s"unknown mode $mode")
     val copies = copiesStr.toInt
     require(copies >= 1, "copies must be >= 1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-scalegen")
+    val spark = graft.GraftSession.builder(
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]", 32)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {

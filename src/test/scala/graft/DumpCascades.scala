@@ -11,10 +11,10 @@ import graft.ops.CascadesExecOps
   * mini-SQL, the WINNER physical plan the memo chose (MiniCascades
   * explain) with its memo cost, and the executed SparkPlan it lowered to
   * — the full `planner.rs:29-55` lifecycle on one page. Ends with the
-  * COST-MODEL CALIBRATION table (r9 directive #7): every executed query
+  * COST-MODEL CALIBRATION table: every executed query
   * re-planned at sf0.1 (the bench scale), its predicted memo cost next
   * to its measured standalone median from the committed
-  * BENCH_LOCAL_r15.json, with Spearman rank correlation per cost-model
+  * BENCH_LOCAL.json, with Spearman rank correlation per cost-model
   * family. Run: `sbt "Test/runMain graft.DumpCascades"`.
   */
 object DumpCascades {
@@ -89,8 +89,7 @@ object DumpCascades {
     }
 
     // ---- calibration: predicted memo cost vs measured runtime (r9) ----
-    val benchPath = sys.env.getOrElse("GRAFT_BENCH_JSON",
-      "BENCH_LOCAL_r15.json")
+    val benchPath = sys.env.getOrElse("GRAFT_BENCH_JSON", "BENCH_LOCAL.json")
     val d01 = "/root/testdata/sf0.1"
     val medians = benchMedians(benchPath)
     sb.append("\n## Cost-model calibration (predicted vs measured)\n\n")

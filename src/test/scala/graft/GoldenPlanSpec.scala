@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.CollectLimitExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec}
@@ -9,7 +8,8 @@ import org.apache.spark.sql.execution.SparkPlan
 /** Golden plan-shape tests over SQL, mirroring the reference's YAML harness
   * (`datafusion-dolomite-integration/resources/limit.yaml` +
   * `tests/utils/mod.rs:20-84`): each case = SQL + expected plan properties,
-  * run through a session with [[graft.rules.GraftExtensions]] installed.
+  * run through the [[GraftSession]] session, [[graft.rules.GraftExtensions]]
+  * installed.
   * Where the reference compares its `explain` strings against empty tables,
   * we assert on normalized `optimizedPlan`/`executedPlan` shapes over real
   * parquet — plus the physical properties the reference's stub never
@@ -17,15 +17,13 @@ import org.apache.spark.sql.execution.SparkPlan
   */
 class GoldenPlanSpec extends GraftSuite {
 
-  lazy val xs: SparkSession = SparkTestBase.extendedSpark
-
   private def registerTables(): Unit =
     Seq("lineitem", "orders", "customer").foreach { t =>
-      xs.read.parquet(s"$sfDir/$t.parquet").createOrReplaceTempView(t)
+      spark.read.parquet(s"$sfDir/$t.parquet").createOrReplaceTempView(t)
     }
 
   private def executed(sql: String): SparkPlan = {
-    val df = xs.sql(sql)
+    val df = spark.sql(sql)
     df.collect() // force AQE to finalize
     df.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.executedPlan
@@ -36,7 +34,7 @@ class GoldenPlanSpec extends GraftSuite {
   // golden case 1 (limit.yaml case "select * from t1"): plain scan+project
   test("select * => single relation scan, no shuffle") {
     registerTables()
-    val plan = xs.sql("SELECT * FROM lineitem").queryExecution.optimizedPlan
+    val plan = spark.sql("SELECT * FROM lineitem").queryExecution.optimizedPlan
     assert(plan.collectLeaves().size == 1)
     assert(!plan.treeString.contains("Join"))
   }
@@ -54,7 +52,7 @@ class GoldenPlanSpec extends GraftSuite {
 
   test("nested limits collapse to the minimum") {
     registerTables()
-    val opt = xs.sql(
+    val opt = spark.sql(
       "SELECT * FROM (SELECT * FROM lineitem LIMIT 50) LIMIT 80")
       .queryExecution.optimizedPlan
     import org.apache.spark.sql.catalyst.expressions.IntegerLiteral
@@ -65,7 +63,7 @@ class GoldenPlanSpec extends GraftSuite {
 
   test("filter + projection are pushed into the parquet scan") {
     registerTables()
-    val df = xs.sql(
+    val df = spark.sql(
       """SELECT l_orderkey, l_quantity FROM lineitem
         |WHERE l_quantity > 30.0""".stripMargin)
     val scan = df.queryExecution.executedPlan.collectLeaves().head
@@ -79,7 +77,7 @@ class GoldenPlanSpec extends GraftSuite {
   // Join2HashJoinStrategy: above the broadcast threshold our strategy fires
   test("large equi join => ShuffledHashJoinExec from Join2HashJoinStrategy") {
     registerTables()
-    xs.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       // note: under AQE, finished query stages are leaves — assert on the
       // nested tree string, which prints stage-internal plans.
@@ -89,7 +87,7 @@ class GoldenPlanSpec extends GraftSuite {
           |GROUP BY o_orderstatus""".stripMargin).toString
       assert(s.contains("ShuffledHashJoin"), s"expected ShuffledHashJoin:\n$s")
       assert(!s.contains("SortMergeJoin"), s"built-in SMJ overrode strategy:\n$s")
-    } finally xs.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
   // below the threshold the strategy defers => Catalyst broadcasts
@@ -125,8 +123,8 @@ class GoldenPlanSpec extends GraftSuite {
 
   test("correlated scalar subquery decorrelates into an aggregate + join") {
     registerTables()
-    xs.read.parquet(s"$sfDir/customer.parquet").createOrReplaceTempView("c_v")
-    val opt = xs.sql(
+    spark.read.parquet(s"$sfDir/customer.parquet").createOrReplaceTempView("c_v")
+    val opt = spark.sql(
       """SELECT c_custkey FROM c_v c
         |WHERE c_acctbal = (SELECT max(c2.c_acctbal) FROM c_v c2
         |                   WHERE c2.c_nationkey = c.c_nationkey)""".stripMargin)

@@ -8,29 +8,21 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs — one JVM-wide SparkContext; suites that
-  * need session extensions build sibling sessions off the same context.
+  * need their own confs build sibling sessions off the same context.
   */
 object SparkTestBase {
-  /** One session for all suites, with GraftExtensions installed (it must be
-    * the FIRST session built in the JVM — `getOrCreate` ignores
-    * `withExtensions` when an active session already exists).
+  /** One session for all suites: the [[GraftSession]] users and perfbench
+    * run, GraftExtensions included (it must be the FIRST session built in
+    * the JVM — `getOrCreate` ignores `withExtensions` when an active
+    * session already exists).
     */
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
+  lazy val spark: SparkSession = GraftSession.builder("local[8]", 8)
     // fail hard if generated code does not compile — a silent interpreted
     // fallback would hide codegen bugs behind correct-but-slow results
     .config("spark.sql.codegen.fallback", "false")
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-wh").toString)
-    .withExtensions(new graft.rules.GraftExtensions)
     .getOrCreate()
-
-  /** Alias — extensions are on the shared session. */
-  lazy val extendedSpark: SparkSession = spark
 
   val sfDir = "/root/testdata/sf0.001"
 }
