@@ -1,10 +1,12 @@
 package graft.cascades
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Literal, SortOrder}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Ascending, Attribute, Cast, Descending, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, NamedExpression, NullsFirst, NullsLast, Or, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{Average, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, LeftAnti, LeftOuter, LeftSemi}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, BROADCAST, Filter, Join, JoinHint, JoinStrategyHint, Limit, LogicalPlan, Project, Repartition, RepartitionByExpression, SHUFFLE_HASH, SHUFFLE_MERGE, Sort, UnresolvedHint}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, BROADCAST, Filter, HintInfo, Join, JoinHint, JoinStrategyHint, Limit, LogicalPlan, Project, Repartition, RepartitionByExpression, ResolvedHint, SHUFFLE_HASH, SHUFFLE_MERGE, Sort}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongType}
 
 import graft.functions.ColumnBridge
 
@@ -13,18 +15,22 @@ import graft.functions.ColumnBridge
   * cascades-chosen physical plan to the host engine;
   * `conversion/physical.rs:23-117` lowers each physical operator to a
   * DataFusion ExecutionPlan). Here the host engine is Spark: the winner
-  * lowers in ONE pass to one unresolved Catalyst `LogicalPlan` — each
+  * lowers in ONE pass to one RESOLVED Catalyst `LogicalPlan` — each
   * [[PhysicalOp]] becomes the logical operator whose Catalyst physical
   * plan realizes exactly the winner's choice, join STRATEGY included
-  * (broadcast/shuffle-hash/merge via join hints, which Catalyst honors
-  * over its own size estimates), so the executed SparkPlan provably
-  * carries the cascades decision, not Catalyst's default. The leaves are
-  * the catalog DataFrames' analysed plans; the whole tree is analysed
-  * ONCE when it is wrapped in a DataFrame (a chain of DataFrame calls
-  * would re-analyse the growing plan after every operator). The operators
-  * and expressions are the ones the DataFrame API builds for the same
-  * calls — expressions go through the session's own column converter —
-  * so the executed plan is the one those DataFrame calls would give.
+  * (broadcast/shuffle-hash/merge via resolved join hints, which Catalyst
+  * honors over its own size estimates), so the executed SparkPlan
+  * provably carries the cascades decision, not Catalyst's default. The
+  * leaves are the catalog DataFrames' analysed plans; every operator above
+  * them is built resolved: attributes come from the child's `output` by
+  * the session resolver (so nullability above outer joins is Catalyst's
+  * own), literals are typed to the column they meet, aggregates are the
+  * `AggregateExpression`s and casts the analyzer would build. Analysis
+  * has nothing left to resolve, so the plan skips the analyzer's rule
+  * batches; the session analyzer's `checkAnalysis` still runs on it, so an
+  * ill-typed or unresolvable winner fails in [[Execution.lower]], naming
+  * the column or operator, never at execution. The executed plan is the
+  * one the same DataFrame calls would give.
   * This closes the one lifecycle edge the reference demonstrates
   * that the plan-only cascades module did not: winners EXECUTE, and the
   * CORRECTNESS gate checks their rows against DuckDB
@@ -51,17 +57,18 @@ object Execution {
   def lower(plan: PlanNode, catalog: String => DataFrame): DataFrame = {
     val l = new Lowering(catalog)
     val logical = l.lower(plan)
-    ColumnBridge.dataFrame(l.session, logical)
+    val state = l.session.sessionState
+    SQLConf.withExistingConf(state.conf)(
+      state.analyzer.checkAnalysis(logical))
+    ColumnBridge.analysedDataFrame(l.session, logical)
   }
 
   /** One lowering pass. Leaves are read before the operators above them
-    * convert their expressions, so [[session]] is set by then.
+    * build their expressions, so [[session]] is set by then.
     */
   private final class Lowering(catalog: String => DataFrame) {
     var session: SparkSession = _
-
-    private def expr(c: Column) = ColumnBridge.convert(session, c)
-    private def named(c: Column) = ColumnBridge.named(expr(c))
+    private def conf = session.sessionState.conf
 
     def lower(plan: PlanNode): LogicalPlan = plan match {
       // SplitAgg winner: Final over (exchange over) Partial — one
@@ -77,6 +84,7 @@ object Execution {
         aggregate(lower(child), g, aggs)
       case PlanNode(op, inputs) =>
         val kids = inputs.map(lower)
+        lazy val in = kids.head.output
         op match {
           case PhysicalTableScan(t, limit, _, _) =>
             val df = catalog(t)
@@ -84,11 +92,11 @@ object Execution {
             limit.foldLeft(df.queryExecution.analyzed)(
               (p, n) => Limit(Literal(n), p))
           case PhysicalFilter(pred, projected) =>
-            val f = Filter(expr(predicate(pred)), kids.head)
+            val f = Filter(predicate(pred, in), kids.head)
             if (projected.isEmpty) f
-            else Project(projected.map(c => named(col(c.name))), f)
+            else Project(projected.map(attr(_, in)), f)
           case PhysicalProject(exprs) =>
-            Project(exprs.map(e => named(exprToColumn(e))), kids.head)
+            Project(exprs.map(e => named(scalar(e, in))), kids.head)
           case j: PhysicalJoin => join(j, kids)
           case PhysicalHashAggregate(_, g, aggs) =>
             aggregate(kids.head, g, aggs)
@@ -100,16 +108,83 @@ object Execution {
             sort(keys, kids.head)
           case PhysicalExchange(keys) =>
             if (keys.isEmpty) Repartition(1, shuffle = true, kids.head)
-            else RepartitionByExpression(keys.map(c => expr(col(c.name))),
-              kids.head, None, None)
+            else RepartitionByExpression(keys.map(attr(_, in)), kids.head,
+              None, None)
           case other =>
             throw new IllegalArgumentException(
               s"not a lowerable physical operator: $other")
         }
     }
 
-    /** The join with the winner's strategy hint on its build side, the
-      * right input (the hint `.hint(name)` puts on a DataFrame).
+    /** Column `c` of `input`, matched by the session resolver as the
+      * analyzer matches a column name.
+      */
+    private def attr(c: Col, input: Seq[Attribute]): Attribute =
+      input.filter(a => conf.resolver(a.name, c.name)).distinct match {
+        case Seq(a) => a
+        case found =>
+          val why = if (found.isEmpty) "not in" else "ambiguous in"
+          throw new IllegalArgumentException(s"column ${c.name} is $why " +
+            s"the input (${input.map(_.name).mkString(", ")})")
+      }
+
+    /** An integer literal typed to the column it meets — the form the
+      * optimizer reduces the ANSI-coerced comparison to — where the value
+      * is exact in the column's type.
+      */
+    private def typed(v: Long, a: Attribute): Literal = a.dataType match {
+      case IntegerType if v.isValidInt          => Literal(v.toInt)
+      case LongType                             => Literal(v)
+      case DoubleType if v.toDouble.toLong == v => Literal(v.toDouble)
+      case t =>
+        throw new IllegalArgumentException(
+          s"integer literal $v cannot compare with column ${a.name} " +
+            s"of type ${t.sql}")
+    }
+
+    private def scalar(e: Expr, input: Seq[Attribute]): Expression = e match {
+      case c: Col    => attr(c, input)
+      case Lit(v)    => Literal(v)
+      case StrLit(v) => Literal(v)
+      case other     =>
+        throw new IllegalArgumentException(s"not a scalar expr: $other")
+    }
+
+    /** `e` as a select-list entry, named the way `DataFrame.select` names
+      * it: a column keeps its attribute, a literal is aliased to its text.
+      */
+    private def named(e: Expression): NamedExpression = e match {
+      case a: Attribute => a
+      case other        => Alias(other, other.toString)()
+    }
+
+    private def predicate(e: Expr, input: Seq[Attribute]): Expression =
+      e match {
+        case EqCond(l, r) => EqualTo(attr(l, input), attr(r, input))
+        case CmpCond(op, l, r) =>
+          val (a, b) = (l, r) match {
+            case (c: Col, Lit(v)) => val a = attr(c, input); (a, typed(v, a))
+            case (Lit(v), c: Col) => val b = attr(c, input); (typed(v, b), b)
+            case _ => (scalar(l, input), scalar(r, input))
+          }
+          op match {
+            case "="  => EqualTo(a, b)
+            case "<"  => LessThan(a, b)
+            case ">"  => GreaterThan(a, b)
+            case "<=" => LessThanOrEqual(a, b)
+            case ">=" => GreaterThanOrEqual(a, b)
+          }
+        case RangeCond(c, lo, hi) =>
+          val a = attr(c, input)
+          And(GreaterThanOrEqual(a, typed(lo, a)),
+            LessThanOrEqual(a, typed(hi, a)))
+        case OrCond(ds) => ds.map(predicate(_, input)).reduce(Or)
+        case other =>
+          throw new IllegalArgumentException(s"not a predicate: $other")
+      }
+
+    /** The join with the winner's strategy hint resolved on its build
+      * side, the right input (where `.hint(name)` puts it).
       */
     private def join(j: PhysicalJoin, kids: Seq[LogicalPlan]): LogicalPlan = {
       val sparkType = j.joinType match {
@@ -119,28 +194,71 @@ object Execution {
         case JoinType.Semi  => LeftSemi
         case JoinType.Anti  => LeftAnti
       }
+      val both = kids(0).output ++ kids(1).output
       val build =
-        UnresolvedHint(joinStrategy(j.strategy).displayName, Nil, kids(1))
+        ResolvedHint(kids(1), HintInfo(Some(joinStrategy(j.strategy))))
       Join(kids(0), build, sparkType,
-        Some(expr(col(j.cond.left.name) === col(j.cond.right.name))),
+        Some(EqualTo(attr(j.cond.left, both), attr(j.cond.right, both))),
         JoinHint.NONE)
     }
 
-    /** A global sort; each key converts to the exact `SortOrder` its
-      * [[sortColumn]] spells (the converter, not the deferred
-      * `ExpressionUtils` wrapper, which is no `SortOrder`).
+    /** A global sort, direction AND null placement explicit, never the
+      * dialect default (Spark and DuckDB disagree on default null
+      * placement, so the lowering and the oracle SQL both spell it out).
       */
     private def sort(keys: Seq[SortKey], child: LogicalPlan): LogicalPlan =
-      Sort(keys.map(k => expr(sortColumn(k)).asInstanceOf[SortOrder]),
+      Sort(keys.map(k => SortOrder(attr(k.col, child.output),
+        if (k.asc) Ascending else Descending,
+        if (k.nullsFirst) NullsFirst else NullsLast, Seq.empty)),
         global = true, child)
 
     /** Grouping columns first, then the named aggregate calls — the
-      * output `groupBy(...).agg(...)` gives.
+      * output `groupBy(...).agg(...)` gives. Built under the session's
+      * conf, which sets the ANSI mode of sum, avg and cast.
       */
     private def aggregate(child: LogicalPlan, g: Seq[Col],
-        aggs: Seq[AggCall]): LogicalPlan = {
-      val keys = g.map(c => named(col(c.name)))
-      Aggregate(keys, keys ++ aggs.map(a => named(aggColumn(a))), child)
+        aggs: Seq[AggCall]): LogicalPlan = SQLConf.withExistingConf(conf) {
+      val keys = g.map(attr(_, child.output))
+      Aggregate(keys,
+        keys ++ aggs.map(a => Alias(aggExpr(a, child.output), a.outName)()),
+        child)
+    }
+
+    /** One aggregate call ([[AggCall.outName]] names it — the same names
+      * the oracle SQL aliases to). `count` is `count(*)` (all rows,
+      * matching DuckDB's count(*)); avg casts to DECIMAL(28,6) to stay
+      * bit-comparable with the DuckDB oracle on integer inputs.
+      */
+    private def aggExpr(a: AggCall, input: Seq[Attribute]): Expression = {
+      def arg = attr(a.col.get, input)
+      a.fn match {
+        case "count" => Count(Literal(1)).toAggregateExpression()
+        // SQL COUNT(x): null-skipping — the outer aggregate of the
+        // distinct rewrite (skips the (g, NULL) dedup row; keeps all-NULL
+        // groups)
+        case "count_nonnull" => Count(arg).toAggregateExpression()
+        // the direct (Complete, co-partitioned) implementation of a
+        // distinct count — only sound because the mode's required
+        // Hashed(group) input puts every group in one partition; the
+        // usually-cheaper plan is the dedup-first rewrite, which never
+        // reaches this case
+        case "count_distinct" =>
+          Count(arg).toAggregateExpression(isDistinct = true)
+        case "sum" => new Sum(arg).toAggregateExpression()
+        case "min" => Min(arg).toAggregateExpression()
+        case "max" => Max(arg).toAggregateExpression()
+        case "avg" =>
+          // quantize through the oracle-contract decimal, then render
+          // DOUBLE (graft.ops.Oracle doctrine: the same exact decimal
+          // renders to the same double in both engines; a decimal OUTPUT
+          // column is the r6 hash-hazard class PlanCheckSpec's type audit
+          // blocks)
+          val tz = Some(conf.sessionLocalTimeZone)
+          Cast(Cast(new Average(arg).toAggregateExpression(),
+            DecimalType(28, 6), tz), DoubleType, tz)
+        case other =>
+          throw new IllegalArgumentException(s"unsupported aggregate: $other")
+      }
     }
   }
 
@@ -154,73 +272,5 @@ object Execution {
     case JoinStrategy.Broadcast    => BROADCAST
     case JoinStrategy.ShuffledHash => SHUFFLE_HASH
     case JoinStrategy.SortMerge    => SHUFFLE_MERGE
-  }
-
-  /** A [[SortKey]]'s exact Spark sort column — direction AND null
-    * placement explicit, never the dialect default (Spark and DuckDB
-    * disagree on default null placement, so the lowering and the oracle
-    * SQL both spell it out).
-    */
-  private def sortColumn(k: SortKey): Column = (k.asc, k.nullsFirst) match {
-    case (true, true)   => col(k.col.name).asc_nulls_first
-    case (true, false)  => col(k.col.name).asc_nulls_last
-    case (false, true)  => col(k.col.name).desc_nulls_first
-    case (false, false) => col(k.col.name).desc_nulls_last
-  }
-
-  private def exprToColumn(e: Expr): Column = e match {
-    case Col(n)    => col(n)
-    case Lit(v)    => lit(v)
-    case StrLit(v) => lit(v)
-    case other     =>
-      throw new IllegalArgumentException(s"not a projection expr: $other")
-  }
-
-  private def predicate(e: Expr): Column = e match {
-    case EqCond(l, r) => col(l.name) === col(r.name)
-    case CmpCond(op, l, r) =>
-      val (a, b) = (exprToColumn(l), exprToColumn(r))
-      op match {
-        case "="  => a === b
-        case "<"  => a < b
-        case ">"  => a > b
-        case "<=" => a <= b
-        case ">=" => a >= b
-      }
-    case RangeCond(c, lo, hi) =>
-      col(c.name) >= lit(lo) && col(c.name) <= lit(hi)
-    case OrCond(ds) => ds.map(predicate).reduce(_ || _)
-    case other =>
-      throw new IllegalArgumentException(s"not a predicate: $other")
-  }
-
-  /** One aggregate call to a NAMED Spark column ([[AggCall.outName]] —
-    * the same names the oracle SQL aliases to). `count` is `count(*)`
-    * (all rows, matching DuckDB's count(*)); avg casts to DECIMAL(28,6)
-    * to stay bit-comparable with the DuckDB oracle on integer inputs.
-    */
-  private def aggColumn(a: AggCall): Column = a.fn match {
-    case "count" => count(lit(1)).as(a.outName)
-    // SQL COUNT(x): null-skipping — the outer aggregate of the distinct
-    // rewrite (skips the (g, NULL) dedup row; keeps all-NULL groups)
-    case "count_nonnull" => count(col(a.col.get.name)).as(a.outName)
-    // the direct (Complete, co-partitioned) implementation of a distinct
-    // count — only sound because the mode's required Hashed(group) input
-    // puts every group in one partition; the usually-cheaper plan is the
-    // dedup-first rewrite, which never reaches this case
-    case "count_distinct" =>
-      count_distinct(col(a.col.get.name)).as(a.outName)
-    case "sum"   => sum(col(a.col.get.name)).as(a.outName)
-    case "min"   => min(col(a.col.get.name)).as(a.outName)
-    case "max"   => max(col(a.col.get.name)).as(a.outName)
-    case "avg"   =>
-      // quantize through the oracle-contract decimal, then render DOUBLE
-      // (graft.ops.Oracle doctrine: the same exact decimal renders to
-      // the same double in both engines; a decimal OUTPUT column is the
-      // r6 hash-hazard class PlanCheckSpec's type audit blocks)
-      avg(col(a.col.get.name)).cast("decimal(28,6)").cast("double")
-        .as(a.outName)
-    case other =>
-      throw new IllegalArgumentException(s"unsupported aggregate: $other")
   }
 }

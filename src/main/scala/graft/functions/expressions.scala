@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, NamedExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.internal.SQLConf
@@ -10,52 +10,37 @@ import org.apache.spark.sql.types._
 /** Bridge between the public `Column`/`DataFrame` API and catalyst
   * `Expression`s/`LogicalPlan`s. Spark 4 moved this to the
   * `org.apache.spark.sql.classic` package (`ExpressionUtils`,
-  * `Dataset.ofRows`, the session's column converter), which is
-  * `private[sql]` at the Scala level (public in bytecode) — reached via
-  * reflection; used while building plans only, never per row.
+  * `Dataset.ofRows`), which is `private[sql]` at the Scala level (public
+  * in bytecode) — reached via reflection; used while building plans only,
+  * never per row.
   */
 private[graft] object ColumnBridge {
   private val cls = Class.forName("org.apache.spark.sql.classic.ExpressionUtils")
   private val colM = cls.getMethod("column", classOf[Expression])
   private val exprM = cls.getMethod("expression", classOf[Column])
-  private val namedM = cls.getMethod("toNamed", classOf[Expression])
-  private val sessionCls =
-    Class.forName("org.apache.spark.sql.classic.SparkSession")
-  private val convertM = sessionCls.getMethod("expression", classOf[Column])
   private val ofRowsM = Class.forName("org.apache.spark.sql.classic.Dataset")
-    .getMethod("ofRows", sessionCls, classOf[LogicalPlan])
+    .getMethod("ofRows",
+      Class.forName("org.apache.spark.sql.classic.SparkSession"),
+      classOf[LogicalPlan])
   private val setAnalyzedM = classOf[LogicalPlan].getMethod("setAnalyzed")
 
   def column(e: Expression): Column = colM.invoke(null, e).asInstanceOf[Column]
   /** A wrapper that defers conversion to analysis — fine as an argument
     * of a custom expression, but not the concrete node (a `SortOrder`,
-    * say) that a logical operator's constructor requires; see
-    * [[convert]].
+    * say) that a logical operator's constructor requires.
     */
   def expression(c: Column): Expression =
     exprM.invoke(null, c).asInstanceOf[Expression]
 
-  /** `c` as the concrete Catalyst expression `spark`'s column converter
-    * makes of it — what the session's own DataFrame operators build.
-    */
-  def convert(spark: SparkSession, c: Column): Expression =
-    convertM.invoke(spark, c).asInstanceOf[Expression]
-
-  /** `e` as a select-list entry, named the way `DataFrame.select` names it. */
-  def named(e: Expression): NamedExpression =
-    namedM.invoke(null, e).asInstanceOf[NamedExpression]
-
-  /** `plan` analysed once, as a DataFrame of `spark` — `Dataset.ofRows`. */
-  def dataFrame(spark: SparkSession, plan: LogicalPlan): DataFrame =
-    ofRowsM.invoke(null, spark, plan).asInstanceOf[DataFrame]
-
-  /** [[dataFrame]] of a plan that is analysed already (a `newInstance()`
-    * of an analysed relation, say): flagged as such, so the analyser
-    * returns it as is instead of running every rule over it again.
+  /** `plan`, which is analysed already (a `newInstance()` of an analysed
+    * relation, say), as a DataFrame of `spark` — `Dataset.ofRows` of the
+    * plan flagged as analysed, so the analyser returns it as is instead
+    * of running every rule over it again. The caller owns the checks
+    * analysis would have made.
     */
   def analysedDataFrame(spark: SparkSession, plan: LogicalPlan): DataFrame = {
     setAnalyzedM.invoke(plan)
-    dataFrame(spark, plan)
+    ofRowsM.invoke(null, spark, plan).asInstanceOf[DataFrame]
   }
 }
 

@@ -1205,4 +1205,43 @@ class CascadesExecSpec extends GraftSuite {
     buildAll()
     assert(tables == first)
   }
+
+  test("every lowered cascades_exec_* winner is resolved Catalyst that " +
+      "needs no analysis") {
+    // cascades_exec_strategy is built by Catalyst, not lowered
+    val lowered = CascadesExecOps.sqls.keys.toSeq.sorted
+      .filterNot(_ == "cascades_exec_strategy")
+    assert(lowered.size == 25)
+    lowered.foreach { name =>
+      withClue(s"$name: ")(
+        assertNeedsNoAnalysis(CascadesExecOps.planFor(spark, sfDir, name)._2))
+    }
+  }
+
+  test("a winner that cannot lower fails inside Execution.lower, naming " +
+      "the column or the operator, and launches no job") {
+    val catalog = CascadesExecOps.tableCatalog(spark, sfDir)
+    val nation = PlanNode(PhysicalTableScan("nation"))
+    def filter(pred: Expr) = PlanNode(PhysicalFilter(pred, Nil), Seq(nation))
+    var missing, illTyped, lit: Throwable = null
+    val jobs = jobsDuring {
+      missing = intercept[IllegalArgumentException](Execution.lower(
+        PlanNode(PhysicalProject(Seq(Col("o_orderkey"))), Seq(nation)),
+        catalog))
+      // typed and resolved, so only checkAnalysis can reject it
+      illTyped = intercept[org.apache.spark.sql.AnalysisException](
+        Execution.lower(filter(CmpCond("<", Col("n_name"),
+          Col("n_nationkey"))), catalog))
+      lit = intercept[IllegalArgumentException](Execution.lower(
+        filter(CmpCond("=", Col("n_name"), Lit(3))), catalog))
+    }
+    assert(jobs == 0, s"failing lowerings launched $jobs job(s)")
+    assert(missing.getMessage.contains("column o_orderkey is not in the " +
+      "input (n_nationkey, n_name, n_regionkey)"), missing.getMessage)
+    assert(illTyped.getMessage.contains("DATATYPE_MISMATCH") &&
+      illTyped.getMessage.contains("(n_name < n_nationkey)"),
+      illTyped.getMessage)
+    assert(lit.getMessage.contains("column n_name of type STRING"),
+      lit.getMessage)
+  }
 }

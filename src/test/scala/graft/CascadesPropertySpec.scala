@@ -1,8 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cascades._
 import graft.cascades.JoinStrategy._
@@ -16,7 +16,7 @@ import graft.cascades.JoinStrategy._
   * shapes, optimality no worse than the naive 1:1 implementation, and
   * group-merge cost neutrality.
   */
-class CascadesPropertySpec extends AnyFunSuite {
+class CascadesPropertySpec extends GraftSuite {
 
   private val tables = Seq("t1", "t2", "t3")
   private val stats = TableStats(
@@ -513,5 +513,57 @@ class CascadesPropertySpec extends AnyFunSuite {
       assert(withSmj <= without + 1e-9,
         s"seed $seed: SMJ rule worsened $without -> $withSmj")
     }
+  }
+
+  test("generated winners lower to resolved Catalyst that needs no " +
+      "analysis, or fail in Execution.lower naming the column") {
+    // every table has the generators' columns; each read is a fresh
+    // relation, as a catalog's reads are
+    val catalog: String => DataFrame =
+      _ => spark.range(3).selectExpr("id AS a", "id * 2 AS b", "id % 2 AS c")
+    val winners = (1 to Trials).flatMap { seed =>
+      val layoutReq = PhysicalPropertySet(
+        distribution =
+          if (seed % 3 == 0) DistributionSpec.Hashed(Seq(Col("a")))
+          else if (seed % 3 == 1) DistributionSpec.Singleton
+          else DistributionSpec.Any,
+        order =
+          if (seed % 2 == 0) OrderSpec.SortedBy.asc(Seq(Col("b")))
+          else OrderSpec.AnyOrder)
+      TestRules.golden(costModel = new CardinalityCostModel, stats = stats)
+        .optimize(sample(genPlan(3, withLimit = true), seed.toLong)) ++
+        TestRules.golden(TestRules.fullJoinStrategyRules,
+          costModel = new ClusterCostModel, stats = stats)
+          .optimize(sample(genLayoutPlan(3), seed.toLong), layoutReq)
+    }
+    // a column that both inputs of a join keep, or that a projection
+    // below dropped, cannot be named
+    val refusal = "column [abc] is (not in|ambiguous in) the input .*"
+    val lowered = winners.filter { w =>
+      try {
+        withClue(w.explain())(
+          assertNeedsNoAnalysis(Execution.lower(w, catalog)))
+        true
+      } catch {
+        case e: IllegalArgumentException =>
+          assert(e.getMessage.matches(refusal), w.explain())
+          false
+      }
+    }
+    info(s"${lowered.size} of ${winners.size} winners lowered")
+    assert(lowered.size >= winners.size / 2)
+    // the lowered ones cover the hash joins of every join type and both
+    // enforcers. Not the merge join: its inputs both keep the join
+    // column, which every generated table names alike, so it never
+    // lowers here (cascades_exec_smj_clustered lowers one in
+    // CascadesExecSpec)
+    val ops = lowered.flatMap(physicalOps).map {
+      case j: PhysicalJoin => s"${j.strategy} ${j.joinType}"
+      case op              => op.getClass.getSimpleName
+    }.toSet
+    val want = Seq("PhysicalExchange", "PhysicalSort", s"$Broadcast Inner") ++
+      Seq(JoinType.Inner, JoinType.Left, JoinType.Full)
+        .map(t => s"$ShuffledHash $t")
+    assert(want.forall(ops), s"not covered: ${want.filterNot(ops)}")
   }
 }

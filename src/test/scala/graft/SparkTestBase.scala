@@ -4,7 +4,10 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs — one JVM-wide SparkContext; suites that
@@ -58,6 +61,40 @@ abstract class GraftSuite extends AnyFunSuite {
       assert(markerSeen, "marker job never reached the listener")
       jobs.get
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** `df`'s plan needs no analysis (a lowered winner's, say): it is
+    * resolved and passes the session analyzer's checks, and the analyzer
+    * returns an unflagged copy of it unchanged, with no rule effective.
+    */
+  protected def assertNeedsNoAnalysis(df: DataFrame): Unit = {
+    val plan = df.queryExecution.analyzed
+    assert(plan.resolved, s"unresolved plan\n$plan")
+    val state = df.sparkSession.sessionState
+    SQLConf.withExistingConf(state.conf) {
+      state.analyzer.checkAnalysis(plan)
+      val copy = unflagged(plan)
+      assert(copy.find(_.analyzed).isEmpty)
+      val tracker = new QueryPlanningTracker
+      val again = state.analyzer.executeAndTrack(copy, tracker)
+      assert(again.fastEquals(copy),
+        s"analysis changed the plan\n$copy\nto\n$again")
+      val effective = tracker.rules.collect {
+        case (rule, s) if s.numEffectiveInvocations > 0 => rule
+      }
+      assert(effective.isEmpty, s"effective analyzer rules: $effective\n$plan")
+    }
+  }
+
+  /** `p` rebuilt node by node, no node flagged as analysed (`clone`
+    * keeps the flag).
+    */
+  private def unflagged(p: LogicalPlan): LogicalPlan = {
+    val kids = p.children.map(unflagged).iterator
+    p.makeCopy(p.productIterator.map {
+      case _: LogicalPlan => kids.next()
+      case arg            => arg.asInstanceOf[AnyRef]
+    }.toArray)
   }
 
   /** The file relation a plain table read scans. */
