@@ -3,6 +3,7 @@ package graft.cascades
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, Ascending, Attribute, Cast, Descending, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, NamedExpression, NullsFirst, NullsLast, Or, SortOrder}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Average, Count, Max, Min, Sum}
+import org.apache.spark.sql.catalyst.optimizer.Optimizer
 import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, LeftAnti, LeftOuter, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, BROADCAST, Filter, HintInfo, Join, JoinHint, JoinStrategyHint, Limit, LogicalPlan, Project, Repartition, RepartitionByExpression, ResolvedHint, SHUFFLE_HASH, SHUFFLE_MERGE, Sort}
 import org.apache.spark.sql.internal.SQLConf
@@ -36,6 +37,18 @@ import graft.functions.ColumnBridge
   * CORRECTNESS gate checks their rows against DuckDB
   * ([[graft.ops.CascadesExecOps]]).
   *
+  * Optimization: [[Execution.lower]] optimizes the plan once, eagerly,
+  * with only the session optimizer rules that change lowered winners
+  * ([[Execution.LoweredRules]]) and the ones Spark never lets a conf
+  * exclude; the DataFrame's `QueryExecution` keeps that optimized plan,
+  * so `executedPlan`, `collect` and `explain` reuse it. Every other rule
+  * is excluded, as are the session's own exclusions, through a clone of
+  * the session conf that holds for that one call: the session conf is
+  * never written, and every other query keeps Spark's full optimizer.
+  * So do `df.write` and any DataFrame derived from a lowered one: each
+  * plans its own `QueryExecution` over the analysed plan, as Spark plans
+  * them.
+  *
   * Aggregation: a winner's Final/Exchange/Partial pyramid (the SplitAgg
   * plan) collapses to ONE `Aggregate` — Spark's HashAggregateExec
   * planning *is* the partial/final split (partial_aggregation always on),
@@ -53,6 +66,9 @@ object Execution {
     * join/aggregate column names must be unambiguous across both sides
     * (the TPC-H-prefixed testdata schemas are). The DataFrame belongs to
     * the session of the leaves (the first one read, when they differ).
+    * Its plan is optimized here, once, by [[LoweredRules]] and Spark's
+    * non-excludable rules alone; a write or a DataFrame derived from it
+    * plans a new `QueryExecution` with the full optimizer (see above).
     */
   def lower(plan: PlanNode, catalog: String => DataFrame): DataFrame = {
     val l = new Lowering(catalog)
@@ -60,8 +76,51 @@ object Execution {
     val state = l.session.sessionState
     SQLConf.withExistingConf(state.conf)(
       state.analyzer.checkAnalysis(logical))
-    ColumnBridge.analysedDataFrame(l.session, logical)
+    val df = ColumnBridge.analysedDataFrame(l.session, logical)
+    val trimmed = state.conf.clone()
+    trimmed.setConfString(SQLConf.OPTIMIZER_EXCLUDED_RULES.key,
+      (excludable(state.optimizer) +: state.conf.optimizerExcludedRules.toSeq)
+        .mkString(","))
+    SQLConf.withExistingConf(trimmed)(df.queryExecution.optimizedPlan)
+    df
   }
+
+  /** The session optimizer rules, by simple class name, that change some
+    * lowered winner: every rule the tracker saw effective on the
+    * generated `plan` queries, on the `cascades_exec_*` winners and on
+    * the property specs' winners (sorts below joins, limits over
+    * projections and bounded leaves, self-comparisons). Lowered plans are
+    * optimized with these alone, plus the rules Spark never excludes; a
+    * lowered plan that needs another rule fails the specs' guard, which
+    * names the rule.
+    */
+  val LoweredRules: Set[String] = Set(
+    "ColumnPruning", "PushDownPredicates", "InferFiltersFromConstraints",
+    "Optimizer$FinishAnalysis", "RemoveNoopOperators",
+    "PushLeftSemiLeftAntiThroughJoin", "PushDownLeftSemiAntiJoin",
+    "CollapseProject", "ConvertToLocalRelation", "PruneFilters",
+    "BooleanSimplification", "ConstantPropagation", "ConstantFolding",
+    "PropagateEmptyRelation", "RemoveRepetitionFromGroupExpressions",
+    "EliminateSorts", "EliminateLimits", "PushProjectionThroughLimitAndOffset",
+    "SimplifyBinaryComparison", "LimitRules$PushLimitOverProjection")
+
+  /** Whether `optimizer` runs `rule` (a full rule name) on a lowered
+    * plan: it is in [[LoweredRules]] or Spark never excludes it.
+    */
+  def runsOnLowered(optimizer: Optimizer)(rule: String): Boolean =
+    LoweredRules(rule.substring(rule.lastIndexOf('.') + 1)) ||
+      optimizer.nonExcludableRules.contains(rule)
+
+  /** Per session optimizer: the comma list of the rules it does not run on
+    * lowered plans (naming a non-excludable one would only make Spark log
+    * a warning per query).
+    */
+  private val excluded = new java.util.WeakHashMap[Optimizer, String]()
+
+  private def excludable(optimizer: Optimizer): String =
+    excluded.synchronized(excluded.computeIfAbsent(optimizer, o =>
+      o.defaultBatches.flatMap(_.rules).map(_.ruleName).distinct
+        .filterNot(runsOnLowered(o)).mkString(",")))
 
   /** One lowering pass. Leaves are read before the operators above them
     * build their expressions, so [[session]] is set by then.

@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import graft.cascades._
 import graft.cascades.JoinStrategy._
 import graft.TestRules.isJoin
-import graft.ops.CascadesExecOps
+import graft.ops.{CascadesExecOps, Tables}
 
 /** Cascades winners EXECUTED — the `planner.rs:29-55` lifecycle edge
   * (optimize in cascades, run on the host engine), pinned structurally:
@@ -1206,16 +1206,88 @@ class CascadesExecSpec extends GraftSuite {
     assert(tables == first)
   }
 
+  // cascades_exec_strategy is built by Catalyst, not lowered
+  private val loweredQueries = CascadesExecOps.sqls.keys.toSeq.sorted
+    .filterNot(_ == "cascades_exec_strategy")
+
   test("every lowered cascades_exec_* winner is resolved Catalyst that " +
       "needs no analysis") {
-    // cascades_exec_strategy is built by Catalyst, not lowered
-    val lowered = CascadesExecOps.sqls.keys.toSeq.sorted
-      .filterNot(_ == "cascades_exec_strategy")
-    assert(lowered.size == 25)
-    lowered.foreach { name =>
+    assert(loweredQueries.size == 25)
+    loweredQueries.foreach { name =>
       withClue(s"$name: ")(
         assertNeedsNoAnalysis(CascadesExecOps.planFor(spark, sfDir, name)._2))
     }
+  }
+
+  test("every lowered cascades_exec_* winner is optimized as the full " +
+      "optimizer would optimize it") {
+    loweredQueries.foreach { name =>
+      withClue(s"$name: ")(
+        assertOptimizedAsFull(CascadesExecOps.planFor(spark, sfDir, name)._2))
+    }
+  }
+
+  /** The optimizer rules `df`'s optimization ran. */
+  private def optimizerRulesRun(df: DataFrame): Set[String] = {
+    val optimizer = df.sparkSession.sessionState.optimizer
+    val names = optimizer.defaultBatches.flatMap(_.rules).map(_.ruleName)
+    df.queryExecution.optimizedPlan
+    df.queryExecution.tracker.rules.keySet.intersect(names.toSet)
+  }
+
+  test("lowering runs the kept optimizer rules under a conf of its own: " +
+      "the session conf is unchanged and a plain query afterwards still " +
+      "runs the full rule set") {
+    val s = spark.newSession()
+    val key = "spark.sql.optimizer.excludedRules"
+    val userExcluded = "org.apache.spark.sql.catalyst.optimizer.CollapseProject"
+    s.conf.set(key, userExcluded)
+    val conf = s.conf.getAll
+    val lowered = CascadesExecOps.planFor(s, sfDir, "cascades_exec_three_way")._2
+    assert(s.conf.getAll == conf)
+    val ran = optimizerRulesRun(lowered)
+    val loweredMayRun = Execution.runsOnLowered(s.sessionState.optimizer) _
+    assert(ran.forall(loweredMayRun), ran.filterNot(loweredMayRun))
+    assert(ran.exists(_.endsWith(".ColumnPruning")))
+    // a user's own exclusion still holds for the lowered plan
+    assert(!ran(userExcluded))
+    val plain = Tables(s, sfDir).nation.filter("n_regionkey > 1")
+      .select("n_name")
+    val full = optimizerRulesRun(plain)
+    assert(full.exists(r => !loweredMayRun(r)), full)
+    assert(full.size > ran.size && !full(userExcluded))
+  }
+
+  test("4 threads lowering winners and a fifth optimizing plain queries " +
+      "on one session each see only their own optimizer conf") {
+    val s = spark.newSession()
+    val catalog = CascadesExecOps.tableCatalog(s, sfDir)
+    val winners = Seq("cascades_exec_three_way", "cascades_exec_semi_join",
+      "cascades_exec_split_agg", "cascades_exec_broadcast_dim")
+      .map(CascadesExecOps.planFor(s, sfDir, _)._1)
+    val fullRules = optimizerRulesRun(Tables(s, sfDir).nation.select("n_name"))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
+    def task(body: => Option[String]) =
+      pool.submit(new java.util.concurrent.Callable[Option[String]] {
+        def call(): Option[String] = body
+      })
+    try {
+      val lowering = winners.map(w => task {
+        (1 to 20).iterator.map { _ =>
+          optimizerRulesRun(Execution.lower(w, catalog))
+            .filterNot(Execution.runsOnLowered(s.sessionState.optimizer))
+        }.find(_.nonEmpty).map(r => s"a lowered plan ran $r")
+      })
+      val plain = task {
+        (1 to 40).iterator.map { i =>
+          optimizerRulesRun(Tables(s, sfDir).nation
+            .filter(s"n_nationkey > $i").select("n_name"))
+        }.find(_ != fullRules).map(r =>
+          s"a plain query ran ${r.size} of ${fullRules.size} rules")
+      }
+      (lowering :+ plain).foreach(t => assert(t.get().isEmpty, t.get()))
+    } finally pool.shutdown()
+    assert(!s.conf.getAll.contains("spark.sql.optimizer.excludedRules"))
   }
 
   test("a winner that cannot lower fails inside Execution.lower, naming " +

@@ -225,6 +225,22 @@ class CascadesPropertySpec extends GraftSuite {
     (plan, TableStats(chainTables.zip(sizes).toMap))
   }
 
+  /** The winner of chain `seed` under every join strategy, required
+    * sorted on the join key of its first join.
+    */
+  private def chainWinner(seed: Int): Option[PlanNode] = {
+    val (plan, st) = genChain(Gen.Parameters.default, Seed(seed.toLong))
+      .getOrElse(fail(s"generator exhausted at seed $seed"))
+    val key = plan.op match {
+      case LogicalJoin(_, cond) => cond.left
+      case op                   => fail(s"chain root is $op")
+    }
+    TestRules.golden(TestRules.fullJoinStrategyRules,
+      costModel = new ClusterCostModel, stats = st, columns = chainCatalog)
+      .optimize(plan, PhysicalPropertySet(
+        order = OrderSpec.SortedBy.asc(Seq(key))))
+  }
+
   test("join enumeration never worsens the optimum") {
     (1 to Trials).foreach { seed =>
       val (plan, st) = genChain(Gen.Parameters.default, Seed(seed.toLong))
@@ -517,10 +533,15 @@ class CascadesPropertySpec extends GraftSuite {
 
   test("generated winners lower to resolved Catalyst that needs no " +
       "analysis, or fail in Execution.lower naming the column") {
-    // every table has the generators' columns; each read is a fresh
-    // relation, as a catalog's reads are
-    val catalog: String => DataFrame =
-      _ => spark.range(3).selectExpr("id AS a", "id * 2 AS b", "id % 2 AS c")
+    // the chain tables own one column each (u_i has x_i); every other
+    // table has the generators' columns; each read is a fresh relation,
+    // as a catalog's reads are
+    val catalog: String => DataFrame = {
+      case t if chainCatalog.contains(t) =>
+        spark.range(3).selectExpr(s"id AS ${chainCatalog(t).head}")
+      case _ =>
+        spark.range(3).selectExpr("id AS a", "id * 2 AS b", "id % 2 AS c")
+    }
     val winners = (1 to Trials).flatMap { seed =>
       val layoutReq = PhysicalPropertySet(
         distribution =
@@ -534,15 +555,19 @@ class CascadesPropertySpec extends GraftSuite {
         .optimize(sample(genPlan(3, withLimit = true), seed.toLong)) ++
         TestRules.golden(TestRules.fullJoinStrategyRules,
           costModel = new ClusterCostModel, stats = stats)
-          .optimize(sample(genLayoutPlan(3), seed.toLong), layoutReq)
+          .optimize(sample(genLayoutPlan(3), seed.toLong), layoutReq) ++
+        chainWinner(seed)
     }
     // a column that both inputs of a join keep, or that a projection
     // below dropped, cannot be named
     val refusal = "column [abc] is (not in|ambiguous in) the input .*"
     val lowered = winners.filter { w =>
       try {
-        withClue(w.explain())(
-          assertNeedsNoAnalysis(Execution.lower(w, catalog)))
+        val df = Execution.lower(w, catalog)
+        withClue(w.explain()) {
+          assertNeedsNoAnalysis(df)
+          assertOptimizedAsFull(df)
+        }
         true
       } catch {
         case e: IllegalArgumentException =>
@@ -552,16 +577,15 @@ class CascadesPropertySpec extends GraftSuite {
     }
     info(s"${lowered.size} of ${winners.size} winners lowered")
     assert(lowered.size >= winners.size / 2)
-    // the lowered ones cover the hash joins of every join type and both
-    // enforcers. Not the merge join: its inputs both keep the join
-    // column, which every generated table names alike, so it never
-    // lowers here (cascades_exec_smj_clustered lowers one in
-    // CascadesExecSpec)
+    // the lowered ones cover the joins of every strategy and join type
+    // and both enforcers; the merge joins come from the chains, whose
+    // join columns are named apart
     val ops = lowered.flatMap(physicalOps).map {
       case j: PhysicalJoin => s"${j.strategy} ${j.joinType}"
       case op              => op.getClass.getSimpleName
     }.toSet
-    val want = Seq("PhysicalExchange", "PhysicalSort", s"$Broadcast Inner") ++
+    val want = Seq("PhysicalExchange", "PhysicalSort", s"$Broadcast Inner",
+      s"$SortMerge Inner") ++
       Seq(JoinType.Inner, JoinType.Left, JoinType.Full)
         .map(t => s"$ShuffledHash $t")
     assert(want.forall(ops), s"not covered: ${want.filterNot(ops)}")

@@ -10,6 +10,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.cascades.Execution
+
 /** Shared local session for specs — one JVM-wide SparkContext; suites that
   * need their own confs build sibling sessions off the same context.
   */
@@ -84,6 +86,38 @@ abstract class GraftSuite extends AnyFunSuite {
       }
       assert(effective.isEmpty, s"effective analyzer rules: $effective\n$plan")
     }
+  }
+
+  /** `df` (a lowered winner's) is optimized as the session's full
+    * optimizer would optimize it: the full rule set over its analysed
+    * plan gives its optimized plan, up to expression IDs. Otherwise the
+    * failure names every rule that changed the plan there but was skipped
+    * for the lowered plan: the rules [[graft.cascades.Execution]] must
+    * add to `LoweredRules`.
+    */
+  protected def assertOptimizedAsFull(df: DataFrame): Unit = {
+    val state = df.sparkSession.sessionState
+    val tracker = new QueryPlanningTracker
+    val full = SQLConf.withExistingConf(state.conf)(state.optimizer
+      .executeAndTrack(df.queryExecution.analyzed.clone(), tracker))
+    val lowered = df.queryExecution.optimizedPlan
+    lazy val skipped = tracker.rules.collect {
+      case (rule, s) if s.numEffectiveInvocations > 0 &&
+        !Execution.runsOnLowered(state.optimizer)(rule) => rule
+    }
+    assert(idsRenumbered(full) == idsRenumbered(lowered),
+      s"effective rules outside Execution.LoweredRules: " +
+        s"${skipped.toSeq.sorted.mkString(", ")}\nfull optimizer:\n$full\n" +
+        s"lowered:\n$lowered")
+  }
+
+  /** `p`'s text with each expression ID replaced by the order of its first
+    * appearance: two plans that differ only in fresh IDs compare equal.
+    */
+  private def idsRenumbered(p: LogicalPlan): String = {
+    val ids = scala.collection.mutable.Map.empty[String, Int]
+    "#(\\d+)".r.replaceAllIn(p.toString,
+      m => "#" + ids.getOrElseUpdate(m.group(1), ids.size))
   }
 
   /** `p` rebuilt node by node, no node flagged as analysed (`clone`
